@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Driver-run benchmark: one JSON line with per-query wall clock at
   * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 runs first (untimed) so
@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * and codegen compilation of each query's generated code.
   *
   * SPARK_GRAFT_MASTER=local-cluster[w,c,memMB] runs the identical surface
-  * across a real process boundary (see graft.core.ExecMaster) — separate
+  * across a real process boundary (see graft.core.Sessions) — separate
   * executor JVMs, real task serialization, real Netty shuffle. Point
   * SPARK_GRAFT_FLOORS at a cluster-specific floor file (or a missing path
   * to disable the storm check) for such runs: the committed FLOORS.json
@@ -18,46 +18,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    // default to the full machine: the CPU-bound queries (dedup candidate
-    // verification, large aggregations) scale near-linearly with cores
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    // One builder for the main run AND the isolated storm re-probe: the
-    // adjudication pass below must measure the same configuration it is
-    // adjudicating, so session construction lives in a function.
-    def buildSession(): SparkSession = {
-      val spark = graft.core.ExecMaster.configure(
-          SparkSession.builder().withExtensions(new graft.plans.GraftExtensions), cpus)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // Local-mode heartbeats ride the same JVM as the work: a GC pause
-        // past spark.network.timeout (120 s default) makes
-        // HeartbeatReceiver declare the in-process executor dead and STOP
-        // the context mid-run (first seen in the 100x soak's 855 M-row
-        // drain; BENCH_r10's 111 s multimodal row shows the same pause
-        // class reaches the bench path). Same setting as tools/Soak — on
-        // a real cluster this is the standard GC-heavy-workload conf.
-        .config("spark.network.timeout", "600s")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      // Bench measures the SCALE shape: approx-by-design queries run their
-      // sketch alone, not sketch + exact-twin ε-gate (the gate is Verify's
-      // harness — see graft.core.ApproxGate).
-      spark.conf.set("graft.approx.exactGate", "false")
-      // Ingest-time layout: the driver's single-row-group files cap every
-      // scan stage at ONE task; serve the bench from a split, value-identical
-      // cached copy instead (see graft.core.ScanLayout — at cluster scale
-      // the rewrite condition never fires). SPARK_GRAFT_AUTOLAYOUT=false
-      // opts out for layout A/B runs.
-      spark.conf.set(graft.core.ScanLayout.EnabledKey,
-        sys.env.getOrElse("SPARK_GRAFT_AUTOLAYOUT", "true"))
-      spark
-    }
-    var spark = buildSession()
+    // Bench measures the SCALE shape: approx-by-design queries run their
+    // sketch alone, not sketch + exact-twin ε-gate (the gate is Verify's
+    // harness — see graft.core.ApproxGate), and scans read ScanLayout's
+    // split, value-identical copy instead of the single-row-group input
+    // files, which cap every scan stage at ONE task (at cluster scale the
+    // rewrite condition never fires). The isolated storm re-probe below
+    // rebuilds the same shape, so it measures the configuration it is
+    // adjudicating.
+    var spark = Sessions.start(Sessions.Scale)
     val benchDir = graft.core.ScanLayout.ensure(spark, sfDir)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -200,17 +169,7 @@ object Bench {
     // reflect the session's parallelism (w*c).
     val floorCpus: Option[Double] = floorsRaw.get("_cpus")
     val floors = floorsRaw.filterNot(_._1.startsWith("_"))
-    val effCpus: Double = {
-      val loc = """local\[(\d+)\]""".r
-      val locStar = """local\[\*\]""".r
-      val lc = """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,.*""".r
-      graft.core.ExecMaster.master(cpus) match {
-        case loc(n) => n.toDouble
-        case locStar() => Runtime.getRuntime.availableProcessors().toDouble
-        case lc(w, c) => w.toDouble * c.toDouble
-        case _ => scala.util.Try(cpus.toDouble).getOrElse(32.0)
-      }
-    }
+    val effCpus: Double = Sessions.effectiveCores(Sessions.master).toDouble
     val cpuScale = floorCpus match {
       case Some(fc) => math.max(1.0, fc / math.max(1.0, effCpus))
       case None => 1.0
@@ -273,7 +232,7 @@ object Bench {
     // into an unbounded tail. Adjudicate the WORST breaches (largest
     // min/threshold ratio) first and cap the count; rows past the cap
     // stay listed under storm_suspected with their raw samples.
-    val isoCap = sys.env.getOrElse("SPARK_GRAFT_ISO_CAP", "6").toInt
+    val isoCap = 6
     val isolated: Seq[Iso] = {
       val suspects = results.filter(_.storm)
         .sortBy(r => -(r.sec / threshold(r.name).getOrElse(Double.MaxValue)))
@@ -282,7 +241,7 @@ object Bench {
       else {
         suspects.map { n =>
           spark.stop()
-          spark = buildSession()
+          spark = Sessions.start(Sessions.Scale)
           warmPages()
           val samples = (1 to 4).map(_ => timeOnce(n)._1)
           Iso(n, samples, threshold(n).exists(samples.min <= _))
@@ -330,7 +289,7 @@ object Bench {
       .map { case (n, ts) => "\"" + n + "\":[" + ts.mkString(",") + "]" }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"adjusted_total":${fmt(adjTotal)},"unit":"sec","queries":$qs,"errors":$errJson,"storm_suspected":$stormJson,"isolated":$isoJson,"resamples":$resampleJson,"unstable":$unstableJson,"stream_trigger_ms":$trigJson,"floors_loaded":${floors.size},"master":"${graft.core.ExecMaster.master(cpus)}","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"adjusted_total":${fmt(adjTotal)},"unit":"sec","queries":$qs,"errors":$errJson,"storm_suspected":$stormJson,"isolated":$isoJson,"resamples":$resampleJson,"unstable":$unstableJson,"stream_trigger_ms":$trigJson,"floors_loaded":${floors.size},"master":"${Sessions.master}","sf":"$sfDir"}"""
     println(line)
     // The driver keeps only a ~3 KB stdout TAIL: the full line above is
     // ~5 KB at 182 queries, so the tail starts mid-line and structured

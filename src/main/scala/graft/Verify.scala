@@ -1,29 +1,36 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.core.Sessions
+
+/** Driver-run correctness dump: each SparkEntry.queries result → parquet
+  * under `<outDir>/<name>`, plus `oracle_sql.json` for the DuckDB
+  * oracle compare (`tools/check_oracle.py <outDir> <sfDir>`).
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [name ...]
+  *
+  * Trailing names (space- or comma-separated) restrict the dump and its
+  * oracle file to those queries — the targeted cross-engine check for
+  * queries under development; no names dumps the whole registry. A
+  * failing query is logged and skipped so one bad query cannot hide the
+  * rest of the surface.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[...] dumps the same surface across
-    // a real process boundary (graft.core.ExecMaster) for cross-engine
-    // verification of serialized execution.
-    val spark = graft.core.ExecMaster.configure(
-        SparkSession.builder().withExtensions(new graft.plans.GraftExtensions), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [name ...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val wanted = args.drop(2).flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => wanted.isEmpty || wanted(n))
+
+    val spark = Sessions.start(Sessions.Verify)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    for (name <- names) {
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -40,7 +47,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => wanted.isEmpty || wanted(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

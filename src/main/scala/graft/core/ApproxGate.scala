@@ -12,10 +12,11 @@ import org.apache.spark.sql.SparkSession
   * run uses the sketch precisely to avoid the holistic aggregate's
   * full-multiset buffers.
   *
-  * Ungated (`graft.approx.exactGate=false`, set by Bench and Soak): the
-  * plan is the sketch ALONE — fixed-memory partial aggregation, the
-  * representative scale shape — so the benchmarked/soaked cost is the
-  * cost a user would actually pay. Verify leaves the gate ON, so every
+  * Ungated (`graft.approx.exactGate=false`, the Scale session shape of
+  * graft.core.Sessions that Bench and Soak run): the plan is the sketch
+  * ALONE — fixed-memory partial aggregation, the representative scale
+  * shape — so the benchmarked/soaked cost is the cost a user would
+  * actually pay. Verify keeps the gate ON, so every
   * execution the correctness gate sees remains ε-asserted in-plan.
   */
 object ApproxGate {

@@ -38,9 +38,10 @@ import org.apache.spark.sql.SparkSession
   * Cache discipline is the VersionedStore one: build into a scratch dir,
   * fingerprint the SOURCE (length + mtime + rows) in a marker written
   * before publish, atomic-rename into place, first writer wins, stale or
-  * half-built entries are tombstoned and rebuilt. Consumers: Bench and
-  * Soak (scale shape). Verify intentionally reads the raw driver files —
-  * the correctness gate must not depend on this layer.
+  * half-built entries are tombstoned and rebuilt. Enabled by the Scale
+  * session shape (graft.core.Sessions); consumers are Bench, FloorProbe
+  * and PlanDump. Verify intentionally reads the raw input files — the
+  * correctness gate must not depend on this layer.
   */
 object ScanLayout {
   val EnabledKey = "graft.scan.autolayout"
@@ -118,8 +119,8 @@ object ScanLayout {
     math.min(effTarget, math.max(byteChunks, rowChunks))
   }
 
-  /** Tolerant parse: the flag is fed verbatim from env vars
-    * (SPARK_GRAFT_AUTOLAYOUT), where "1"/"0"/"on"/"off" are natural —
+  /** Tolerant parse: the flag can be fed verbatim from the environment
+    * (SPARK_GRAFT_CONF), where "1"/"0"/"on"/"off" are natural —
     * String.toBoolean would abort the whole run on any of them. */
   def enabled(spark: SparkSession): Boolean =
     spark.conf.get(EnabledKey, "false").trim.toLowerCase match {

@@ -104,9 +104,8 @@ object Staged {
     * cannot leak into a concurrent query. */
   private def withBuildConf[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val floor = s.conf.get("graft.stage.minPartitionSize", "64k")
     val prev = s.conf.getOption(key)
-    s.conf.set(key, floor)
+    s.conf.set(key, "64k")
     try body
     finally prev match {
       case Some(v) => s.conf.set(key, v)

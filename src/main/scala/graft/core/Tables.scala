@@ -14,8 +14,8 @@ object Tables {
   /** Resolved-relation cache, the catalog behavior every warehouse engine
     * has: `spark.read.parquet` re-lists the path and re-reads footers on
     * EVERY call — measured ~85 ms fixed cost per call even for a 2 KB
-    * table (tools/ReadCostProbe.scala), which across a many-query run
-    * multiplies into tens of seconds of pure re-resolution. The resolved
+    * table, which across a many-query run multiplies into tens of
+    * seconds of pure re-resolution. The resolved
     * DataFrame is cached per (session, path) and REVALIDATED on every hit
     * against a stat-level source fingerprint (size+mtime for a file, dir
     * mtime + child count for a directory — microseconds, vs the ~85 ms
@@ -23,8 +23,7 @@ object Tables {
     * (AnnIndexSpec's regenerated-corpus probe does exactly this) re-lists
     * instead of serving a stale file list. Stopped sessions' entries are
     * purged on every lookup: a rebuilt session (Soak failure isolation)
-    * starts cold and the dead session's plans become collectable. Opt
-    * out per session with graft.catalog.cache=false. */
+    * starts cold and the dead session's plans become collectable. */
   // NOT a WeakHashMap: a cached DataFrame strongly references its own
   // SparkSession, so weak keys would never clear (the value reaches the
   // key — WeakHashMap's documented degenerate case). Dead sessions are
@@ -61,8 +60,6 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    if (!spark.conf.get("graft.catalog.cache", "true").toBoolean)
-      return spark.read.parquet(path)
     relationCache.keys.filter(_.sparkContext.isStopped).foreach(relationCache.remove)
     val perSession = relationCache.getOrElseUpdate(spark,
       scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)])

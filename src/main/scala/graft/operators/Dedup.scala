@@ -674,14 +674,13 @@ object Dedup {
     * estimate for the edge plan (accurate for parquet-backed staged
     * inputs; Long.MaxValue for un-stat'd LogicalRDD leaves, which
     * safely degrades to the parallelism cap): one partition per
-    * ~`graft.cc.edgePartBytes` (default 4 MB), clamped to
-    * [1, defaultParallelism]. Scale-honest by construction — a corpus
-    * big enough to need parallelism gets it back from the bytes term. */
+    * ~4 MB, clamped to [1, defaultParallelism]. Scale-honest by
+    * construction — a corpus big enough to need parallelism gets it back
+    * from the bytes term. */
   private def edgeParts(edges: DataFrame): Int = {
     val s = edges.sparkSession
-    val target = s.conf.get("graft.cc.edgePartBytes", (4L << 20).toString).toLong
     val est = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    val byBytes = (est * 2 / target).min(BigInt(Int.MaxValue)).toLong + 1
+    val byBytes = (est * 2 / (4L << 20)).min(BigInt(Int.MaxValue)).toLong + 1
     math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong, byBytes)).toInt
   }
 
@@ -811,13 +810,10 @@ object Dedup {
   def connectedComponentsAuto(edges: DataFrame,
       ckpt: CheckpointStrategy = CheckpointStrategy.Local,
       minLabelCap: Int = 0): DataFrame = {
-    // cap 0 = read the session conf (A/B-able without recompiling);
-    // the default of 6 was measured at sf0.1: the simhash rep graph
+    // cap 0 = the default of 6, measured at sf0.1: the simhash rep graph
     // converges inside it (see OPTIMIZATION_r12.md), and a deep graph
     // pays 6 one-action rounds before the star fallback
-    val cap =
-      if (minLabelCap > 0) minLabelCap
-      else edges.sparkSession.conf.get("graft.cc.minlabelcap", "6").toInt
+    val cap = if (minLabelCap > 0) minLabelCap else 6
     // jump=true: the capped phase covers distance ~2^cap instead of
     // ~cap, so real corpora converge inside the cap and the star
     // fallback is reserved for genuinely path-like graphs
@@ -1025,11 +1021,6 @@ object Dedup {
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
   def stagedShingles(s: SparkSession, dir: String): DataFrame =
     staged(s, dir)(shingles(docsParallel(s, dir)))
-  /** Prefix index staged like the shingle index: the candidate self-join
-    * references it twice, and re-running two window pipelines per branch
-    * dominated the query's cost. */
-  def stagedPrefixes(s: SparkSession, dir: String, t: Double): DataFrame =
-    staged(s, s"$dir|prefix|$t")(prefixes(stagedShingles(s, dir), t))
   /** Simhash fingerprints staged too: the banded-pair query references
     * the fingerprint table THREE times (band explode + two verify
     * joins), and each reference re-ran the 32-conditional-sum aggregate
@@ -1208,17 +1199,6 @@ object Dedup {
     * dedup_minhash_est — unstaged, every reference re-ran the band
     * self-join + distinct. At cluster scale this is the "write the
     * candidate list before verification" step every LSH pipeline has. */
-  /** Prefix-filtered candidate pairs staged like the LSH candidates:
-    * [[jaccardBySets]] references its candidate set THREE times (the
-    * doc-pruning union twice + the pair join), and unstaged every
-    * reference re-ran the shkey self-join with both PPJoin prunes plus
-    * the pair distinct — measured 7.4 s/pass for a candidate table of a
-    * few hundred rows; staged, the verify runs in the same band as the
-    * LSH path. Cluster analogue: persist the candidate list before
-    * verification, same as the LSH pipeline. */
-  def stagedPrefixCandidates(s: SparkSession, dir: String, t: Double): DataFrame =
-    staged(s, s"$dir|prefixcand|$t")(
-      pairsSharing(stagedPrefixes(s, dir, t), t).distinct())
   def stagedLshCandidates(s: SparkSession, dir: String, b: Int, r: Int): DataFrame =
     staged(s, s"$dir|lshcand|${b}x$r") {
       val bands = lshBandsCfg(stagedMinhashSigs(s, dir), b, r)

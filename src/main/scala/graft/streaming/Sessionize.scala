@@ -2,20 +2,21 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Typed per-key stateful sessionizer — the honest Spark mapping of the
   * reference's generic stateful bolt hook (O14, `util.py:4-10`): arbitrary
   * user code with per-key state surviving across micro-batches.
   *
-  * `flatMapGroupsWithState` keeps one SessionState per user in the state
-  * store; in streaming, EventTimeTimeout + the watermark close idle
-  * sessions. The same function runs on a batch Dataset (each group's full
-  * history arrives in one call — fine for bounded per-key cardinality;
-  * for unbounded keys at 100 TB prefer the declarative session_window
-  * aggregation in graft.operators.EventTime, which spills).
+  * One session fold ([[foldSessions]]) backs two entry points: the
+  * streaming `transformWithState` processor keeps one SessionState per
+  * user in the state store and closes idle sessions on event-time timers;
+  * the batch twin folds each user's full history in one `flatMapGroups`
+  * call (fine for bounded per-key cardinality; for unbounded keys at
+  * 100 TB prefer the declarative session_window aggregation in
+  * graft.operators.EventTime, which spills).
   */
 object Sessionize {
 
@@ -45,45 +46,10 @@ object Sessionize {
     (out.result(), state)
   }
 
-  private def updateFn(userId: Long, events: Iterator[Ev],
-                       state: GroupState[SessionState]): Iterator[Session] = {
-    val sorted = events.toArray.sortBy(_.ts.getTime).iterator
-    val (closed, tail) = foldSessions(userId, sorted, state.getOption)
-    if (state.hasTimedOut) {
-      // watermark passed the gap: flush the open session too
-      val flushed = state.getOption.map(s => Session(userId, new Timestamp(s.start), s.n, s.total))
-      state.remove()
-      (closed ++ flushed).iterator
-    } else {
-      tail match {
-        case Some(s) =>
-          state.update(s)
-          // in streaming, arrange a timeout once the watermark passes
-          // last+gap; in batch (or if the watermark already passed) the
-          // call is unsupported/illegal — the tail flushes elsewhere.
-          try state.setTimeoutTimestamp(s.last + GapMs)
-          catch { case scala.util.control.NonFatal(_) => () }
-        case None => state.remove()
-      }
-      closed.iterator
-    }
-  }
-
-  /** Sessionize a (ts, user_id, value) frame. Works on batch and
-    * streaming Datasets; streaming callers must withWatermark("ts", …)
-    * upstream and use OutputMode.Append. */
-  def sessionize(df: DataFrame): Dataset[Session] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("user_id"), col("ts"), col("value")).as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(updateFn)
-  }
-
   /** Batch sessionizer: same fold, but via flatMapGroups so the open tail
-    * session closes at end-of-input (batch execution never fires
-    * GroupState timeouts — state would silently drop the last session
-    * per user if we reused the streaming path). */
+    * session closes at end-of-input (batch execution fires no event-time
+    * timers, so a stateful path would silently drop the last session per
+    * user). */
   def sessionizeBatchDs(df: DataFrame): Dataset[Session] = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -97,11 +63,10 @@ object Sessionize {
   }
 
   // -------------------------------------------------------------------
-  // transformWithState variant — the same session semantics on Spark
-  // 4.x's arbitrary-state API: a typed ValueState plus EXPLICIT
-  // event-time timers (registerTimer / handleExpiredTimer) instead of
-  // GroupState's setTimeoutTimestamp. The per-batch fold is shared
-  // (foldSessions), so the two APIs cannot drift. Streaming-only, and
+  // Streaming sessionizer on Spark 4.x's arbitrary-state API: a typed
+  // ValueState plus EXPLICIT event-time timers (registerTimer /
+  // handleExpiredTimer). The per-batch fold is shared with the batch
+  // twin (foldSessions), so the two cannot drift. Streaming-only, and
   // requires the RocksDB state store provider (a transformWithState
   // engine restriction).
 

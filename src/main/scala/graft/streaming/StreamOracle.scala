@@ -14,9 +14,9 @@ import graft.core.{Staged, Tables}
   * the equivalent SQL over the original parquet table.
   *
   * This closes the one verification asymmetry the streaming layer had:
-  * the topology twins were stream≡batch-asserted in specs and the
-  * StreamParity artifact (reference `crane_master.py:148-164` micro-batch
-  * loop), but nothing streaming sat behind the cross-engine oracle gate.
+  * the topology twins were stream≡batch-asserted in specs (reference
+  * `crane_master.py:148-164` micro-batch loop), but nothing streaming
+  * sat behind the cross-engine oracle gate.
   * Here the streamed result itself is the registered answer, so the
   * micro-batch planner, the state store (complete-mode running totals,
   * windowed aggregation state, dropDuplicates key state), and the
@@ -62,8 +62,8 @@ object StreamOracle {
 
   /** Micro-batch count for a replay: SCALE-ADAPTIVE instead of the
     * former constant 4. One micro-batch per ~4 MB of source bytes
-    * (`graft.stream.batchBytes`), floor 2 (cross-trigger state carry
-    * must stay exercised — StreamOracleSpec's ≥2-file contract), cap 64
+    * (`BatchBytes`), floor 2 (cross-trigger state carry must stay
+    * exercised — StreamOracleSpec's ≥2-file contract), cap 64
     * (a replay is a bounded oracle run, not a production stream). A
     * constant trigger count is wrong in BOTH directions: at sf0.1 it
     * pays 4 × ~0.8 s of micro-batch machinery (state-store commits,
@@ -82,13 +82,10 @@ object StreamOracle {
     else f.length
   }
 
-  private def batchBytes(s: SparkSession): Long =
-    s.conf.get("graft.stream.batchBytes", (4L << 20).toString).toLong
+  private val BatchBytes: Long = 4L << 20
 
-  private def nBatches(s: SparkSession, srcPath: String): Int = {
-    val target = batchBytes(s)
-    math.max(2L, math.min(64L, (srcBytes(srcPath) + target - 1) / target)).toInt
-  }
+  private def nBatches(srcPath: String): Int =
+    math.max(2L, math.min(64L, (srcBytes(srcPath) + BatchBytes - 1) / BatchBytes)).toInt
 
   /** State-store partition count for a replay, and the conf scope that
     * applies it. Structured Streaming fixes the stateful-operator
@@ -101,16 +98,12 @@ object StreamOracle {
     * derives from source bytes (state volume tracks input here: words /
     * windows / distinct keys), clamped to [2, defaultParallelism] so
     * larger corpora scale the store count back up to the session's full
-    * parallelism; `graft.stream.statePartitions` pins it for
-    * cluster-specific tuning. Restarts are unaffected: a checkpoint
-    * carries its own partition count and Spark restores it from the
-    * offset log. */
-  private def statePartitions(s: SparkSession, srcPath: String): Int =
-    s.conf.getOption("graft.stream.statePartitions").map(_.toInt).getOrElse {
-      val target = batchBytes(s)
-      val n = (srcBytes(srcPath) + target - 1) / target
-      math.max(2L, math.min(s.sparkContext.defaultParallelism.toLong, n)).toInt
-    }
+    * parallelism. Restarts are unaffected: a checkpoint carries its own
+    * partition count and Spark restores it from the offset log. */
+  private def statePartitions(s: SparkSession, srcPath: String): Int = {
+    val n = (srcBytes(srcPath) + BatchBytes - 1) / BatchBytes
+    math.max(2L, math.min(s.sparkContext.defaultParallelism.toLong, n)).toInt
+  }
 
   private def withStateParts[T](s: SparkSession, srcPath: String)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -171,7 +164,7 @@ object StreamOracle {
   private def textDir(s: SparkSession, dir: String): String =
     Staged.materialize(s, s"$dir|streamtext")(d =>
       Tables.documents(s, dir).select("text")
-        .repartition(nBatches(s, s"$dir/documents.parquet"))
+        .repartition(nBatches(s"$dir/documents.parquet"))
         .write.text(s"$d/data")) + "/data"
 
   /** Normalized events as a multi-file parquet dir + the schema the file
@@ -179,7 +172,7 @@ object StreamOracle {
   private def eventsDir(s: SparkSession, dir: String): (String, StructType) = {
     val ev = Tables.events(s, dir)
     val d = Staged.materialize(s, s"$dir|streamevents")(d =>
-      ev.repartition(nBatches(s, s"$dir/events.parquet"))
+      ev.repartition(nBatches(s"$dir/events.parquet"))
         .write.parquet(s"$d/data"))
     (d + "/data", ev.schema)
   }

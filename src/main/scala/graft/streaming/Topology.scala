@@ -52,7 +52,4 @@ object Topology {
   def dumpLines(result: DataFrame, prefix: String = MasterPrefix,
       maxRows: Int = 10000): Seq[String] =
     result.take(maxRows).toSeq.map(r => s"$prefix ${r.get(0)}  ---  ${r.get(1)}")
-
-  def printResult(result: DataFrame, prefix: String = MasterPrefix): Unit =
-    dumpLines(result, prefix).foreach(println)
 }

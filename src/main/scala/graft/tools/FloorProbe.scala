@@ -1,11 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{ScanLayout, Sessions}
 
-/** Dev tool: decompose a query's per-execution latency into
-  * (a) DataFrame construction + analysis + optimization + physical
-  * planning (forcing executedPlan) and (b) distributed execution
-  * (toRdd.foreach). Usage:
+/** Dev tool: print one query's formatted physical plan, then decompose
+  * its per-execution latency into (a) DataFrame construction, (b)
+  * analysis + optimization + physical planning (forcing executedPlan)
+  * and (c) distributed execution (toRdd.foreach, full materialization as
+  * in Bench), with per-stage task counts and wall. Runs under Bench's
+  * session shape, so it probes the benched plan. Usage:
   *   runMain graft.tools.FloorProbe <sfDir> <queryName> [passes]
   */
 object FloorProbe {
@@ -13,32 +15,10 @@ object FloorProbe {
     val rawSfDir = args(0)
     val name = args(1)
     val passes = if (args.length > 2) args(2).toInt else 6
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.ExecMaster.configure(
-        SparkSession.builder().withExtensions(new graft.plans.GraftExtensions), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set(graft.core.ScanLayout.EnabledKey,
-      sys.env.getOrElse("SPARK_GRAFT_AUTOLAYOUT", "false"))
-    for (v <- sys.env.get("SPARK_GRAFT_SPLIT_BYTES"))
-      spark.conf.set(graft.core.ScanLayout.SplitBytesKey, v)
-    for (v <- sys.env.get("SPARK_GRAFT_SPLITS"))
-      spark.conf.set(graft.core.ScanLayout.SplitsKey, v)
-    // Arbitrary session-conf pass-through for A/B probes:
-    // SPARK_GRAFT_CONF="k1=v1,k2=v2" (no escaping — probe keys/values
-    // never contain ',' or '=')
-    for (kvs <- sys.env.get("SPARK_GRAFT_CONF"); kv <- kvs.split(',');
-         Array(k, v) <- Option(kv.split("=", 2)) if kv.nonEmpty)
-      spark.conf.set(k, v)
-    val sfDir = graft.core.ScanLayout.ensure(spark, rawSfDir)
+    val spark = Sessions.start(Sessions.Scale)
+    val sfDir = ScanLayout.ensure(spark, rawSfDir)
     // Per-stage wall + task counts: pins how much of a query's latency is
-    // single-task stages (the one-row-group testdata files cannot split).
+    // single-task stages.
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long, String)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
@@ -51,6 +31,8 @@ object FloorProbe {
       }
     })
     val fn = graft.SparkEntry.queries(name)
+    println(fn(spark, sfDir).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
     (1 to passes).foreach { i =>
       stages.clear()
       val t0 = System.nanoTime()

@@ -14,10 +14,10 @@ package graft.tools
 object IsolationProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val s = Soak.buildSession("4")
+    val s = graft.core.Sessions.start(graft.core.Sessions.Scale)
     s.sparkContext.stop()
     require(s.sparkContext.isStopped, "probe precondition: context stopped")
-    val (s2, rebuilt) = Soak.ensureLive(s, "4")
+    val (s2, rebuilt) = Soak.ensureLive(s)
     require(rebuilt, "ensureLive must report a rebuild for a stopped context")
     require(!s2.sparkContext.isStopped, "rebuilt session must be live")
     val n = graft.SparkEntry.queries("wordcount")(s2, dir).count()

@@ -1,16 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{ScanLayout, Sessions}
 
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
   * the committed plan evidence for optimization rounds (plans/rNN/).
   * Usage:
   *   runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [query ...]
-  * (no query names = every declared query). Runs under the same session
-  * shape as Bench (autolayout on, shuffle partitions = cpus) so the
-  * dumped plans are the benched plans. Iterative operators (CC loops,
-  * power iteration, Lloyd rounds) drive their rounds during DataFrame
-  * CONSTRUCTION; their dump shows the final assembled plan over the
+  * (no query names = every declared query). Runs under Bench's session
+  * shape (Sessions.Scale) so the dumped plans are the benched plans.
+  * Iterative operators (CC loops, power iteration, Lloyd rounds) drive
+  * their rounds during DataFrame CONSTRUCTION; their dump shows the final assembled plan over the
   * loop's checkpointed result — round counts/job structure live in the
   * CC log (`graft.cc.log`) and FloorProbe stage listings instead. */
 object PlanDump {
@@ -18,21 +17,8 @@ object PlanDump {
     val rawSfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.ExecMaster.configure(
-        SparkSession.builder().withExtensions(new graft.plans.GraftExtensions), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("graft.approx.exactGate", "false")
-    spark.conf.set(graft.core.ScanLayout.EnabledKey,
-      sys.env.getOrElse("SPARK_GRAFT_AUTOLAYOUT", "true"))
-    val sfDir = graft.core.ScanLayout.ensure(spark, rawSfDir)
+    val spark = Sessions.start(Sessions.Scale)
+    val sfDir = ScanLayout.ensure(spark, rawSfDir)
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted

@@ -4,6 +4,8 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit, 
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Sessions
+
 /** Scale soak: run the ENTIRE registered query surface against a
   * SoakGen-replicated directory (~10x the largest shipped scale factor)
   * and record per-query status, wall clock, and output cardinality.
@@ -38,79 +40,26 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.Soak [sfDir] [outJsonl] [name ...]
   * (trailing names restrict the soak to those queries — the incremental
   * re-soak path for queries added/changed since the last full run)
-  * Env: SPARK_GRAFT_SOAK_TIMEOUT (sec/query), SPARK_GRAFT_CPUS,
-  * SPARK_GRAFT_SOAK_CONF ("k=v,k=v" extra session confs — e.g. a tiny
-  * graft.stage.budget to induce a failure and prove isolation).
+  * Env: SPARK_GRAFT_SOAK_TIMEOUT (sec/query), plus the session env of
+  * graft.core.Sessions — e.g. SPARK_GRAFT_CONF="graft.stage.budget=<tiny>"
+  * to induce a failure and prove isolation.
   */
 object Soak {
 
-  /** Fresh soak session (also the rebuild path after a dead context). */
-  private[tools] def buildSession(cpus: String): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Heartbeats ride the same JVM as the work in local mode: a
-      // GC/compute pause longer than spark.network.timeout (120 s
-      // default) makes HeartbeatReceiver declare the in-process
-      // executor dead, which STOPS the whole context — observed once
-      // draining an 855 M-row pair output at 100x (a 132 s starvation).
-      // A soak exists to survive exactly that class of pause.
-      .config("spark.network.timeout", "600s")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    // A heartbeat-death stop runs asynchronously; a rebuild racing it
-    // can be handed the half-stopped context (stopped flag up, active
-    // registration not yet cleared) and throws from the session
-    // constructor. Back off until the stop finishes deregistering.
-    var spark: SparkSession = null
-    var waitedMs = 0L
-    while (spark == null) {
-      try spark = builder.getOrCreate()
-      catch {
-        // Only the half-stopped-context race is worth waiting out; any
-        // other IllegalStateException is a real misconfiguration and
-        // must fail fast instead of burning the full 120 s backoff.
-        // Every retry is logged so a stuck rebuild is visible in the
-        // soak's stderr, not silently absorbed.
-        case e: IllegalStateException
-            if waitedMs < 120000 &&
-              Option(e.getMessage).exists(m =>
-                m.contains("stopped") || m.contains("shutdown")) =>
-          System.err.println(
-            s"SOAK: context stop in flight, retrying getOrCreate (waited ${waitedMs}ms): ${e.getMessage}")
-          Thread.sleep(2000); waitedMs += 2000
-          SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      }
-    }
-    spark.sparkContext.setLogLevel("WARN")
-    // Soak measures scale survival of the SCALE shape: approx queries
-    // run their sketch alone (see graft.core.ApproxGate); Verify keeps
-    // the ε-gated form for the correctness gate.
-    spark.conf.set("graft.approx.exactGate", "false")
-    for (kv <- sys.env.getOrElse("SPARK_GRAFT_SOAK_CONF", "").split(',') if kv.contains('='))
-      spark.conf.set(kv.takeWhile(_ != '='), kv.dropWhile(_ != '=').drop(1))
-    spark
-  }
-
-  /** The isolation primitive, factored out for SoakIsolationSpec: a live
-    * session passes through untouched; a stopped context is replaced by
-    * a fresh session so the next query runs against real infrastructure
-    * instead of cascading "stopped SparkContext" errors. */
-  private[tools] def ensureLive(spark: SparkSession, cpus: String): (SparkSession, Boolean) =
-    if (spark.sparkContext.isStopped) (buildSession(cpus), true) else (spark, false)
+  /** The isolation primitive, exercised directly by [[IsolationProbe]]:
+    * a live session passes through untouched; a stopped context is
+    * replaced by a fresh session so the next query runs against real
+    * infrastructure instead of cascading "stopped SparkContext" errors.
+    * Soak measures scale survival of the SCALE shape: approx queries run
+    * their sketch alone (see graft.core.ApproxGate). */
+  private[tools] def ensureLive(spark: SparkSession): (SparkSession, Boolean) =
+    if (spark.sparkContext.isStopped) (Sessions.start(Sessions.Scale), true) else (spark, false)
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "bench_local/soak_sf1"
     val outPath = if (args.length > 1) args(1) else "bench_local/soak_r7.jsonl"
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_TIMEOUT", "600").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var spark = buildSession(cpus)
+    var spark = Sessions.start(Sessions.Scale)
 
     val outFile = new java.io.File(outPath)
     Option(outFile.getParentFile).foreach(_.mkdirs())
@@ -173,7 +122,7 @@ object Soak {
       // record THAT and fall through to the summary — a crashed main
       // loses the artifact's tail, which is worse than a partial run.
       try {
-        val (live, rebuilt) = ensureLive(spark, cpus)
+        val (live, rebuilt) = ensureLive(spark)
         if (rebuilt) {
           spark = live
           rebuilds += 1

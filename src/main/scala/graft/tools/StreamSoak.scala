@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.VersionedStore
@@ -32,19 +31,7 @@ object StreamSoak {
     val soakDir = if (args.length > 0) args(0) else "bench_local/soak_sf1"
     val outPath = if (args.length > 1) args(1) else "bench_local/stream_soak_r7.jsonl"
     val idBase = if (args.length > 2) args(2).toLong else 10000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode heartbeats share the JVM with the work; a GC pause
-      // past spark.network.timeout kills the context (see Soak.scala)
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.start(graft.core.Sessions.Scale)
 
     val work = java.nio.file.Files.createTempDirectory("stream_soak").toString
     val inDir = s"$work/in"; val outBase = s"$work/store"; val ckpt = s"$work/ckpt"

@@ -16,10 +16,10 @@ class SourcesSpec extends SparkSpec {
   test("CSV source with explicit schema matches the text+split parse") {
     val schema = StructType(Seq(
       StructField("name", StringType), StructField("followers", IntegerType)))
-    val csv = spark.read.schema(schema).csv("/root/reference/app/twitter_5k.csv")
+    val csv = spark.read.schema(schema).csv(appCsv("twitter_5k.csv"))
     val viaCsv = Parity.filterCount(csv, "followers", 50.0).collect()(0).getLong(1)
     val viaText = Parity.filterCount(
-      Parity.parseTwitter(spark.read.text("/root/reference/app/twitter_5k.csv")),
+      Parity.parseTwitter(spark.read.text(appCsv("twitter_5k.csv"))),
       "followers", 50.0).collect()(0).getLong(1)
     assert(viaCsv === viaText)
   }
@@ -67,7 +67,7 @@ class SourcesSpec extends SparkSpec {
     // `k --- v` (crane_master.py:166-169)
     import graft.sources.TextSink
     val dir = Files.createTempDirectory("graft-text").toString
-    val counts = Parity.wordCount(spark.read.text("/root/reference/app/wordcount2k.csv"))
+    val counts = Parity.wordCount(spark.read.text(appCsv("wordcount2k.csv")))
     TextSink.write(counts, dir)
     val back = TextSink.readCounts(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

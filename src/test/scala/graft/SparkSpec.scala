@@ -27,4 +27,12 @@ abstract class SparkSpec extends AnyFunSuite {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
   val sf01 = "/root/testdata/sf0.1"
+
+  /** Path of a hand-written stand-in for one of the reference's `app`
+    * CSV inputs, kept under src/test/resources/app (FIXTURES.md §A). */
+  def appCsv(name: String): String = {
+    val url = getClass.getResource(s"/app/$name")
+    require(url != null, s"missing test fixture app/$name")
+    new java.io.File(url.toURI).getPath
+  }
 }

@@ -16,7 +16,7 @@ import graft.streaming.{Sessionize, Streams}
   */
 class StreamingSpec extends SparkSpec {
 
-  /** Copy a reference CSV into a fresh dir (file source wants a directory
+  /** Copy a reference-style CSV fixture into a fresh dir (file source wants a directory
     * it can list) and return (inputDir, checkpointDir). */
   private def stage(file: String): (String, String) = {
     val in = Files.createTempDirectory("graft-stream-in")
@@ -29,7 +29,7 @@ class StreamingSpec extends SparkSpec {
     df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("streaming wordcount ≡ batch wordcount on wordcount2k.csv") {
-    val src = "/root/reference/app/wordcount2k.csv"
+    val src = appCsv("wordcount2k.csv")
     val (in, cp) = stage(src)
     val got = Streams.runToCompletion(spark,
       Streams.wordCountStream(spark, in), "wc_stream", checkpoint = Some(cp))
@@ -38,7 +38,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming pagerank ≡ batch on pagerank_42k.csv") {
-    val src = "/root/reference/app/pagerank_42k.csv"
+    val src = appCsv("pagerank_42k.csv")
     val (in, cp) = stage(src)
     val got = Streams.runToCompletion(spark,
       Streams.pageRankStream(spark, in), "pr_stream", checkpoint = Some(cp))
@@ -50,8 +50,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming twitter filter ≡ batch, incl. empty-survivor file") {
-    for ((f, expected) <- Seq("twitter_1k.csv" -> 0L, "twitter_5k.csv" -> -1L)) {
-      val src = s"/root/reference/app/$f"
+    // twitter_5k.csv: 51, 120, 300, 51 and 13840 pass; 50, 50, 49, 7, 1 do not
+    for ((f, expected) <- Seq("twitter_1k.csv" -> 0L, "twitter_5k.csv" -> 5L)) {
+      val src = appCsv(f)
       val (in, cp) = stage(src)
       val got = Streams.runToCompletion(spark,
         Streams.twitterStream(spark, in), s"tw_stream_${f.takeWhile(_ != '.')}",
@@ -60,7 +61,7 @@ class StreamingSpec extends SparkSpec {
         "followers", 50.0).collect()
       assert(got.length === 1)
       assert(got(0).getLong(1) === want(0).getLong(1))
-      if (expected >= 0) assert(got(0).getLong(1) === expected)
+      assert(got(0).getLong(1) === expected)
     }
   }
 

@@ -14,14 +14,14 @@ class TopologySpec extends SparkSpec {
     // file source needs a directory for streaming: stage the fixture
     val streamDir = Files.createTempDirectory("graft-topo-in")
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/app/wordcount2k.csv"),
+      java.nio.file.Paths.get(appCsv("wordcount2k.csv")),
       streamDir.resolve("part-0.txt"))
     val topo = Topology("word_count")
       .spout(streamDir.toString)
       .bolt(Parity.wordCount(_))
     val batch = topo.run(spark).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val direct = Parity.wordCount(spark.read.text("/root/reference/app/wordcount2k.csv"))
+    val direct = Parity.wordCount(spark.read.text(appCsv("wordcount2k.csv")))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(batch === direct)
 
@@ -36,7 +36,7 @@ class TopologySpec extends SparkSpec {
 
   test("final-result dump matches the reference's `k  ---  v` console format") {
     // crane_master.py:166-169 prints `MASTER - [INFO]:  word  ---  n`
-    val wc = Parity.wordCount(spark.read.text("/root/reference/app/wordcount2k.csv"))
+    val wc = Parity.wordCount(spark.read.text(appCsv("wordcount2k.csv")))
     val lines = Topology.dumpLines(wc.orderBy("word"))
     assert(lines.length === wc.count())
     // \S* not \S+: the wordcount surface keeps EMPTY tokens (the

@@ -31,8 +31,8 @@ Per query this runs, all inside DuckDB except the union-find:
 
 Usage: check_cc_witness.py <outdir> <sfdir> [--only a,b] [--threads N]
                            [--mem 30GB]
-<outdir> is a graft.Verify/VerifyOne dump (parquet per query +
-oracle_sql.json). Only queries whose oracle matches the recursive-CC
+<outdir> is a graft.Verify dump, full or restricted to named queries
+(parquet per query + oracle_sql.json). Only queries whose oracle matches the recursive-CC
 pattern are attempted; others are reported UNSUPPORTED.
 """
 import json, re, sys, glob, time
