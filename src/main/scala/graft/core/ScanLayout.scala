@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
@@ -35,19 +35,19 @@ import org.apache.spark.sql.SparkSession
   * 8-way captures ~all of the scan win at noise-level loss elsewhere —
   * see the full-surface A/B in BASELINE.md (round 10).
   *
-  * Cache discipline is the VersionedStore one: build into a scratch dir,
-  * fingerprint the SOURCE (length + mtime + rows) in a marker written
-  * before publish, atomic-rename into place, first writer wins, stale or
-  * half-built entries are tombstoned and rebuilt. Enabled by the Scale
-  * session shape (graft.core.Sessions); consumers are Bench, FloorProbe
-  * and PlanDump. Verify intentionally reads the raw input files — the
-  * correctness gate must not depend on this layer.
+  * Cache discipline is the VersionedStore one ([[Artifacts.publish]]):
+  * each rewrite carries a fingerprint of its SOURCE (length + mtime +
+  * rows) in a marker written before publish; an entry is complete only
+  * when that marker matches, so stale or half-built entries are
+  * tombstoned and rebuilt. Enabled by the Scale session shape
+  * (graft.core.Sessions); consumers are Bench, FloorProbe and PlanDump.
+  * Verify intentionally reads the raw input files — the correctness
+  * gate must not depend on this layer.
   */
 object ScanLayout {
   val EnabledKey = "graft.scan.autolayout"
   val BaseKey = "graft.scan.cache.base"
-  val SplitsKey = "graft.scan.splits"
-  /** Target bytes per split. Split count is ceil(bytes/splitBytes) capped
+  /** Target bytes per split. Split count is ceil(bytes/SplitBytes) capped
     * at the session's cores — a BYTES-driven policy, not rows: the cost a
     * split recovers is single-threaded decode, which tracks bytes. A
     * measured full-surface A/B (bench_local/bench_r10_layout_{on2,off}
@@ -56,15 +56,14 @@ object ScanLayout {
     * across iterative and multi-stage queries whose every stage re-lists
     * and re-schedules 32 tiny files), so small tables pass through and
     * only tables whose decode is actually expensive get split. */
-  val SplitBytesKey = "graft.scan.splitBytes"
-  val DefaultSplitBytes = 128 * 1024L
-  /** Default cap on splits per table. Probed per query at sf0.1
+  val SplitBytes = 128 * 1024L
+  /** Cap on splits per table at sf0.1 shapes. Probed per query at sf0.1
     * (FloorProbe min-of-6): an 8-way split recovers nearly all of the
     * single-task decode + stage-0 compute win (text_cooccur_pmi 1.32 →
     * 0.46 s, text_bpe_train 1.46 → 0.47 s, q1 0.84 → 0.37 s) while the
     * iterative/multi-stage queries that lost ~+1 s each under a 32-way
     * split stay within noise (+0.0–0.08 s). */
-  val DefaultSplits = 8
+  val SplitCap = 8
   /** Below this many resulting splits a rewrite buys too little decode
     * parallelism to repay its per-file open/schedule overhead. */
   val MinSplits = 4
@@ -89,22 +88,17 @@ object ScanLayout {
     if (heavyRowTables(name)) 13 else 16
 
   /** The split-target policy, extracted pure so the spec can pin it
-    * across scales without building multi-hundred-MB fixtures: explicit
-    * conf wins; otherwise grow the tuned default with the larger of the
-    * bytes term and the per-table-class row term, clamped to the
-    * session's parallelism. */
+    * across scales without building multi-hundred-MB fixtures: grow the
+    * tuned cap with the larger of the bytes term and the per-table-class
+    * row term, clamped to the session's parallelism. */
   private[graft] def splitTarget(name: String, bytes: Long, rows: Long,
-      target: Int, defaultParallelism: Int, confSplits: Option[String]): Long =
-    confSplits match {
-      case Some(v) => math.max(2, v.toInt).toLong
-      case None => math.max(target.toLong,
-        math.min(defaultParallelism.toLong,
-          math.max(bytes >> 20, rows >> rowShift(name))))
-    }
+      target: Int, defaultParallelism: Int): Long =
+    math.max(target.toLong, math.min(defaultParallelism.toLong,
+      math.max(bytes >> 20, rows >> rowShift(name))))
 
   /** The FILE-COUNT cap under the split target, extracted pure for the
     * spec. It must be ROW-AWARE, not purely bytes-based (r12 advice): a
-    * ceil(bytes/splitBytes) cap after [[splitTarget]] re-clips the
+    * ceil(bytes/SplitBytes) cap after [[splitTarget]] re-clips the
     * payload-row term for exactly the case it targets — dictionary
     * compression collapsing a heavy-row table under a few MB on disk
     * (500 K replicated document rows compressed under ~2 MB would cap
@@ -113,8 +107,8 @@ object ScanLayout {
     * starves the other; sf0.1 shapes are unchanged (every shipped
     * table's row chunk count is <= its byte chunk count there). */
   private[graft] def wantedFiles(name: String, bytes: Long, rows: Long,
-      splitBytes: Long, effTarget: Long): Long = {
-    val byteChunks = (bytes + splitBytes - 1) / splitBytes
+      effTarget: Long): Long = {
+    val byteChunks = (bytes + SplitBytes - 1) / SplitBytes
     val rowChunks = (rows + (1L << rowShift(name)) - 1) >> rowShift(name)
     math.min(effTarget, math.max(byteChunks, rowChunks))
   }
@@ -135,8 +129,7 @@ object ScanLayout {
     if (!enabled(spark)) return sfDir
     val src = Paths.get(sfDir)
     if (!Files.isDirectory(src)) return sfDir
-    val target = math.max(2, spark.conf.get(SplitsKey, math.min(DefaultSplits,
-      spark.sparkContext.defaultParallelism).toString).toInt)
+    val target = math.max(2, math.min(SplitCap, spark.sparkContext.defaultParallelism))
     val base = Paths.get(spark.conf.get(BaseKey, "bench_local/scancache"))
     // one cache entry per source dir + split target (a local[4] Verify and
     // a local[32] Bench must not fight over one entry); the readable
@@ -159,7 +152,6 @@ object ScanLayout {
   private def ensureTable(spark: SparkSession, tableSrc: Path, cacheDir: Path,
       name: String, target: Int): Unit = {
     val dst = cacheDir.resolve(s"$name.parquet")
-    val splitBytes = spark.conf.get(SplitBytesKey, DefaultSplitBytes.toString).toLong
     // A DIRECTORY source is NOT automatically parallel: SoakGen's
     // replicated corpora come back from AQE-coalesced writes as a dir
     // holding ONE part file, and until r12 the dir short-circuit linked
@@ -173,15 +165,17 @@ object ScanLayout {
       if (!Files.isDirectory(tableSrc)) Seq(tableSrc)
       else {
         import scala.jdk.CollectionConverters._
-        Files.list(tableSrc).iterator().asScala
+        val ls = Files.list(tableSrc) // must close: holds a directory handle
+        try ls.iterator().asScala
           .filter(p => p.getFileName.toString.startsWith("part-"))
           .toSeq.sortBy(_.getFileName.toString)
+        finally ls.close()
       }
     if (partFiles.isEmpty) { link(tableSrc, dst); return }
     val bytes = partFiles.map(Files.size).sum
     val stats = partFiles.map(footerStats(spark, _))
     val (rowGroups, rows) = (stats.map(_._1).sum, stats.map(_._2).sum)
-    // the 8-way default cap was tuned at sf0.1 (see DefaultSplits); a
+    // the 8-way cap was tuned at sf0.1 (see SplitCap); a
     // TABLE-SIZE escape keeps it from starving genuinely large scaled
     // tables: above ~1 MB/split OR a per-table-class row threshold
     // (see rowShift — 64 K relational rows, 8 K payload rows) the cap
@@ -193,37 +187,25 @@ object ScanLayout {
     // explode stages that the payload row term spreads over all
     // cores). sf0.1 shapes are unchanged by construction (all terms
     // stay at/below the 8-way default there — lineitem 600 K rows / 10
-    // MB → 10 splits either way). An explicit SplitsKey conf remains a
-    // hard override (probe A/Bs pin exact split counts).
+    // MB → 10 splits either way).
     val effTarget = splitTarget(name, bytes, rows, target,
-      spark.sparkContext.defaultParallelism, spark.conf.getOption(SplitsKey))
-    val wanted = wantedFiles(name, bytes, rows, splitBytes, effTarget).toInt
+      spark.sparkContext.defaultParallelism)
+    val wanted = wantedFiles(name, bytes, rows, effTarget).toInt
     if (wanted < MinSplits) { link(tableSrc, dst); return }
     if (partFiles.size >= wanted / 2) { link(tableSrc, dst); return }
     if (rowGroups >= wanted / 2) { link(tableSrc, dst); return }
     val mtime = partFiles.map(Files.getLastModifiedTime(_).toMillis).max
     val fp = s"$bytes:$mtime:$rows:$wanted"
-    if (isFresh(dst, fp)) return
-    // stale symlink or outdated rewrite in the way: tombstone, rebuild
-    tombstone(cacheDir, dst)
-    val scratch = cacheDir.resolve(s".build-$name-${java.util.UUID.randomUUID()}")
     val perFile = math.max(1L, (rows + wanted - 1) / wanted)
-    // single-task write: no shuffle, original row order, one file per
-    // maxRecordsPerFile chunk — the split IS the only change
-    // ANY failure — the write itself, not just the publish move — must
-    // reclaim the scratch dir: an abandoned .build-* with partial part
-    // files would otherwise accumulate across failed sessions forever
-    try {
+    // a stale symlink or outdated rewrite in the way is not fresh, so
+    // publish tombstones it; single-task write: no shuffle, original row
+    // order, one file per maxRecordsPerFile chunk — the split IS the
+    // only change
+    Artifacts.publish(dst, isFresh(_, fp)) { scratch =>
       spark.read.parquet(tableSrc.toString).coalesce(1)
-        .write.mode("overwrite").option("maxRecordsPerFile", perFile)
-        .parquet(scratch.toString)
+        .write.option("maxRecordsPerFile", perFile).parquet(scratch.toString)
       Files.writeString(scratch.resolve(markerName), fp)
-      Files.move(scratch, dst, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      // lost a concurrent publish race — fine iff the winner is fresh
-      case _: java.io.IOException if isFresh(dst, fp) => reclaim(scratch)
-      case e: Throwable => reclaim(scratch); throw e
-    }
+    }: Unit
   }
 
   private val markerName = "_GRAFT_SRC"
@@ -237,8 +219,8 @@ object ScanLayout {
   private def link(src: Path, dst: Path): Unit = {
     val abs = src.toAbsolutePath
     if (Files.isSymbolicLink(dst) && Files.readSymbolicLink(dst) == abs) return
-    tombstone(dst.getParent, dst)
-    // same publish-race discipline as the rewrite path's ATOMIC_MOVE:
+    Artifacts.tombstone(dst): Unit
+    // same first-writer-wins discipline as the rewrite path's publish:
     // two processes ensuring the same entry both pass the checks above,
     // and the createSymbolicLink loser must accept the winner's link
     // rather than kill its run — but only if it points where ours would
@@ -248,22 +230,6 @@ object ScanLayout {
         if (!(Files.isSymbolicLink(dst) && Files.readSymbolicLink(dst) == abs)) throw e
     }
   }
-
-  private def tombstone(cacheDir: Path, dst: Path): Unit = {
-    if (Files.isSymbolicLink(dst)) Files.delete(dst)
-    else if (Files.exists(dst)) {
-      val tomb = cacheDir.resolve(s".deleting-${dst.getFileName}-${System.nanoTime()}")
-      try { Files.move(dst, tomb); reclaim(tomb) }
-      catch { case _: java.nio.file.NoSuchFileException => () }
-    }
-  }
-
-  private def reclaim(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(p =>
-        try Files.deleteIfExists(p) catch { case _: java.io.IOException => () })
-    }
 
   /** (rowGroups, totalRows) straight from the parquet footer — no job. */
   private def footerStats(spark: SparkSession, file: Path): (Int, Long) = {

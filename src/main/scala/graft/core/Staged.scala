@@ -33,15 +33,7 @@ object Staged {
   private val Marker = "_GRAFT_STAGE_OK"
 
   sys.addShutdownHook {
-    allDirs.keys.foreach { d =>
-      try {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(d)
-        if (Files.exists(root))
-          Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      } catch { case _: Throwable => () }
-    }
+    allDirs.keys.foreach(d => Artifacts.deleteRecursively(java.nio.file.Paths.get(d)))
   }
 
   private def complete(d: String): Boolean =

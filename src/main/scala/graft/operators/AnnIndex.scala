@@ -42,11 +42,9 @@ import graft.sources.VersionedStore
   * into the read-only corpus dir; override with the
   * `graft.ann.index.base` session conf. First build is crash- AND
   * race-safe: versions are published by atomic rename
-  * ([[VersionedStore.writeBatchAtomic]]) — two JVMs racing the first
-  * build (Bench and Verify on the same sf dir) each write a private
-  * scratch dir and the first rename wins; overwrite-mode racing could
-  * interleave delete/commit and leave a mix of both jobs' part files
-  * under one _SUCCESS marker.
+  * ([[VersionedStore.writeBatch]]) — two JVMs racing the first build
+  * (Bench and Verify on the same sf dir) each write a private scratch
+  * dir and the first rename wins.
   */
 object AnnIndex {
 
@@ -93,8 +91,8 @@ object AnnIndex {
     // batchId=0 → v=1, published by atomic rename: a crashed half-build
     // (no _SUCCESS) is tombstoned and replaced on the next call; a
     // concurrent complete build wins the rename and this one discards
-    VersionedStore.writeBatchAtomic(assign, s"$base/assign", 0L): Unit
-    VersionedStore.writeBatchAtomic(cents, s"$base/cents", 0L): Unit
+    VersionedStore.writeBatch(assign, s"$base/assign", 0L): Unit
+    VersionedStore.writeBatch(cents, s"$base/cents", 0L): Unit
   }
 
   private def built(base: String): Boolean =

@@ -412,8 +412,8 @@ object Similarity {
     // the "arriving" 20% batch is assigned against the STORED centroids
     // (v1 of the base-slice index — no retraining, per-batch cost ∝
     // batch exactly like ann_ivf_upsert), the merged assignment lands
-    // as v=2 via the idempotent writeBatch (a re-run overwrites its own
-    // version, never appends a duplicate), and the OUTPUT is read back
+    // as v=2 via the idempotent writeBatch (a re-run keeps the complete
+    // v=2, never appends a duplicate), and the OUTPUT is read back
     // from the stored v=2 — the hash check therefore proves the full
     // write→read round trip, not just the in-memory fold. Same oracle
     // as ann_ivf_upsert: stored centroids ≡ freshly-trained ones.
@@ -428,11 +428,9 @@ object Similarity {
       val newAssign = Clustering.assign(newVecs, cents)
         .select(col("vec_id"), col("cell"))
       val v1 = VersionedStore.readVersion(s, s"$base/assign", 1L)
-      // atomic publish: a complete v2 is reused as-is (content is
-      // deterministic), a racing writer loses the rename harmlessly —
-      // overwrite mode here could interleave two JVMs' delete/commit
-      // into a mixed part-file set
-      VersionedStore.writeBatchAtomic(v1.unionByName(newAssign), s"$base/assign", 1L): Unit
+      // a complete v2 is reused as-is (content is deterministic), a
+      // racing writer loses the atomic rename harmlessly
+      VersionedStore.writeBatch(v1.unionByName(newAssign), s"$base/assign", 1L): Unit
       VersionedStore.readVersion(s, s"$base/assign", 2L)
         .crossJoin(broadcast(split)).filter(col("vec_id") >= col("s"))
         .select(col("vec_id"), col("cell").cast("long").as("cell"))

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Artifacts
+
 /** Versioned parquet snapshots — the Spark-native mapping of the
   * reference DFS's `sdfsname-v<N>` file versioning and `get-versions`
   * (reference `dfs/dfs_server.py:280-298,318-346`, SURVEY.md §3.3):
@@ -12,8 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (HDFS/S3), exactly as the survey scoped it.
   *
   * Layout is plain partition-style paths, so at scale a version is a
-  * normal parquet dataset: pruned scans, schema per snapshot,
-  * object-store friendly (no renames of existing data, append-only).
+  * normal parquet dataset: pruned scans, schema per snapshot, no file
+  * of a published version ever rewritten. Every write is built aside and
+  * published by one atomic rename ([[Artifacts.publish]]), so a reader
+  * sees a complete version or none.
   */
 object VersionedStore {
 
@@ -75,67 +79,41 @@ object VersionedStore {
 
   final case class VersionInfo(version: Long, files: Long, bytes: Long)
 
-  /** Write the next version; returns its number (1-based). */
+  /** Write the next version; returns its number (1-based). Fails
+    * loudly if it loses a race: when a concurrent writer publishes the
+    * same number first, this throws and the caller still holds its rows
+    * (a retry lands as the version after). */
   def write(df: DataFrame, base: String): Long = {
     val next = listVersions(base).lastOption.getOrElse(0L) + 1
-    df.write.mode("errorifexists").parquet(s"$base/v=$next")
+    if (!publish(df, base, next))
+      throw new java.nio.file.FileAlreadyExistsException(s"$base/v=$next",
+        null, "version published concurrently; this write was not stored")
     next
   }
 
-  /** Idempotent per-micro-batch write for streaming foreachBatch sinks:
-    * the version number is derived from the batch id, and a replayed
-    * batch (restart between sink write and checkpoint commit) OVERWRITES
-    * its own version instead of appending a duplicate — upgrading
-    * foreachBatch's at-least-once to exactly-once, the same trick as
-    * the reference's replay timer but with deterministic content. */
+  /** Idempotent per-micro-batch write for streaming foreachBatch sinks
+    * and deterministic snapshot builds: the version is derived from the
+    * batch id, and the first COMPLETE write of it is final. A replayed
+    * batch (restart between sink write and checkpoint commit) finds its
+    * version complete and writes nothing — upgrading foreachBatch's
+    * at-least-once to exactly-once, the same trick as the reference's
+    * replay timer but with deterministic content. An incomplete leftover
+    * (crashed writer) is replaced; two writers racing the same version
+    * publish all-or-nothing, never a mix of both jobs' part files. */
   def writeBatch(df: DataFrame, base: String, batchId: Long): Long = {
     // version stays a Long: truncating the batch id to Int would wrap a
     // long-lived stream past Int.MaxValue batches into colliding versions
     val v = batchId + 1
-    df.write.mode("overwrite").parquet(s"$base/v=$v")
+    publish(df, base, v): Unit
     v
   }
 
-  /** Race- and crash-safe variant of [[writeBatch]] for DETERMINISTIC
-    * snapshot content (same inputs ⇒ bit-identical rows, the contract
-    * every graft index build meets): the snapshot is written to a
-    * scratch dir UNDER the store base and atomically RENAMED into
-    * `v=<batchId+1>` — first writer wins. [[writeBatch]]'s overwrite
-    * mode lets two JVMs racing the same version interleave
-    * delete/commit and leave a MIX of both jobs' part files under one
-    * _SUCCESS marker (duplicated rows that isComplete then trusts
-    * forever); a rename publishes all-or-nothing. An already COMPLETE
-    * target is left untouched and the write skipped entirely
-    * (idempotent re-runs are free); an INCOMPLETE leftover (crashed
-    * writer) is tombstoned and replaced. */
-  def writeBatchAtomic(df: DataFrame, base: String, batchId: Long): Long = {
-    val v = batchId + 1
-    if (isComplete(base, v)) return v
-    val scratch = Paths.get(base, s".build-v$v-${java.util.UUID.randomUUID()}")
-    // a failed SNAPSHOT WRITE must reclaim its scratch too, not just a
-    // lost publish race: an abandoned .build-* holds partial corpus-
-    // sized part files under a durable store base, and every failed or
-    // killed build would otherwise accumulate disk across sessions
-    try {
-      df.write.mode("overwrite").parquet(scratch.toString)
-      val target = Paths.get(base, s"v=$v")
-      // a half-written target (no _SUCCESS) blocks the rename: tombstone
-      // it the same way deleteVersion does
-      if (Files.isDirectory(target) && !isComplete(base, v)) {
-        val tomb = Paths.get(base, s".deleting-v$v-${System.nanoTime()}")
-        try { Files.move(target, tomb); reclaim(tomb) }
-        catch { case _: java.nio.file.NoSuchFileException => () }
-      }
-      Files.move(scratch, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      // lost the publish race: fine IFF the winner's version is
-      // complete (content is deterministic); anything else is a real
-      // failure and must surface — after the scratch is reclaimed
-      case _: java.io.IOException if isComplete(base, v) => reclaim(scratch)
-      case e: Throwable => reclaim(scratch); throw e
+  /** [[Artifacts.publish]] of `df` as `v=<version>`; complete = the
+    * committer's _SUCCESS marker. */
+  private def publish(df: DataFrame, base: String, version: Long): Boolean =
+    Artifacts.publish(Paths.get(base, s"v=$version"), _ => isComplete(base, version)) {
+      scratch => df.write.parquet(scratch.toString)
     }
-    v
-  }
 
   /** Latest-wins upsert — the MERGE INTO shape without a table format:
     * incoming rows replace same-key rows of the latest snapshot, all
@@ -177,30 +155,15 @@ object VersionedStore {
   }
 
   /** Remove one version — the `delete` verb of the reference DFS client
-    * (`dfs/dfs_client.py:146-157`). The directory is RENAMED to a
-    * tombstone first (atomic on a real filesystem), then reclaimed:
-    * a concurrent reader listing versions either sees the complete
-    * `v=<N>` directory or none — never a half-deleted snapshot that a
-    * parquet scan would fail on. Returns false if the version did not
-    * exist (idempotent, like re-deleting an sdfs name). */
+    * (`dfs/dfs_client.py:146-157`). The directory is tombstoned
+    * ([[Artifacts.tombstone]]): a concurrent reader listing versions
+    * either sees the complete `v=<N>` directory or none — never a
+    * half-deleted snapshot that a parquet scan would fail on. Returns
+    * false if the version did not exist (idempotent, like re-deleting
+    * an sdfs name). */
   def deleteVersion(base: String, version: Long): Boolean = {
     val dir = Paths.get(base, s"v=$version")
-    if (!Files.isDirectory(dir)) false
-    else {
-      // nanoTime nonce: a crashed earlier delete leaves its tombstone
-      // behind without blocking this one
-      val tomb = Paths.get(base, s".deleting-v$version-${System.nanoTime()}")
-      try {
-        Files.move(dir, tomb) // atomic dir rename: readers see all-or-nothing
-      } catch {
-        // a concurrent delete won the rename between our isDirectory
-        // check and the move — the version is gone, which is exactly
-        // the idempotent "did not exist" outcome this method promises
-        case _: java.nio.file.NoSuchFileException => return false
-      }
-      reclaim(tomb)
-      true
-    }
+    Files.isDirectory(dir) && Artifacts.tombstone(dir)
   }
 
   /** Delete every version — the reference's whole-file delete. */
@@ -218,16 +181,5 @@ object VersionedStore {
     require(keep >= 1, s"keep must be >= 1, got $keep")
     val doomed = listVersions(base).dropRight(keep)
     doomed.filter(deleteVersion(base, _))
-  }
-
-  /** Best-effort recursive reclaim of a tombstoned directory. Files.walk
-    * holds directory handles open until closed — the stream must be
-    * closed explicitly or every delete leaks one. */
-  private def reclaim(root: java.nio.file.Path): Unit = {
-    val stream = Files.walk(root)
-    try {
-      val it = stream.sorted(java.util.Comparator.reverseOrder()).iterator()
-      while (it.hasNext) Files.deleteIfExists(it.next())
-    } finally stream.close()
   }
 }

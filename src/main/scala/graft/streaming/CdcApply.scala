@@ -19,12 +19,12 @@ import graft.sources.VersionedStore
   *
   * Exactly-once via VERSION-PINNED pre-state: batch b reads snapshot
   * version v=b (never "latest") and writes v=b+1 — so a replayed batch
-  * re-reads the same immutable input version, recomputes the identical
-  * fold, and overwrites its own output version. foreachBatch's
+  * re-reads the same immutable input version, and its identical output
+  * version is already published, so nothing is rewritten. foreachBatch's
   * at-least-once becomes idempotent without any transactional sink,
   * and every intermediate snapshot stays readable (time travel per
-  * batch). The seed snapshot lands at v=0 only if v=0 does not exist
-  * yet: a checkpoint restart mid-stream must never rewrite history
+  * batch). The seed snapshot lands at v=0 only if no complete v=0
+  * exists yet: a checkpoint restart mid-stream must never rewrite history
   * (a changed seed would silently fork it, and a crash during the
   * rewrite would leave v=0 half-written under readable later versions).
   */
@@ -60,11 +60,10 @@ object CdcApply {
     // seed v=0 (pre-state of batch 0) exactly once — on restart a
     // COMPLETE v=0 (committer's _SUCCESS marker present) wins and the
     // supplied seed is ignored. A bare v=0 directory without the marker
-    // is a crash mid-first-seed: rewrite it (overwrite mode repairs the
-    // half-written snapshot; nothing downstream can have read it, since
-    // batch 0 only starts after the seed commit).
-    if (!VersionedStore.isComplete(outBase, 0L))
-      VersionedStore.writeBatch(seedState, outBase, -1L): Unit
+    // is a crash mid-first-seed: writeBatch replaces it (nothing
+    // downstream can have read it, since batch 0 only starts after the
+    // seed is published).
+    VersionedStore.writeBatch(seedState, outBase, -1L): Unit
     spark.readStream
       .schema(template.schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

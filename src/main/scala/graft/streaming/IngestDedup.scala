@@ -24,7 +24,7 @@ import graft.sources.VersionedStore
   * corpus×batch all-pairs), and only candidate docs' shingle sets are
   * materialized for the exact-Jaccard verify. Exactly-once: the sink
   * version number derives from the batch id ([[VersionedStore.writeBatch]]
-  * overwrites on replay), upgrading foreachBatch's at-least-once — the
+  * keeps the first complete write on replay), upgrading foreachBatch's at-least-once — the
   * reference's replay timer can double-count (SURVEY.md §2.2.6); this
   * cannot.
   */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Staged, Tables}
+import graft.core.{Artifacts, Staged, Tables}
 
 /** Oracle-registered streaming twins: each query stages its input as a
   * MULTI-FILE directory, replays it through the real Structured
@@ -138,14 +138,6 @@ object StreamOracle {
       java.nio.file.Paths.get(base), "graft-replay-ckpt-")).toOption
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => try java.nio.file.Files.deleteIfExists(f)
-        catch { case _: java.io.IOException => () })
-    }
-
   /** [[Streams.runToCompletion]] with a replay-owned checkpoint that is
     * reclaimed the moment the bounded run drains (the memory sink is
     * driver-resident — nothing reads the checkpoint after termination). */
@@ -153,7 +145,7 @@ object StreamOracle {
                         mode: String = "complete"): DataFrame = {
     val ckpt = replayCkpt(s)
     try Streams.runToCompletion(s, df, sink, mode, ckpt.map(_.toString))
-    finally ckpt.foreach(deleteRecursively)
+    finally ckpt.foreach(Artifacts.deleteRecursively)
   }
 
   /** documents.text as a multi-file text dir (one line per doc — the

@@ -107,6 +107,6 @@ class AnnIndexSpec extends SparkSpec {
     val r2 = run("ann_ivf_persisted_upsert", spark.newSession())
     assert(r2 == r1)
     assert(VersionedStore.listVersions(s"$base/assign") == Seq(1L, 2L),
-      "a replayed upsert overwrites its own version, never appends v3")
+      "a replayed upsert keeps its complete version, never appends v3")
   }
 }

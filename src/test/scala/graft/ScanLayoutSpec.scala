@@ -18,21 +18,26 @@ class ScanLayoutSpec extends SparkSpec {
   private def freshBase(): String =
     Files.createTempDirectory("graft-scancache-test").toString
 
-  private def withLayout[A](base: String, splits: Int)(f: => A): A = {
+  private def withLayout[A](base: String)(f: => A): A = {
     spark.conf.set(ScanLayout.EnabledKey, "true")
     spark.conf.set(ScanLayout.BaseKey, base)
-    spark.conf.set(ScanLayout.SplitsKey, splits.toString)
-    // sf0.01 lineitem is ~1 MB — size the per-split bytes so the policy
-    // wants exactly `splits` pieces of it while small tables pass through
-    spark.conf.set(ScanLayout.SplitBytesKey,
-      (Files.size(Paths.get(s"$sf001/lineitem.parquet")) / splits + 1).toString)
     try f
     finally {
       spark.conf.set(ScanLayout.EnabledKey, "false")
       spark.conf.unset(ScanLayout.BaseKey)
-      spark.conf.unset(ScanLayout.SplitsKey)
-      spark.conf.unset(ScanLayout.SplitBytesKey)
     }
+  }
+
+  /** The file count the default policy wants for a single-file table in
+    * this session (local[4]): sf0.01 lineitem is ~1 MB, so the byte term
+    * asks for more pieces than the session's cores and the cap wins. */
+  private def policyFiles(name: String, file: String): Long = {
+    val bytes = Files.size(Paths.get(file))
+    val rows = spark.read.parquet(file).count()
+    val cores = spark.sparkContext.defaultParallelism
+    val target = math.max(2, math.min(ScanLayout.SplitCap, cores))
+    ScanLayout.wantedFiles(name, bytes, rows,
+      ScanLayout.splitTarget(name, bytes, rows, target, cores))
   }
 
   test("disabled: ensure is identity") {
@@ -42,13 +47,15 @@ class ScanLayoutSpec extends SparkSpec {
 
   test("rewrite splits an under-parallel table into ~target files with identical rows in order") {
     val base = freshBase()
-    withLayout(base, 8) {
+    withLayout(base) {
       val dir = ScanLayout.ensure(spark, sf001)
       assert(dir != sf001)
       val li = Paths.get(dir, "lineitem.parquet")
       assert(Files.isDirectory(li) && !Files.isSymbolicLink(li))
       val parts = li.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(parts.length >= 7 && parts.length <= 9, s"got ${parts.length} files")
+      val wanted = policyFiles("lineitem", s"$sf001/lineitem.parquet")
+      assert(wanted >= ScanLayout.MinSplits, s"policy wants $wanted files: no rewrite")
+      assert(parts.length == wanted, s"got ${parts.length} files, policy wants $wanted")
       // value-identical: full-row sorted hash matches the source
       def fingerprint(path: String): Long = {
         val df = spark.read.parquet(path)
@@ -70,7 +77,7 @@ class ScanLayoutSpec extends SparkSpec {
 
   test("small tables pass through as symlinks to the source file") {
     val base = freshBase()
-    withLayout(base, 8) {
+    withLayout(base) {
       val dir = ScanLayout.ensure(spark, sf001)
       val region = Paths.get(dir, "region.parquet")
       assert(Files.isSymbolicLink(region))
@@ -81,7 +88,7 @@ class ScanLayoutSpec extends SparkSpec {
 
   test("second ensure is a cache hit: no rebuild (dir mtime unchanged)") {
     val base = freshBase()
-    withLayout(base, 8) {
+    withLayout(base) {
       val dir = ScanLayout.ensure(spark, sf001)
       val li = Paths.get(dir, "lineitem.parquet")
       val m1 = Files.getLastModifiedTime(li)
@@ -96,7 +103,7 @@ class ScanLayoutSpec extends SparkSpec {
     // a private copy of the source we can touch
     val src = Files.createTempDirectory("graft-scansrc").toString
     Files.copy(Paths.get(sf001, "lineitem.parquet"), Paths.get(src, "lineitem.parquet"))
-    withLayout(base, 8) {
+    withLayout(base) {
       val dir = ScanLayout.ensure(spark, src)
       val li = Paths.get(dir, "lineitem.parquet")
       assert(Files.isDirectory(li))
@@ -116,7 +123,7 @@ class ScanLayoutSpec extends SparkSpec {
   test("split target: payload row term grows documents/embeddings with scale, relational shapes unchanged") {
     def t(name: String, bytes: Long, rows: Long): Long =
       ScanLayout.splitTarget(name, bytes, rows, target = 8,
-        defaultParallelism = 32, confSplits = None)
+        defaultParallelism = 32)
     // sf0.1 shapes unchanged by construction (measured sizes):
     assert(t("documents", 600L << 10, 5000L) === 8L)      // 0.6 MB / 5 K docs
     assert(t("embeddings", 800L << 10, 2000L) === 8L)     // 0.8 MB / 2 K vecs
@@ -131,12 +138,9 @@ class ScanLayoutSpec extends SparkSpec {
     assert(t("lineitem", 870L << 20, 60000000L) === 32L)  // bytes term, as before
     // relational rows keep the 64 K divisor: same row count, no payload
     assert(t("orders", 2600L << 10, 500000L) === 8L)
-    // explicit conf stays a hard override
-    assert(ScanLayout.splitTarget("documents", 4900L << 10, 500000L,
-      8, 32, Some("4")) === 4L)
     // parallelism clamp
     assert(ScanLayout.splitTarget("documents", 4900L << 10, 500000L,
-      8, 16, None) === 16L)
+      8, 16) === 16L)
   }
 
   test("file-count cap is row-aware: dictionary-compressed payload tables keep the row term") {
@@ -144,28 +148,30 @@ class ScanLayoutSpec extends SparkSpec {
     // 500 K document rows compressed to 2 MB on disk: the bytes-only cap
     // (ceil(2 MB / 128 KB) = 16) used to clip the row term's 32 splits
     assert(ScanLayout.wantedFiles("documents", 2048 * kb, 500000L,
-      splitBytes = 128 * kb, effTarget = 32L) === 32L)
+      effTarget = 32L) === 32L)
     // bytes term still caps when it is the larger one (plain relational)
     assert(ScanLayout.wantedFiles("lineitem", 10L << 20, 600000L,
-      splitBytes = 128 * kb, effTarget = 10L) === 10L)
+      effTarget = 10L) === 10L)
     // sf0.1 shapes unchanged: tiny tables stay below MinSplits either way
     assert(ScanLayout.wantedFiles("documents", 600 * kb, 5000L,
-      splitBytes = 128 * kb, effTarget = 8L) === 5L)
+      effTarget = 8L) === 5L)
     assert(ScanLayout.wantedFiles("embeddings", 800 * kb, 2000L,
-      splitBytes = 128 * kb, effTarget = 8L) === 7L)
+      effTarget = 8L) === 7L)
   }
 
   test("multi-file source dirs (the SoakGen shape) pass through as symlinks") {
     val base = freshBase()
     val src = Files.createTempDirectory("graft-multisrc").toString
-    spark.read.parquet(s"$sf001/orders.parquet").repartition(4)
-      .write.mode("overwrite").parquet(s"$src/orders.parquet")
-    withLayout(base, 8) {
+    // lineitem: as one file the policy rewrites it (see the rewrite
+    // test), so only its part-file count can make it pass through
+    spark.read.parquet(s"$sf001/lineitem.parquet").repartition(4)
+      .write.mode("overwrite").parquet(s"$src/lineitem.parquet")
+    withLayout(base) {
       val dir = ScanLayout.ensure(spark, src)
-      val o = Paths.get(dir, "orders.parquet")
+      val o = Paths.get(dir, "lineitem.parquet")
       assert(Files.isSymbolicLink(o), "already-parallel dir should not be rewritten")
       assert(spark.read.parquet(o.toString).count() ==
-        spark.read.parquet(s"$sf001/orders.parquet").count())
+        spark.read.parquet(s"$sf001/lineitem.parquet").count())
     }
   }
 }

@@ -169,7 +169,7 @@ class TopologySpec extends SparkSpec {
       s"streamed pairs ${streamed.keySet} != batch pairs ${batch.keySet}")
 
     // exactly-once: re-running from the same checkpoint with no new files
-    // adds nothing, and a REPLAYED batch overwrites its own version
+    // adds nothing, and a REPLAYED batch keeps its complete version
     // instead of appending (writeBatch idempotence)
     runOnce()
     assert(VersionedStore.listVersions(base).size === 2, "no reprocessing on resume")
@@ -178,7 +178,7 @@ class TopologySpec extends SparkSpec {
     val replayed = IngestDedup.pairsVsCorpus(sh, bands,
       spark.read.parquet(srcDir.resolve("batch0.parquet").toString))
     VersionedStore.writeBatch(replayed, base, 0L): Unit
-    assert(VersionedStore.listVersions(base).size === 2, "replay overwrites, never appends")
+    assert(VersionedStore.listVersions(base).size === 2, "replay keeps its complete version, never appends")
     assert(pairsOf(VersionedStore.readVersions(spark, base, 2)
       .select("corpus_doc", "new_doc", "jaccard")) === streamed,
       "replayed batch content identical")

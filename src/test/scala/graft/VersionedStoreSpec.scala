@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -127,5 +127,89 @@ class VersionedStoreSpec extends SparkSpec {
     assert(listing(1).files === 2L)
     assert(listing.forall(_.bytes > 0L))
     assert(VersionedStore.ls(s"$base-nonexistent").isEmpty)
+  }
+
+  private def entries(base: String): Seq[String] =
+    new java.io.File(base).list().toSeq.sorted
+
+  private def fileMtimes(dir: String): Map[String, Long] = {
+    val st = Files.walk(Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      st.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+    } finally st.close()
+  }
+
+  test("publish: a replayed writeBatch leaves a complete version's files and rows unchanged") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-vs-replay").toString
+    assert(VersionedStore.writeBatch(Seq(1, 2, 3).toDF("x"), base, 0L) === 1L)
+    val before = fileMtimes(s"$base/v=1")
+    // the replay carries different rows, so any rewrite would show
+    assert(VersionedStore.writeBatch(Seq(9).toDF("x"), base, 0L) === 1L)
+    assert(fileMtimes(s"$base/v=1") === before)
+    assert(VersionedStore.readVersion(spark, base, 1L).as[Int].collect().sorted.toSeq ===
+      Seq(1, 2, 3))
+    assert(entries(base) === Seq("v=1"))
+  }
+
+  test("publish: a leftover v=N without _SUCCESS is replaced") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-vs-leftover").toString
+    // a crashed writer's version: a partial part file and no marker
+    val leftover = Paths.get(base, "v=1")
+    Files.createDirectories(leftover)
+    Files.writeString(leftover.resolve("part-00000-crashed.parquet"), "partial")
+    assert(!VersionedStore.isComplete(base, 1L))
+    assert(VersionedStore.writeBatch(Seq(4, 5).toDF("x"), base, 0L) === 1L)
+    assert(VersionedStore.isComplete(base, 1L))
+    assert(!Files.exists(leftover.resolve("part-00000-crashed.parquet")))
+    assert(VersionedStore.readVersion(spark, base, 1L).as[Int].collect().sorted.toSeq ===
+      Seq(4, 5))
+    assert(entries(base) === Seq("v=1"))
+  }
+
+  test("publish: a failing build leaves no .build-* or .deleting-* under the base") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-vs-fail").toString
+    VersionedStore.writeBatch(Seq(1).toDF("x"), base, 0L)
+    // an incomplete leftover where the failing batch would publish
+    Files.createDirectories(Paths.get(base, "v=2"))
+    val bad = spark.range(100).select(when(col("id") < 50, col("id"))
+      .otherwise(raise_error(lit("induced build failure")).cast("long")).as("x"))
+    intercept[Exception](VersionedStore.writeBatch(bad, base, 1L))
+    intercept[Exception](VersionedStore.write(bad, base))
+    assert(entries(base) === Seq("v=1", "v=2"), "scratch or tombstone left behind")
+    assert(VersionedStore.readVersion(spark, base, 1L).as[Int].collect().toSeq === Seq(1))
+  }
+
+  test("publish: write whose next version is already published throws and does not drop rows") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-vs-race").toString
+    // a rival's complete version, built aside; evaluating the first row
+    // of this write moves it into v=1 — a concurrent writer publishing
+    // between this write's version listing and its own publish
+    val rival = Files.createTempDirectory("graft-vs-rival").resolve("v").toString
+    Seq(7).toDF("x").write.parquet(rival)
+    val target = Paths.get(base, "v=1").toString
+    val rivalPublishes = udf { (x: Int) =>
+      VersionedStoreSpec.moveIfPresent(rival, target); x }.asNondeterministic()
+    val mine = Seq(1, 2, 3).toDF("x").coalesce(1).select(rivalPublishes(col("x")).as("x"))
+    intercept[java.nio.file.FileAlreadyExistsException](VersionedStore.write(mine, base))
+    assert(VersionedStore.listVersions(base) === Seq(1L))
+    assert(VersionedStore.readVersion(spark, base, 1L).as[Int].collect().toSeq === Seq(7))
+    assert(entries(base) === Seq("v=1"), "the losing write's scratch was not reclaimed")
+    // the loss was loud, so the caller still holds its rows: a retry
+    // lands all of them as the next version
+    assert(VersionedStore.write(mine, base) === 2L)
+    assert(VersionedStore.readVersion(spark, base, 2L).as[Int].collect().sorted.toSeq ===
+      Seq(1, 2, 3))
+  }
+}
+
+object VersionedStoreSpec {
+  def moveIfPresent(from: String, to: String): Unit = synchronized {
+    if (Files.exists(Paths.get(from))) Files.move(Paths.get(from), Paths.get(to)): Unit
   }
 }
