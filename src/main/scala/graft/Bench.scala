@@ -1,323 +1,241 @@
 package graft
 
-import graft.core.Sessions
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors, TimeUnit, TimeoutException}
 
-/** Driver-run benchmark: one JSON line with per-query wall clock at
-  * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 runs first (untimed) so
-  * the timed pass measures steady-state executor throughput, not JVM JIT
-  * and codegen compilation of each query's generated code.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.util.LongAccumulator
+
+import graft.core.{ScanLayout, Sessions}
+
+/** The one runner for the batch query surface.
   *
-  * SPARK_GRAFT_MASTER=local-cluster[w,c,memMB] runs the identical surface
-  * across a real process boundary (see graft.core.Sessions) — separate
-  * executor JVMs, real task serialization, real Netty shuffle. Point
-  * SPARK_GRAFT_FLOORS at a cluster-specific floor file (or a missing path
-  * to disable the storm check) for such runs: the committed FLOORS.json
-  * records in-process local[32] minima and would flag every row.
+  *   runMain graft.Bench [sfDir] [out.jsonl] [passes] [name ...]
+  *
+  * Defaults: the sf0.1 testdata directory, `bench_local/bench_<epoch>.jsonl`
+  * and 5 passes. Trailing names (space- or comma-separated) restrict the
+  * run; an unknown name is rejected before a session starts. A scale soak
+  * is `graft.Bench <soakDir> <out> 1`.
+  *
+  * Queries run one at a time, each for `passes` back-to-back passes on a
+  * worker thread under its own job groups, with a [[TimeoutSec]] budget
+  * per pass enforced by cancelling those groups. Pass 1 is first use: it
+  * pays the staged-artifact builds the query is the first to need, counts
+  * the output rows, and writes the formatted physical plan to
+  * `<out>.plans/<name>.txt` (after planning, outside the timed spans).
+  * Every pass drains `queryExecution.toRdd` in full: under `count()`
+  * Catalyst would prune every column no aggregate reads, and a
+  * projection-only query would time a bare row-count scan.
+  *
+  * One JSONL row per query is flushed as it completes (see [[Row.json]]),
+  * so a crash keeps every finished row. A query that stops the context
+  * (an executor-thread OOM) costs one failure row: the session is rebuilt
+  * before the next query. At the end one compact summary line goes to
+  * stdout ([[summary]]).
+  *
+  * Runs the Scale session shape over ScanLayout's split copy of `sfDir`.
   */
 object Bench {
+  val DefaultSfDir = "/root/testdata/sf0.1"
+  val DefaultPasses = 5
+  /** Budget for one pass of one query. */
+  val TimeoutSec = 600L
+  /** Error messages are cut to this many characters before escaping. */
+  val ErrChars = 300
+
+  /** One pass: DataFrame construction, planning and execution seconds;
+    * the Spark jobs construction ran eagerly; stages and tasks over the
+    * whole pass. Jobs a streaming query runs on its own thread carry the
+    * stream's job group and are not counted. */
+  case class Pass(buildS: Double, planS: Double, execS: Double,
+                  buildJobs: Int, stages: Int, tasks: Int) {
+    def totalS: Double = buildS + planS + execS
+  }
+
+  case class Quartiles(q1: Double, median: Double, q3: Double)
+
+  /** The linear-interpolation quantile of perfbench's `Stats.quantile`. */
+  def quantile(xs: Seq[Double], q: Double): Double = {
+    require(xs.nonEmpty, "quantile of an empty sample")
+    val s = xs.sorted
+    val pos = q * (s.size - 1)
+    val lo = math.floor(pos).toInt
+    val hi = math.ceil(pos).toInt
+    s(lo) + (s(hi) - s(lo)) * (pos - lo)
+  }
+
+  /** One query's result. `passes` holds the passes that completed;
+    * `triggerMs` the per-trigger times of its last streaming run. */
+  case class Row(name: String, status: String, rows: Long, passes: Seq[Pass],
+                 triggerMs: Seq[Long], err: String) {
+    def ok: Boolean = status == "ok"
+    def firstUseS: Option[Double] = passes.headOption.map(_.totalS)
+    /** Over passes 2..N of a query that succeeded; None with one pass. */
+    def steady: Option[Quartiles] = {
+      val xs = passes.drop(1).map(_.totalS)
+      if (!ok || xs.isEmpty) None
+      else Some(Quartiles(quantile(xs, 0.25), quantile(xs, 0.5), quantile(xs, 0.75)))
+    }
+
+    def json: String = {
+      val passJson = passes.map(p =>
+        s"""{"build_s":${fmt(p.buildS)},"plan_s":${fmt(p.planS)},"exec_s":${fmt(p.execS)},""" +
+          s""""build_jobs":${p.buildJobs},"stages":${p.stages},"tasks":${p.tasks}}""")
+      val stats = steady.map(s =>
+        s""","median_s":${fmt(s.median)},"q1_s":${fmt(s.q1)},"q3_s":${fmt(s.q3)}""").getOrElse("")
+      s"""{"q":${SparkEntry.jsonString(name)},"status":"$status","rows":$rows,""" +
+        s""""first_use_s":${firstUseS.map(fmt).getOrElse("null")}$stats,""" +
+        s""""passes":${passJson.mkString("[", ",", "]")},"trigger_ms":${triggerMs.mkString("[", ",", "]")},""" +
+        s""""err":${SparkEntry.jsonString(err.take(ErrChars))}}"""
+    }
+  }
+
+  /** 3 decimals: sub-millisecond precision is noise. Locale.ROOT, because
+    * a comma-decimal default locale would emit invalid JSON. */
+  def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The stdout line: the sum of steady medians (null when no query has a
+    * steady pass), the first-use total over successful queries, the failed
+    * and timed-out queries, the 15 slowest rows and the path of the full
+    * file. Small enough to survive a tail-truncated capture of stdout. */
+  def summary(rows: Seq[Row], outPath: String, master: String, sfDir: String,
+              rebuilds: Int): String = {
+    val ok = rows.filter(_.ok)
+    val medians = ok.flatMap(_.steady.map(_.median))
+    val value = if (medians.isEmpty) "null" else fmt(medians.sum)
+    val errors = rows.filterNot(_.ok).map(r => SparkEntry.jsonString(r.name))
+    val slowest = ok.flatMap(r => r.steady.map(_.median).orElse(r.firstUseS).map(r.name -> _))
+      .sortBy(-_._2).take(15)
+      .map { case (n, s) => s"${SparkEntry.jsonString(n)}:${fmt(s)}" }
+    s"""{"metric":"total","value":$value,"unit":"sec","first_use_total":${fmt(ok.flatMap(_.firstUseS).sum)},""" +
+      s""""n":${rows.size},"n_err":${errors.size},"errors":${errors.mkString("[", ",", "]")},""" +
+      s""""slowest":${slowest.mkString("{", ",", "}")},"session_rebuilds":$rebuilds,""" +
+      s""""full":${SparkEntry.jsonString(outPath)},"master":${SparkEntry.jsonString(master)},""" +
+      s""""sf":${SparkEntry.jsonString(sfDir)}}"""
+  }
+
+  /** Jobs, stages and tasks started under each job group. Job groups ride
+    * the job and stage events, so a count lands in the group that
+    * submitted it however late the listener bus delivers the event. */
+  private final class GroupCounts extends SparkListener {
+    private val counts = new ConcurrentHashMap[String, Array[Int]]()
+    private def add(props: java.util.Properties, jobs: Int, stages: Int, tasks: Int): Unit =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+        val c = counts.computeIfAbsent(g, _ => new Array[Int](3))
+        c.synchronized { c(0) += jobs; c(1) += stages; c(2) += tasks }
+      }
+    override def onJobStart(e: SparkListenerJobStart): Unit = add(e.properties, 1, 0, 0)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      add(e.properties, 0, 1, e.stageInfo.numTasks)
+    /** (jobs, stages, tasks) of `group`, forgetting it. */
+    def take(group: String): (Int, Int, Int) =
+      Option(counts.remove(group)).map(c => c.synchronized((c(0), c(1), c(2)))).getOrElse((0, 0, 0))
+  }
+
+  private def groups(name: String, pass: Int): (String, String) =
+    (s"bench:$name:$pass:build", s"bench:$name:$pass:run")
+
+  /** One pass of `name`, on the calling thread. Pass 1 counts rows into
+    * `acc` and writes the plan to `planFile`. */
+  private def runPass(spark: SparkSession, dir: String, name: String, pass: Int,
+                      acc: LongAccumulator, planFile: String, counts: GroupCounts): Pass = {
+    val sc = spark.sparkContext
+    val (buildGroup, runGroup) = groups(name, pass)
+    // job groups are thread-local: set them on the thread that runs the jobs
+    sc.setJobGroup(buildGroup, name, interruptOnCancel = true)
+    val t0 = System.nanoTime()
+    val qe = SparkEntry.queries(name)(spark, dir).queryExecution
+    val t1 = System.nanoTime()
+    sc.setJobGroup(runGroup, name, interruptOnCancel = true)
+    qe.executedPlan
+    val t2 = System.nanoTime()
+    if (pass == 1) Files.writeString(Paths.get(planFile), qe.explainString(FormattedMode))
+    val t3 = System.nanoTime()
+    if (pass == 1) qe.toRdd.foreach(_ => acc.add(1L)) else qe.toRdd.foreach(_ => ())
+    val t4 = System.nanoTime()
+    sc.clearJobGroup()
+    org.apache.spark.sql.graft.PlanBridge.drainListenerBus(sc)
+    val (buildJobs, buildStages, buildTasks) = counts.take(buildGroup)
+    val (_, runStages, runTasks) = counts.take(runGroup)
+    Pass((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t4 - t3) / 1e9,
+      buildJobs, buildStages + runStages, buildTasks + runTasks)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    // Bench measures the SCALE shape: approx-by-design queries run their
-    // sketch alone, not sketch + exact-twin ε-gate (the gate is Verify's
-    // harness — see graft.core.ApproxGate), and scans read ScanLayout's
-    // split, value-identical copy instead of the single-row-group input
-    // files, which cap every scan stage at ONE task (at cluster scale the
-    // rewrite condition never fires). The isolated storm re-probe below
-    // rebuilds the same shape, so it measures the configuration it is
-    // adjudicating.
+    val sfDir = args.lift(0).getOrElse(DefaultSfDir)
+    val outPath = args.lift(1).getOrElse(s"bench_local/bench_${System.currentTimeMillis() / 1000}.jsonl")
+    val nPasses = args.lift(2).map(_.toInt).getOrElse(DefaultPasses)
+    require(nPasses >= 1, s"passes must be at least 1, got $nPasses")
+    val names = SparkEntry.select(args.drop(3).toSeq)
+
+    val planDir = Files.createDirectories(Paths.get(s"$outPath.plans"))
+    val log = new java.io.PrintWriter(Files.newBufferedWriter(Paths.get(outPath)), true)
     var spark = Sessions.start(Sessions.Scale)
-    val benchDir = graft.core.ScanLayout.ensure(spark, sfDir)
-
-    val names = SparkEntry.queries.keys.toSeq.sorted
-
-    // Small-scale warmup: run EVERY query once at sf0.001, untimed.
-    // Through round 11 only the flagship query warmed up and the first
-    // TIMED pass of each query carried its JIT/codegen compilation —
-    // usually hidden by min-of-2, but a heavy query whose generated
-    // kernels need 2+ executions to go JIT-hot could record BOTH timed
-    // passes cold (r12 baseline: dedup_ngram_jaccard_prefix benched
-    // 6.26 s while its isolated steady state is 3.1 s — passes 1-2 of a
-    // fresh session measure 6-7 s, pass 3+ measures 3.1). A full warmup
-    // sweep at the smallest SF compiles every query's kernels for
-    // ~0.1-0.3 s each and makes the timed passes measure steady-state
-    // throughput, which is what this bench claims to report. Failures
-    // are ignored — a query that only works at the bench SF still gets
-    // its session-level warmup from the timed pair itself.
-    if (warmDir.nonEmpty && new java.io.File(warmDir).isDirectory) {
-      for (n <- names)
-        try SparkEntry.queries(n)(spark, warmDir).queryExecution.toRdd.foreach(_ => ())
-        catch { case _: Throwable => () }
+    val dir = ScanLayout.ensure(spark, sfDir)
+    val counts = new GroupCounts
+    spark.sparkContext.addSparkListener(counts)
+    // daemon threads: a worker stuck past its cancel must not keep the JVM alive
+    def newWorker() = Executors.newSingleThreadExecutor { (r: Runnable) =>
+      val t = new Thread(r, "bench-worker"); t.setDaemon(true); t
     }
-    // Fault every table's data pages at the BENCH scale into the OS page
-    // cache (and JIT the parquet decode paths) so the alphabetically
-    // first queries don't eat the corpus's cold-read cost twice — without
-    // this the first timed pair recorded 3x its steady-state latency.
-    def warmPages(): Unit =
-      for (f <- Option(new java.io.File(benchDir).listFiles()).getOrElse(Array.empty)
-           if f.getName.endsWith(".parquet")) {
-        try spark.read.parquet(f.getPath).foreach(_ => ()) catch { case _: Throwable => () }
-      }
-    warmPages()
+    var worker = newWorker()
+    var rebuilds = 0
+    var rebuildFailed = false
+    val rows = Seq.newBuilder[Row]
 
-    // Two timed passes PER QUERY, back to back, min of the two: the
-    // second pass runs while the query's generated code is still JIT-hot,
-    // so the min is steady-state latency. (Two full sweeps instead — the
-    // previous scheme — let the 55 intervening queries churn the code
-    // cache, and both passes of a heavy query could pay recompilation:
-    // observed 3-8x outliers that vanish when the query runs alone.)
-    // A failed query must NOT masquerade as a fast one: report it as -1
-    // and list it under "errors" instead of timing the failure path.
-    //
-    // Drive with FULL MATERIALIZATION, not count(): under count() Catalyst
-    // prunes every column no aggregate references — a projection-only
-    // rewrite (text_pii_redact's regexp passes, text_nfc_normalize)
-    // collapses to a bare row-count scan and its "latency" is fiction.
-    // queryExecution.toRdd executes the exact plan of the query as
-    // written — every output column computed, final sort included — and
-    // the foreach drains it distributed, nothing returns to the driver.
-    // Per-trigger breakdown for the stream-replay rows: their run-to-run
-    // spread is AvailableNow trigger-scheduling variance, not plan cost,
-    // and it dominated BENCH_r11's run-to-run delta. The artifact carries
-    // each stream query's per-micro-batch execution times (ms, from the
-    // engine's own progress events) so a swollen total is attributable to
-    // the specific trigger that stalled.
-    val triggerLog = scala.collection.mutable.Map.empty[String, Seq[Long]]
-    def timeOnce(name: String): (Double, Boolean) = {
+    for (name <- names if !rebuildFailed) {
+      val s = spark
+      val acc = s.sparkContext.longAccumulator(s"rows_$name")
+      val planFile = planDir.resolve(s"$name.txt").toString
+      val passes = Seq.newBuilder[Pass]
+      var status = "ok"
+      var err = ""
+      var pass = 1
       graft.streaming.Streams.lastTriggerMs.set(Seq.empty)
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, benchDir).queryExecution.toRdd.foreach(_ => ())
-          true
+      while (status == "ok" && pass <= nPasses) {
+        val p = pass
+        val fut = worker.submit(new Callable[Pass] {
+          def call(): Pass = runPass(s, dir, name, p, acc, planFile, counts)
+        })
+        try passes += fut.get(TimeoutSec, TimeUnit.SECONDS)
+        catch {
+          case _: TimeoutException =>
+            val (b, r) = groups(name, p)
+            s.sparkContext.cancelJobGroup(b)
+            s.sparkContext.cancelJobGroup(r)
+            try fut.get(30, TimeUnit.SECONDS) catch { case _: Throwable => () }
+            if (!fut.isDone) { worker.shutdownNow(); worker = newWorker() }
+            status = "timeout"; err = s"pass $p exceeded ${TimeoutSec}s"
+          case e: ExecutionException =>
+            val c = Option(e.getCause).getOrElse(e)
+            status = "error"; err = s"pass $p: ${c.getClass.getSimpleName}: ${Option(c.getMessage).getOrElse("")}"
         }
-        catch { case e: Throwable =>
-          System.err.println(s"BENCH FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          false
-        }
-      val trig = graft.streaming.Streams.lastTriggerMs.getAndSet(Seq.empty)
-      if (ok && trig.nonEmpty) triggerLog(name) = trig
-      ((System.nanoTime() - t0) / 1e9, ok)
-    }
-    // This host is a VM with intermittent hypervisor CPU steal; when the
-    // two passes disagree badly the min itself is suspect, so buy one
-    // more sample.
-    //
-    // FLOOR CROSS-CHECK (round-11, after BENCH_r10): pass-to-pass
-    // agreement alone cannot catch a storm that lasts the whole pair —
-    // the committed r10 artifact was a 394.7 s run whose every heavy row
-    // was 3-30x the same code's adjacent-run latency (111.2 s for a row
-    // that floors at 0.35 s). The committed per-query minima across all
-    // recorded session runs (bench_local/FLOORS.json, regenerated each
-    // round by tools/regen_floors.py) are the one reference a single run
-    // can be judged against: any row whose min still exceeds
-    // max(4x floor, floor + 1 s) after the paired passes buys up to two
-    // more samples, and a row that NEVER gets under its threshold is
-    // reported under "storm_suspected" with every raw sample — so a tail
-    // run can no longer masquerade as the engine's steady state without
-    // the artifact itself saying so. Queries with no recorded floor yet
-    // (first round they exist) skip the check and seed the next
-    // regeneration.
-    //
-    // Parse PER ENTRY: one malformed numeric token must drop that entry,
-    // not silently disable the whole storm check (the regex's number
-    // class admits lone '-'/'E' tokens). A floors file that exists but
-    // yields ZERO entries is itself a loud condition — that is exactly
-    // the hand-edit failure mode the check defends against.
-    val floorsPath = sys.env.getOrElse("SPARK_GRAFT_FLOORS", "bench_local/FLOORS.json")
-    val floorsRaw: Map[String, Double] =
-      if (!new java.io.File(floorsPath).isFile) {
-        System.err.println(s"BENCH: no floors file at $floorsPath - storm check off")
-        Map.empty
-      } else {
-        val parsed = try {
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(floorsPath)), "UTF-8")
-          """"([^"]+)"\s*:\s*([0-9.Ee+-]+)""".r.findAllMatchIn(txt).flatMap { m =>
-            scala.util.Try(m.group(2).toDouble).toOption.map(m.group(1) -> _)
-          }.toMap
-        } catch { case e: Throwable =>
-          System.err.println(s"BENCH: unreadable floors at $floorsPath (${e.getMessage})")
-          Map.empty[String, Double]
-        }
-        if (parsed.isEmpty)
-          System.err.println(
-            s"BENCH: floors file $floorsPath exists but yielded ZERO parseable entries - " +
-              "storm check OFF; regenerate it with tools/regen_floors.py")
-        parsed
+        pass += 1
       }
-    // Floors are recorded minima at a specific core count ("_cpus" header,
-    // written by tools/regen_floors.py; 32 for the committed history). The
-    // driver ALSO benches at a LOWER core count to measure scaling — there
-    // a CPU-bound row runs legitimately up to (floorCpus/cpus)x its
-    // recorded floor, and unscaled thresholds would flag dozens of healthy
-    // rows, each buying extra samples plus an isolated session-rebuild
-    // re-probe. Scale the slowdown allowance by the core ratio (clamped
-    // >= 1: more cores than the floors' never TIGHTENS a threshold, since
-    // scheduling-bound rows don't speed up past their floor).
-    //
-    // Scaling applies ONLY when the floors file carries an explicit
-    // "_cpus" header (r12 advice): a header-less file — any pre-header
-    // regen, or a hand-made per-cluster file — previously defaulted to
-    // 32, so a file measured AND benched at 8 cores got cpuScale=4 and
-    // every threshold was loosened 4x exactly when it should have been
-    // at full strength. No header ⇒ assume same-core-count ⇒ scale 1.
-    //
-    // The session's EFFECTIVE core count comes from the actual master
-    // string, not the raw SPARK_GRAFT_CPUS env (r12 advice): under
-    // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] the env var does not
-    // reflect the session's parallelism (w*c).
-    val floorCpus: Option[Double] = floorsRaw.get("_cpus")
-    val floors = floorsRaw.filterNot(_._1.startsWith("_"))
-    val effCpus: Double = Sessions.effectiveCores(Sessions.master).toDouble
-    val cpuScale = floorCpus match {
-      case Some(fc) => math.max(1.0, fc / math.max(1.0, effCpus))
-      case None => 1.0
-    }
-    if (floors.nonEmpty)
-      System.err.println("BENCH: floors " + floorCpus.map(c =>
-        s"recorded at ${c.toInt} cores").getOrElse(
-        "carry no _cpus header - assuming same core count (scale 1)") +
-        s"; session cores=$effCpus cpuScale=$cpuScale")
-    // Threshold shape (tightened in r13 after BENCH_r12's
-    // multimodal_phash_clusters row doubled without tripping the check —
-    // a 4x-floor allowance is too loose to catch a 2x drift on a >=2 s
-    // row): min(4x, 2x + 1 s) keeps the old 4x band for sub-second rows
-    // (where scheduling noise is the dominant term) and narrows to
-    // 2x + 1 s once the floor is large enough for a 2x drift to matter;
-    // the floor + 1 s lower bound still protects the tiniest rows from
-    // pure stage-gap jitter.
-    def threshold(name: String): Option[Double] =
-      floors.get(name).map(f =>
-        math.max(math.min(4 * f, 2 * f + 1.0), f + 1.0) * cpuScale)
-    // floorHit distinguishes the two re-run causes in the artifact:
-    // "resamples" carries only floor-triggered rows, "unstable" the
-    // pass-disagreement rows (previously both rode one field and a floor
-    // breach could be inferred where none occurred).
-    case class Res(name: String, sec: Double, ok: Boolean,
-                   samples: Seq[Double], storm: Boolean, floorHit: Boolean)
-    val results = names.map { n =>
-      val (t1, ok1) = timeOnce(n)
-      val (t2, ok2) = timeOnce(n)
-      val unstable = math.max(t1, t2) > 2 * math.min(t1, t2) && math.min(t1, t2) > 0.5
-      val (t3, ok3) = if (unstable) timeOnce(n) else (Double.MaxValue, true)
-      var samples = if (unstable) Seq(t1, t2, t3) else Seq(t1, t2)
-      var ok = ok1 && ok2 && ok3
-      val th = threshold(n)
-      var extra = 0
-      val floorHit = ok && th.exists(samples.min > _)
-      while (ok && extra < 2 && th.exists(samples.min > _)) {
-        val (t, okx) = timeOnce(n)
-        samples :+= t; ok &&= okx; extra += 1
-      }
-      Res(n, samples.min, ok, samples, ok && th.exists(samples.min > _), floorHit)
-    }
-    val errors = results.collect { case r if !r.ok => r.name }
-
-    // SELF-ADJUDICATION (round-12, after BENCH_r11 shipped with one
-    // storm-flagged row the artifact could flag but not judge): a row the
-    // floor check still suspects after its extra samples gets an ISOLATED
-    // re-probe — fresh session (new JVM-internal context, re-warmed page
-    // cache), min of 4 back-to-back passes with nothing else running.
-    // If the isolated min clears the threshold the in-run samples were a
-    // transient host storm (verdict "refuted", the isolated min is the
-    // row's steady state); if it still breaches, either the host storm
-    // outlived the bench or the floor itself is stale (verdict
-    // "confirmed" — regenerate floors or investigate). Either way the
-    // JSON now carries its own adjudication next to the raw samples.
-    case class Iso(name: String, samples: Seq[Double], refuted: Boolean)
-    // Wall-clock backstop: each isolated probe costs a session rebuild
-    // (~15 s) + page re-warm + 4 passes, so a run where a long host storm
-    // (or a stale floors file) flags many rows must not multiply that
-    // into an unbounded tail. Adjudicate the WORST breaches (largest
-    // min/threshold ratio) first and cap the count; rows past the cap
-    // stay listed under storm_suspected with their raw samples.
-    val isoCap = 6
-    val isolated: Seq[Iso] = {
-      val suspects = results.filter(_.storm)
-        .sortBy(r => -(r.sec / threshold(r.name).getOrElse(Double.MaxValue)))
-        .take(isoCap).map(_.name)
-      if (suspects.isEmpty) Seq.empty
-      else {
-        suspects.map { n =>
-          spark.stop()
-          spark = Sessions.start(Sessions.Scale)
-          warmPages()
-          val samples = (1 to 4).map(_ => timeOnce(n)._1)
-          Iso(n, samples, threshold(n).exists(samples.min <= _))
+      val row = Row(name, status, acc.value, passes.result(),
+        graft.streaming.Streams.lastTriggerMs.getAndSet(Seq.empty), err)
+      rows += row
+      log.println(row.json)
+      System.err.println(s"BENCH $name: $status first=${row.firstUseS.map(fmt).getOrElse("-")}" +
+        s" median=${row.steady.map(q => fmt(q.median)).getOrElse("-")} rows=${row.rows} $err")
+      try {
+        val (live, rebuilt) = Sessions.ensureLive(spark)
+        if (rebuilt) {
+          spark = live
+          spark.sparkContext.addSparkListener(counts)
+          rebuilds += 1
+          System.err.println(s"BENCH: session rebuilt after $name (context was stopped)")
         }
+      } catch { case e: Throwable =>
+        System.err.println(s"BENCH: session rebuild failed after $name: $e; remaining queries skipped")
+        rebuildFailed = true
       }
     }
-
-    // 3-decimal times keep the whole line well under the driver's output
-    // tail window; sub-millisecond precision is noise anyway. Locale.ROOT:
-    // the f-interpolator uses the JVM default locale, and a comma-decimal
-    // locale would emit invalid JSON
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { r => "\"" + r.name + "\":" + (if (r.ok) fmt(r.sec) else "-1") }
-      .mkString("{", ",", "}")
-    val total = results.collect { case r if r.ok => r.sec }.sum
-    // ADJUDICATED total (r13, VERDICT r12 "What's wrong #2"): the raw
-    // total keeps absorbing in-run storm minutes even when the artifact's
-    // own isolated re-probe refutes them (BENCH_r12: ~22 s / 16% of the
-    // headline was self-diagnosed host noise). Report, beside the raw
-    // value, the total with each storm-REFUTED row at its isolated
-    // steady-state min — rows the probe CONFIRMED (or never probed) keep
-    // their raw min, so this only substitutes evidence the artifact
-    // itself carries. "queries" stays the raw per-row map.
-    val isoMin: Map[String, Double] =
-      isolated.filter(_.refuted).map(i => i.name -> i.samples.min).toMap
-    val adjTotal = results.collect { case r if r.ok => isoMin.getOrElse(r.name, r.sec) }.sum
-    val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // storm evidence rides the artifact itself: suspected rows (min never
-    // under threshold) with their isolated adjudication, plus the raw
-    // samples of every floor-triggered re-run ("resamples") and every
-    // pass-disagreement re-run ("unstable") — spread, not just the min
-    val suspects = results.filter(_.storm).map(_.name)
-    val stormJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def sampleMap(rs: Seq[Res]): String = rs
-      .map(r => "\"" + r.name + "\":[" + r.samples.map(fmt).mkString(",") + "]")
-      .mkString("{", ",", "}")
-    val resampleJson = sampleMap(results.filter(_.floorHit))
-    val unstableJson = sampleMap(results.filter(r => !r.floorHit && r.samples.size > 2))
-    val isoJson = isolated.map { i =>
-      "\"" + i.name + "\":{\"samples\":[" + i.samples.map(fmt).mkString(",") +
-        "],\"verdict\":\"" + (if (i.refuted) "storm_refuted" else "storm_confirmed") + "\"}"
-    }.mkString("{", ",", "}")
-    val trigJson = triggerLog.toSeq.sortBy(_._1)
-      .map { case (n, ts) => "\"" + n + "\":[" + ts.mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"adjusted_total":${fmt(adjTotal)},"unit":"sec","queries":$qs,"errors":$errJson,"storm_suspected":$stormJson,"isolated":$isoJson,"resamples":$resampleJson,"unstable":$unstableJson,"stream_trigger_ms":$trigJson,"floors_loaded":${floors.size},"master":"${Sessions.master}","sf":"$sfDir"}"""
-    println(line)
-    // The driver keeps only a ~3 KB stdout TAIL: the full line above is
-    // ~5 KB at 182 queries, so the tail starts mid-line and structured
-    // parsing fails (BENCH_r08.json: "parsed": null). Emit a second,
-    // COMPACT line LAST — total, query count, errors, the 15 slowest
-    // rows, and a pointer to the persisted full file — small enough to
-    // survive the tail window intact, so the driver artifact parses.
-    // Persist the full line under the repo: the driver's output tail
-    // truncates the per-query map past ~70 queries, and the judge needs
-    // every row to audit regressions. SPARK_GRAFT_BENCH_OUT overrides the
-    // destination; default is a timestamped file under bench_local/.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"bench_local/bench_${System.currentTimeMillis() / 1000}.json")
-    val slow = results.filter(_.ok).sortBy(-_.sec).take(15)
-      .map(r => "\"" + r.name + "\":" + fmt(r.sec)).mkString("{", ",", "}")
-    // "note" makes the artifact self-describing: this compact line is a
-    // SUMMARY sized for the driver's stdout tail; the authoritative
-    // per-query map (plus raw storm samples + isolated adjudication) is
-    // the persisted "full" file.
-    println(s"""{"metric":"total","value":${fmt(total)},"adjusted_total":${fmt(adjTotal)},"unit":"sec","n":${results.size},"n_err":${errors.size},"errors":$errJson,"storm_suspected":$stormJson,"isolated":$isoJson,"slowest":$slow,"full":"$outPath","note":"summary line; authoritative per-query map in the persisted full file","sf":"$sfDir"}""")
-    try {
-      val f = new java.io.File(outPath)
-      Option(f.getParentFile).foreach(_.mkdirs())
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"BENCH: could not persist $outPath: ${e.getMessage}")
-    }
+    log.close()
+    println(summary(rows.result(), outPath, Sessions.master, sfDir, rebuilds))
     spark.stop()
+    if (rebuildFailed) sys.exit(1)
   }
 }

@@ -59,4 +59,27 @@ object SparkEntry {
       "funnel_stateful" -> EventTime.oracles("events_funnel"),
       "attribution_stateful" -> EventTime.oracles("events_attribution")
     )
+
+  /** The registered names a runner's trailing arguments select, sorted:
+    * every query when there are none. Names may be space- or
+    * comma-separated; an unknown name fails before any session starts. */
+  def select(args: Seq[String]): Seq[String] = {
+    val wanted = args.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted -- queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    queries.keys.toSeq.sorted.filter(n => wanted.isEmpty || wanted(n))
+  }
+
+  /** A JSON string literal: backslash, quote and ALL control characters
+    * (< 0x20) escaped, so a tab or CR in SQL or an error message cannot
+    * make a runner's output unparseable. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

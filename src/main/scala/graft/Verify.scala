@@ -20,11 +20,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [name ...]")
     val Array(sfDir, outDir) = args.take(2)
-    val wanted = args.drop(2).flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = wanted -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => wanted.isEmpty || wanted(n))
+    val names = SparkEntry.select(args.drop(2).toSeq)
 
     val spark = Sessions.start(Sessions.Verify)
     new java.io.File(outDir).mkdirs()
@@ -35,20 +31,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter { case (k, _) => wanted.isEmpty || wanted(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val selected = names.toSet
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
+      .map { case (k, v) => s"${SparkEntry.jsonString(k)}: ${SparkEntry.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * full-multiset buffers.
   *
   * Ungated (`graft.approx.exactGate=false`, the Scale session shape of
-  * graft.core.Sessions that Bench and Soak run): the plan is the sketch
+  * graft.core.Sessions that Bench runs): the plan is the sketch
   * ALONE — fixed-memory partial aggregation, the representative scale
   * shape — so the benchmarked/soaked cost is the cost a user would
   * actually pay. Verify keeps the gate ON, so every

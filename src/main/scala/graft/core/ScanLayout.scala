@@ -40,7 +40,7 @@ import org.apache.spark.sql.SparkSession
   * rows) in a marker written before publish; an entry is complete only
   * when that marker matches, so stale or half-built entries are
   * tombstoned and rebuilt. Enabled by the Scale session shape
-  * (graft.core.Sessions); consumers are Bench, FloorProbe and PlanDump.
+  * (graft.core.Sessions); Bench reads through it.
   * Verify intentionally reads the raw input files — the correctness
   * gate must not depend on this layer.
   */
@@ -122,7 +122,7 @@ object ScanLayout {
       case _ => false
     }
 
-  /** Returns the directory Bench/Soak should read tables from: `sfDir`
+  /** Returns the directory Bench should read tables from: `sfDir`
     * itself when disabled/absent, else a cache dir where every table is
     * either a split rewrite or a symlink to the source. */
   def ensure(spark: SparkSession, sfDir: String): String = {

@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session factory for every runnable main (Bench, Verify, Soak
-  * and the tools). Every runner gets the same engine extensions, master,
+/** The one session factory for every runnable main (Bench, Verify and
+  * the tools). Every runner gets the same engine extensions, master,
   * shuffle width, timestamp handling and timeouts; the two [[Shape]]s
   * differ only in the graft confs below.
   *
@@ -40,7 +40,7 @@ object Sessions {
 
   /** The production shape: approximate-by-design queries run their sketch
     * alone (see [[ApproxGate]]) and callers of [[ScanLayout.ensure]] read
-    * its split copy. Bench, Soak, SoakGen, StreamSoak and the probes. */
+    * its split copy. Bench, SoakGen, StreamSoak and IsolationProbe. */
   case object Scale extends Shape(Seq(
     "graft.approx.exactGate" -> "false",
     ScanLayout.EnabledKey -> "true"))
@@ -58,19 +58,7 @@ object Sessions {
 
   def master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
 
-  private val LocalN = """local\[\s*(\d+)\s*\]""".r
   private val LocalCluster = """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*\]""".r
-
-  /** The parallelism a master string gives the session: under
-    * local-cluster that is workers × cores per worker, which
-    * SPARK_GRAFT_CPUS does not reflect. */
-  def effectiveCores(master: String): Int = master.trim match {
-    case "local" => 1
-    case LocalN(n) => n.toInt
-    case "local[*]" => Runtime.getRuntime.availableProcessors
-    case LocalCluster(w, c, _) => w.toInt * c.toInt
-    case _ => cores
-  }
 
   /** Executor settings a local-cluster master needs (none otherwise):
     *   - spark.executor.extraClassPath ← SPARK_GRAFT_EXEC_CLASSPATH
@@ -97,8 +85,8 @@ object Sessions {
     }.filter(_._1.nonEmpty)
 
   /** A fresh session of the given shape. Also the rebuild path after a
-    * stopped context (Soak's failure isolation, Bench's isolated
-    * re-probe), so it first drops any registered session. */
+    * stopped context ([[ensureLive]]), so it first drops any registered
+    * session. */
   def start(shape: Shape): SparkSession = {
     val m = master
     val builder = SparkSession.builder()
@@ -148,4 +136,12 @@ object Sessions {
       spark.conf.set(k, v)
     spark
   }
+
+  /** Failure isolation between queries: a live session passes through; a
+    * stopped context (an executor-thread OOM stops the local-mode
+    * context) is replaced by a fresh Scale session, so the next query
+    * runs on real infrastructure instead of failing with "stopped
+    * SparkContext". Returns the session and whether it was rebuilt. */
+  def ensureLive(spark: SparkSession): (SparkSession, Boolean) =
+    if (spark.sparkContext.isStopped) (start(Scale), true) else (spark, false)
 }

@@ -92,7 +92,7 @@ object Staged {
     * orders of magnitude above either floor, so the override is inert
     * there. Scoped to the build (set/restore) so ordinary queries keep
     * the stock coalescing; builds are session-sequential in every
-    * runner (Bench/Verify/Soak), so the temporary session-conf flip
+    * runner (Bench/Verify), so the temporary session-conf flip
     * cannot leak into a concurrent query. */
   private def withBuildConf[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"

@@ -22,13 +22,13 @@ object Tables {
     * full resolution), so a table dir that is overwritten mid-session
     * (AnnIndexSpec's regenerated-corpus probe does exactly this) re-lists
     * instead of serving a stale file list. Stopped sessions' entries are
-    * purged on every lookup: a rebuilt session (Soak failure isolation)
+    * purged on every lookup: a rebuilt session (Bench failure isolation)
     * starts cold and the dead session's plans become collectable. */
   // NOT a WeakHashMap: a cached DataFrame strongly references its own
   // SparkSession, so weak keys would never clear (the value reaches the
   // key — WeakHashMap's documented degenerate case). Dead sessions are
   // reclaimed EXPLICITLY instead: every load() first drops entries whose
-  // context is stopped, so a Soak failure-isolation rebuild releases the
+  // context is stopped, so a Bench failure-isolation rebuild releases the
   // dead session's resolved plans and file listings on the next lookup.
   private val relationCache =
     scala.collection.concurrent.TrieMap.empty[SparkSession, scala.collection.concurrent.TrieMap[String, (String, DataFrame)]]

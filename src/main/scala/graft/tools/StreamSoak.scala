@@ -6,8 +6,8 @@ import graft.sources.VersionedStore
 import graft.streaming.IngestDedup
 
 /** Streaming-scale soak: drive the ingest-dedup topology over the
-  * SoakGen-replicated corpus — the streaming leg the batch [[Soak]]
-  * doesn't cover.
+  * SoakGen-replicated corpus — the streaming leg a batch soak
+  * (`graft.Bench <soakDir> <out> 1`) doesn't cover.
   *
   * Shape: copy 0 (original doc ids) is the standing corpus; each of the
   * other copies arrives as ONE parquet file = ONE micro-batch
@@ -29,7 +29,8 @@ import graft.streaming.IngestDedup
 object StreamSoak {
   def main(args: Array[String]): Unit = {
     val soakDir = if (args.length > 0) args(0) else "bench_local/soak_sf1"
-    val outPath = if (args.length > 1) args(1) else "bench_local/stream_soak_r7.jsonl"
+    val outPath = if (args.length > 1) args(1)
+      else s"bench_local/stream_soak_${System.currentTimeMillis() / 1000}.jsonl"
     val idBase = if (args.length > 2) args(2).toLong else 10000L
     val spark = graft.core.Sessions.start(graft.core.Sessions.Scale)
 

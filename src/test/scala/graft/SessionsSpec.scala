@@ -11,14 +11,6 @@ import graft.core.{ScanLayout, Sessions}
   * shared TestSession and rewrite its settings. */
 class SessionsSpec extends AnyFunSuite {
 
-  test("effective cores follow the master string") {
-    assert(Sessions.effectiveCores("local") === 1)
-    assert(Sessions.effectiveCores("local[3]") === 3)
-    assert(Sessions.effectiveCores("local[*]") === Runtime.getRuntime.availableProcessors)
-    assert(Sessions.effectiveCores("local-cluster[2,3,1024]") === 6)
-    assert(Sessions.effectiveCores("local-cluster[ 4 , 2 , 2600 ]") === 8)
-  }
-
   test("a local-cluster master takes executor memory from its third field") {
     val confs = Sessions.clusterConfs("local-cluster[2,2,3000]", Map.empty).toMap
     assert(confs("spark.executor.memory") === "3000m")
