@@ -1,11 +1,14 @@
 package graft.core
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.SparkSession
 
 /** The one session factory for every runnable main (Bench, Verify and
   * the tools). Every runner gets the same engine extensions, master,
   * shuffle width, timestamp handling and timeouts; the two [[Shape]]s
-  * differ only in the graft confs below.
+  * differ only in the graft confs below. The same object owns every
+  * session's derived state ([[memo]]).
   *
   * Environment:
   *   - SPARK_GRAFT_CPUS: core count (default: the JVM's available
@@ -144,4 +147,31 @@ object Sessions {
     * SparkContext". Returns the session and whether it was rebuilt. */
   def ensureLive(spark: SparkSession): (SparkSession, Boolean) =
     if (spark.sparkContext.isStopped) (start(Scale), true) else (spark, false)
+
+  // NOT a WeakHashMap: a memoized DataFrame strongly references its own
+  // SparkSession, so weak keys would never clear (the value reaches the
+  // key). Stopped sessions are dropped explicitly on every lookup instead.
+  private val memos = TrieMap.empty[SparkSession, TrieMap[String, Any]]
+
+  /** The one owner of per-session derived state: resolved relations
+    * ([[Tables]]), staged dirs ([[Staged]]), corpus gates and
+    * fingerprints, the last stream sink. Keyed by the session object and
+    * a caller key (callers prefix their keys, so one key always holds one
+    * type). A hit is returned only if `valid` accepts it; otherwise
+    * `build` runs and its result is stored once it returns, so a build
+    * that throws stores nothing. Every lookup first drops the entries of
+    * stopped contexts: a session rebuilt by [[ensureLive]] starts cold
+    * and the dead one's values become collectable. Derived state lives
+    * here, never in the session's runtime conf, which holds settings. */
+  def memo[T](s: SparkSession, key: String)(valid: T => Boolean)(build: => T): T = {
+    memos.keys.filter(_.sparkContext.isStopped).foreach(memos.remove)
+    val entries = memos.getOrElseUpdate(s, TrieMap.empty[String, Any])
+    entries.get(key).map(_.asInstanceOf[T]) match {
+      case Some(v) if valid(v) => v
+      case _ =>
+        val v = build
+        entries.put(key, v)
+        v
+    }
+  }
 }

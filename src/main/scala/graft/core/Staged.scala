@@ -26,7 +26,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Staged {
 
-  private val dirs = scala.collection.concurrent.TrieMap.empty[String, String]
   // every dir ever handed to a build — purged at JVM exit whether the
   // build succeeded, failed, or was abandoned by a revalidation miss
   private val allDirs = scala.collection.concurrent.TrieMap.empty[String, Unit]
@@ -38,20 +37,6 @@ object Staged {
 
   private def complete(d: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(d, Marker))
-
-  /** Stable unique id per session, minted once into the session-local
-    * runtime conf — hashCode can collide and doesn't identify a session.
-    * private[graft]: also the memo key for other per-(session, corpus)
-    * driver-side decisions (Dedup's duplication profile, StreamOracle's
-    * sink rotation) — one id-minting scheme, not three. */
-  private[graft] def sessionId(s: SparkSession): String = synchronized {
-    val k = "graft.stage.session.id"
-    s.conf.getOption(k).getOrElse {
-      val id = java.util.UUID.randomUUID().toString
-      s.conf.set(k, id)
-      id
-    }
-  }
 
   /** Build-once, read-many: materialize `build` to a temp parquet dir on
     * first use of (session, key) and return a reader over it. */
@@ -66,21 +51,14 @@ object Staged {
     * A failed build registers NOTHING (its dir is abandoned to the exit
     * purge); a registered dir that later fails revalidation (vanished,
     * marker missing) is likewise abandoned and rebuilt fresh. */
-  def materialize(s: SparkSession, key: String)(build: String => Unit): String = {
-    val k = sessionId(s) + "|" + key
-    dirs.get(k) match {
-      case Some(d) if complete(d) => d
-      case stale =>
-        stale.foreach(d => dirs.remove(k, d))
-        dirs.getOrElseUpdate(k, {
-          val d = java.nio.file.Files.createTempDirectory("graft-stage").toString
-          allDirs.put(d, ())
-          withBuildConf(s)(build(d))
-          java.nio.file.Files.createFile(java.nio.file.Paths.get(d, Marker))
-          d
-        })
+  def materialize(s: SparkSession, key: String)(build: String => Unit): String =
+    Sessions.memo(s, s"stage|$key")(complete) {
+      val d = java.nio.file.Files.createTempDirectory("graft-stage").toString
+      allDirs.put(d, ())
+      withBuildConf(s)(build(d))
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(d, Marker))
+      d
     }
-  }
 
   /** Staging builds run with a LOWER AQE coalescing floor. The artifact
     * kernels (shingle/posting/signature construction) are CPU-bound per

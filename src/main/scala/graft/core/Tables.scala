@@ -11,31 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Resolved-relation cache, the catalog behavior every warehouse engine
-    * has: `spark.read.parquet` re-lists the path and re-reads footers on
-    * EVERY call — measured ~85 ms fixed cost per call even for a 2 KB
-    * table, which across a many-query run multiplies into tens of
-    * seconds of pure re-resolution. The resolved
-    * DataFrame is cached per (session, path) and REVALIDATED on every hit
-    * against a stat-level source fingerprint (size+mtime for a file, dir
-    * mtime + child count for a directory — microseconds, vs the ~85 ms
-    * full resolution), so a table dir that is overwritten mid-session
-    * (AnnIndexSpec's regenerated-corpus probe does exactly this) re-lists
-    * instead of serving a stale file list. Stopped sessions' entries are
-    * purged on every lookup: a rebuilt session (Bench failure isolation)
-    * starts cold and the dead session's plans become collectable. */
-  // NOT a WeakHashMap: a cached DataFrame strongly references its own
-  // SparkSession, so weak keys would never clear (the value reaches the
-  // key — WeakHashMap's documented degenerate case). Dead sessions are
-  // reclaimed EXPLICITLY instead: every load() first drops entries whose
-  // context is stopped, so a Bench failure-isolation rebuild releases the
-  // dead session's resolved plans and file listings on the next lookup.
-  private val relationCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, scala.collection.concurrent.TrieMap[String, (String, DataFrame)]]
-
-  // private[graft]: also the revalidation stamp for other per-(session,
-  // corpus) memoized decisions (Dedup's duplication-profile gate) — one
-  // staleness scheme, not two.
+  /** Stat-level source fingerprint: size+mtime for a file, dir mtime +
+    * child names + count for a directory — microseconds, against ~85 ms
+    * for a full parquet resolution. The revalidation stamp of every
+    * per-session value derived from an input file ([[load]], Dedup's
+    * duplication gate, AnnIndex's corpus fingerprint). */
   private[graft] def sourceFp(path: String): String = {
     val f = new java.io.File(path)
     if (!f.exists) "absent"
@@ -49,28 +29,18 @@ object Tables {
     }
   }
 
-  /** Drop one session's cached relations explicitly. The automatic purge
-    * below keys on a STOPPED SparkContext, which covers every session
-    * this codebase creates (stop() stops the shared context) — but a
-    * caller juggling `newSession()` clones shares one live context
-    * across sessions it may abandon individually, and those clones'
-    * entries would otherwise live until the context stops. Such callers
-    * evict explicitly when done with a clone. */
-  def evict(spark: SparkSession): Unit = relationCache.remove(spark): Unit
-
+  /** Resolved relation, memoized per (session, path) — the catalog
+    * behavior every warehouse engine has: `spark.read.parquet` re-lists
+    * the path and re-reads footers on EVERY call (~85 ms fixed cost per
+    * call even for a 2 KB table), which across a many-query run
+    * multiplies into tens of seconds of pure re-resolution. Every hit is
+    * revalidated against [[sourceFp]], so a table dir that is overwritten
+    * mid-session re-lists instead of serving a stale file list. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    relationCache.keys.filter(_.sparkContext.isStopped).foreach(relationCache.remove)
-    val perSession = relationCache.getOrElseUpdate(spark,
-      scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)])
     val fp = sourceFp(path)
-    perSession.get(path) match {
-      case Some((cachedFp, df)) if cachedFp == fp => df
-      case _ =>
-        val df = spark.read.parquet(path)
-        perSession.put(path, (fp, df))
-        df
-    }
+    Sessions.memo(spark, s"table|$path")((e: (String, DataFrame)) => e._1 == fp)(
+      (fp, spark.read.parquet(path)))._2
   }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")

@@ -40,22 +40,13 @@ object Bloom {
     bytes
   }
 
-  /** Build-once-per-(session, key) variant: the one-row filter is staged
-    * through [[graft.core.Staged]] (the same persist-an-artifact step a
-    * production pipeline does between corpus builds), so repeated query
-    * construction re-reads a one-row parquet instead of re-scanning the
-    * corpus. */
-  def stagedBytes(s: SparkSession, stageKey: String, keys: DataFrame, key: Column,
-      expectedKeys: Long): Array[Byte] = {
-    val df = graft.core.Staged(s, stageKey) {
-      val hashed = new XxHash64(Seq(ColumnBridge.expression(key)))
-      val agg = new BloomFilterAggregate(hashed, expectedKeys).toAggregateExpression()
-      keys.select(ColumnBridge.column(agg).as("bloom"))
-    }
-    val bytes = df.head().getAs[Array[Byte]](0)
-    require(bytes != null, "Bloom.stagedBytes: empty build side")
-    bytes
-  }
+  /** Build-once-per-(session, key) variant: the filter bytes are
+    * memoized in [[graft.core.Sessions.memo]], so repeated query
+    * construction reuses them instead of re-scanning the corpus. */
+  def memoBytes(s: SparkSession, memoKey: String, keys: DataFrame, key: Column,
+      expectedKeys: Long): Array[Byte] =
+    graft.core.Sessions.memo(s, s"bloom|$memoKey")((_: Array[Byte]) => true)(
+      buildBytes(keys, key, expectedKeys))
 
   /** OR-merge two serialized filters built with the SAME expectedKeys
     * (same bit width + hash count — readFrom/mergeInPlace reject

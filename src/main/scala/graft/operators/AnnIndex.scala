@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Sessions, Tables}
 import graft.sources.VersionedStore
 
 /** Persisted trained-IVF index lifecycle — the 100 TB serving shape.
@@ -34,7 +32,9 @@ import graft.sources.VersionedStore
   * to Lloyd training / microQuant / k selection retires every index the
   * OLD math built instead of silently serving it (bump
   * [[TrainAlgoVersion]] with any such change). The fingerprint costs
-  * one narrow aggregate scan, computed once per (JVM, dir).
+  * one narrow aggregate scan, memoized per (session, dir) and stamped
+  * with the embeddings file's [[Tables.sourceFp]], so a corpus rewritten
+  * in place resolves to its own store.
   *
   * Durability: the store base defaults to `bench_local/ann_index` under
   * the working directory — a cross-session artifact must not live in
@@ -53,15 +53,12 @@ object AnnIndex {
     * by the old algorithm. */
   private val TrainAlgoVersion = 1
 
-  private val fpCache = TrieMap.empty[String, String]
-
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Uncached content fingerprint — package-visible so the spec can
-    * pin the "same vec_ids, different vectors" regeneration scenario
-    * (cross-JVM in production, where fpCache doesn't exist yet). */
+  /** Unmemoized content fingerprint — package-visible so the spec can
+    * pin the "same vec_ids, different vectors" regeneration scenario. */
   private[graft] def corpusFingerprint(s: SparkSession, dir: String, flavor: String): String = {
     // bounded 1-row fetch (the allowed driver-side pattern): corpus
     // identity, not corpus data
@@ -77,7 +74,9 @@ object AnnIndex {
   }
 
   private def storeBase(s: SparkSession, dir: String, flavor: String): String = {
-    val fp = fpCache.getOrElseUpdate(s"$dir|$flavor", corpusFingerprint(s, dir, flavor))
+    val src = Tables.sourceFp(s"$dir/embeddings.parquet")
+    val fp = Sessions.memo(s, s"annfp|$dir|$flavor")((e: (String, String)) => e._1 == src)(
+      (src, corpusFingerprint(s, dir, flavor)))._2
     // session conf → JVM property (suites isolating their store across
     // newSession() boundaries, where session confs don't propagate) →
     // durable default under the working directory

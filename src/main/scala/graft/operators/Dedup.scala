@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Sessions, Staged, Tables}
 import graft.functions.TextAnalysis
 
 /** Deduplication suite over the documents table — the operators a
@@ -515,12 +515,6 @@ object Dedup {
       .join(counts.select(col("doc_id").as("doc_b"), col("c").as("cb")), "doc_b")
   }
 
-  /** (doc_id, rep): rep = min doc_id among EXACT-text duplicates (md5
-    * of the raw text — byte equality, so shingle sets are identical by
-    * construction). The collapse key for cluster-resolution queries:
-    * on a re-crawl-shaped corpus most duplication is exact, and the
-    * shingle self-join over k exact copies does k² of the work one
-    * representative does. */
   /** Corpus duplication gate for the capped/prefix near-dup family —
     * true ⇒ run the ORIGINAL DOC-LEVEL formulation (self-join over the
     * full shingle index; within-dup-group pairs emerge from the join
@@ -540,49 +534,48 @@ object Dedup {
     * within-group pair mass Σ C(k_g, 2) over exact-dup text groups —
     * the quadratic slot inflation the doc-level self-join would pay per
     * shared rare shingle — from ONE narrow aggregate over md5(text)
-    * (bounded driver-side head, the budget-guard pattern), memoized per
-    * (session, corpus). Doc level iff that mass ≤ max(64, n_docs/100):
-    * sf0.1's 8 duplicate pairs in 5 000 docs stay doc-level; a SoakGen
+    * (bounded driver-side head, the budget-guard pattern). Doc level
+    * iff that mass ≤ max(64, n_docs/100): sf0.1's 8 duplicate pairs in
+    * 5 000 docs stay doc-level; a SoakGen
     * N-way replica (every text an N-way group) or any real re-crawl
     * trips to rep level. A pure function of the corpus, so the (path-
-    * independent) DuckDB oracles replay unchanged.
-    * `graft.dedup.repcollapse=force` pins the rep path and `=off` the
-    * doc-level path regardless of corpus (RepCollapseGateSpec's A/B
-    * knobs; `off` doubles as the operational escape hatch). */
-  // The memo lives in the SESSION RUNTIME CONF (not a process-global
-  // map): it dies with the session instead of accreting for the JVM
-  // lifetime, and the stored value carries the corpus fingerprint
-  // (Tables.sourceFp — same stat-level stamp the catalog cache
-  // revalidates with) so a documents.parquet rewritten mid-session
-  // recomputes the gate instead of silently replaying a stale decision.
-  private[graft] def docLevelPath(s: SparkSession, dir: String): Boolean =
-    s.conf.get("graft.dedup.repcollapse", "auto") match {
-      case "force" => false // pin rep path (spec A/B)
-      case "off"   => true  // pin doc-level path (spec A/B + escape hatch)
-      case _ =>
-        val key = "graft.dedup.doclevel.memo." + dir
-        val fp = Tables.sourceFp(s"$dir/documents.parquet")
-        s.conf.getOption(key).collect {
-          case v if v.startsWith(fp + "=") => v.stripPrefix(fp + "=").toBoolean
-        }.getOrElse {
-          val r = Tables.documents(s, dir)
-            .filter(col("text").isNotNull)
-            .groupBy(md5(col("text"))).agg(count(lit(1)).as("k"))
-            .agg(coalesce(sum(expr("(k * (k - 1)) div 2")), lit(0L)).as("dup_pairs"),
-              coalesce(sum(col("k")), lit(0L)).as("n_docs")).head()
-          val docLevel = r.getLong(0) <= math.max(64L, r.getLong(1) / 100)
-          s.conf.set(key, s"$fp=$docLevel")
-          docLevel
-        }
-    }
+    * independent) DuckDB oracles replay unchanged. The decision is
+    * memoized per (session, dir) in [[graft.core.Sessions.memo]] and
+    * stamped with the documents file's [[Tables.sourceFp]], so a
+    * documents.parquet rewritten mid-session recomputes the gate instead
+    * of replaying a stale decision. */
+  private[graft] def docLevelPath(s: SparkSession, dir: String): Boolean = {
+    val fp = Tables.sourceFp(s"$dir/documents.parquet")
+    Sessions.memo(s, s"doclevel|$dir")((e: (String, Boolean)) => e._1 == fp) {
+      val r = Tables.documents(s, dir)
+        .filter(col("text").isNotNull)
+        .groupBy(md5(col("text"))).agg(count(lit(1)).as("k"))
+        .agg(coalesce(sum(expr("(k * (k - 1)) div 2")), lit(0L)).as("dup_pairs"),
+          coalesce(sum(col("k")), lit(0L)).as("n_docs")).head()
+      (fp, r.getLong(0) <= math.max(64L, r.getLong(1) / 100))
+    }._2
+  }
+
+  /** Pin [[docLevelPath]] for (session, dir) until the documents file
+    * changes — the seam RepCollapseGateSpec A/Bs the two paths through. */
+  private[graft] def pinDocLevel(s: SparkSession, dir: String, docLevel: Boolean): Unit =
+    Sessions.memo(s, s"doclevel|$dir")((_: (String, Boolean)) => false)(
+      (Tables.sourceFp(s"$dir/documents.parquet"), docLevel)): Unit
+
   /** Staging-key suffix for artifacts whose CONTENT depends on the gate
-    * (rep-level vs doc-level pair tables): a force/auto A/B within one
+    * (rep-level vs doc-level pair tables): a pinned/auto A/B within one
     * session must never read the other path's staged parquet. */
   private def pathTag(s: SparkSession, dir: String): String =
     if (docLevelPath(s, dir)) "doc" else "rep"
 
+  /** (doc_id, rep): rep = min doc_id among EXACT-text duplicates (md5
+    * of the raw text — byte equality, so shingle sets are identical by
+    * construction). The collapse key for cluster-resolution queries:
+    * on a re-crawl-shaped corpus most duplication is exact, and the
+    * shingle self-join over k exact copies does k² of the work one
+    * representative does. */
   private def exactRepMap(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|exactreps") {
+    Staged(s, s"$dir|exactreps") {
       val fp = Tables.documents(s, dir)
         .select(col("doc_id"), md5(col("text")).as("fpx"))
       fp.join(fp.groupBy("fpx").agg(min("doc_id").as("rep")), "fpx")
@@ -595,7 +588,7 @@ object Dedup {
     * rows. Reuses the staged full-corpus shingle index (filtered, not
     * re-tokenized). */
   private def neardupRepEdges(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|repedges") {
+    Staged(s, s"$dir|repedges") {
       val reps = exactRepMap(s, dir)
         .filter(col("doc_id") === col("rep")).select("doc_id")
       sharedCounts(stagedShingles(s, dir).join(reps, "doc_id"))
@@ -997,14 +990,6 @@ object Dedup {
 
   // ---------------------------------------------------------------------
 
-  /** Materialize the shingle index once per (session, sf dir) and read it
-    * back from parquet: the dedup plans reference the index up to 5 times
-    * (bands ×2, inverted-index join ×2, counts), and lazy re-evaluation
-    * of the tokenize+window pipeline dominated their cost. This is the
-    * local analogue of checkpointing the inverted index before LSH at
-    * cluster scale. */
-  private def staged(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    graft.core.Staged(s, key)(build)
   /** The documents scan fanned out to full parallelism for the ROW-LOCAL
     * staged derivations (shingles / simhash / winnow / grams): those
     * builds are narrow by design, so they inherit the SCAN's split
@@ -1019,14 +1004,20 @@ object Dedup {
   private def docsParallel(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+  /** Materialize the shingle index once per (session, sf dir) and read it
+    * back from parquet: the dedup plans reference the index up to 5 times
+    * (bands ×2, inverted-index join ×2, counts), and lazy re-evaluation
+    * of the tokenize+window pipeline dominated their cost. This is the
+    * local analogue of checkpointing the inverted index before LSH at
+    * cluster scale. */
   def stagedShingles(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir)(shingles(docsParallel(s, dir)))
+    Staged(s, dir)(shingles(docsParallel(s, dir)))
   /** Simhash fingerprints staged too: the banded-pair query references
     * the fingerprint table THREE times (band explode + two verify
     * joins), and each reference re-ran the 32-conditional-sum aggregate
     * over every token. */
   def stagedSimhash(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|simhash")(simhash32(docsParallel(s, dir)))
+    Staged(s, s"$dir|simhash")(simhash32(docsParallel(s, dir)))
 
   /** Banded simhash near-dup pairs (hamming ≤ 3): split the 32-bit
     * fingerprint into 4 byte-blocks; by pigeonhole any pair within
@@ -1072,7 +1063,7 @@ object Dedup {
     * signature table on both sides — unstaged, that is 2x16 md5 hashes
     * per shingle instead of 1x16. */
   def stagedMinhashSigs(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|minhash")(minhashSignature(stagedShingles(s, dir)))
+    Staged(s, s"$dir|minhash")(minhashSignature(stagedShingles(s, dir)))
   /** Substring-window fingerprints staged: dedup_substring_spans
     * references the grams table twice (corpus-wide occ groupBy + the
     * probe side of the join back), and the up-to-8192-windows-per-doc
@@ -1090,12 +1081,11 @@ object Dedup {
     * through [[exactRepMap]] afterwards — the only dup²-sized rows that
     * ever exist are the qualifying output pairs themselves. */
   def stagedCappedSharedReps(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|cappedrepshared|prop|${pathTag(s, dir)}") {
+    Staged(s, s"$dir|cappedrepshared|prop|${pathTag(s, dir)}") {
       val sh = stagedShingles(s, dir)
       val dfTab = stagedShingleDf(s, dir)
       val shR = stagedShinglesReps(s, dir)
-      withStageBudget(
-        cappedRepPairs(shR, sh, dfTab),
+      withBudget(StageBudget, cappedRepPairs(shR, sh, dfTab),
         cappedVolumeBound(sh, dfTab, shR), "stagedCappedSharedReps")
     }
   /** Per-representative group stats staged beside the rep pairs:
@@ -1103,7 +1093,7 @@ object Dedup {
     * full-corpus-rare shingle — the uncollapsed candidacy rule for a
     * group's INTERNAL pairs). One row per distinct text. */
   def stagedRepStats(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|repstats|prop") {
+    Staged(s, s"$dir|repstats|prop") {
       val nMem = exactRepMap(s, dir)
         .groupBy("rep").agg(count(lit(1)).as("n_mem"))
       val rare = stagedShinglesReps(s, dir)
@@ -1126,7 +1116,7 @@ object Dedup {
     // identity rep map ⇒ the restriction is the whole index: skip the
     // semi-join AND the second staged copy of the full shingle table
     if (docLevelPath(s, dir)) stagedShingles(s, dir)
-    else staged(s, s"$dir|shinglesR")(
+    else Staged(s, s"$dir|shinglesR")(
       stagedShingles(s, dir).join(
         exactRepMap(s, dir).filter(col("doc_id") === col("rep"))
           .select("doc_id"),
@@ -1136,7 +1126,7 @@ object Dedup {
     * budget aggregates it a third time — unstaged, each reference
     * re-shuffles the full posting stream. */
   def stagedShingleDf(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|shingledf")(
+    Staged(s, s"$dir|shingledf")(
       stagedShingles(s, dir).groupBy("shingle").agg(count(lit(1)).as("df")))
   /** Exact slot volume of the COLLAPSED staging build's rare self-join
     * WITHOUT running it: Σ over full-corpus-rare (df <= cap) shingles of
@@ -1162,23 +1152,55 @@ object Dedup {
       .agg(coalesce(sum(when(col("df") <= col("cap"),
         expr("(df_r * (df_r - 1)) div 2")).otherwise(0L)), lit(0L)).as("pair_est"))
   }
-  /** In-plan WORK budget for the capped staging build — the intermediate
-    * twin of [[withPairBudget]] (which bounds OUTPUT cardinality, not
-    * join memory/work — the round-9 30x OOM hit the intermediate, which
-    * an output budget cannot see). The rare self-join's slot volume is
+  /** One budget: its conf key, default, what the 1-row estimate
+    * measures, and where to go instead when it is exceeded. */
+  private final case class Budget(key: String, default: Long, volume: String, advice: String)
+
+  /** WORK budget for the capped staging build — the intermediate twin of
+    * [[PairBudget]] (which bounds OUTPUT cardinality, not join
+    * memory/work — the round-9 30x OOM hit the intermediate, which an
+    * output budget cannot see). The rare self-join's slot volume is
     * known exactly from the df table before any pair is generated; past
     * `graft.stage.budget` (default 10^10 — a time bound, not a heap
     * bound, now that the slot stream is map-side-combined and
     * spillable) the staging build raise_errors and points at the
     * lossless prefix path, whose candidate volume does not carry the
     * df² factor. */
-  private def withStageBudget(out: DataFrame, est: DataFrame,
-                              what: String): DataFrame = {
-    val budget = out.sparkSession.conf.get("graft.stage.budget", "10000000000").toLong
+  private val StageBudget = Budget("graft.stage.budget", 10000000000L,
+    "staging self-join work volume",
+    "use the lossless prefix path (dedup_ngram_jaccard_prefix) or raise the budget")
+
+  /** Output-cardinality guard for the PAIR-EMITTING diagnostics
+    * (`dedup_simhash_pairs`, `dedup_containment`). Their output is
+    * Θ(dup²) on k-way duplicate cliques — fine as small-corpus
+    * diagnostics, an output bottleneck on a re-crawl-shaped 100 TB
+    * corpus — and each has an O(docs) supersession
+    * (`dedup_simhash_clusters`, `dedup_containment_topk`). The guard
+    * makes the pair forms impossible to run BLIND at scale: a cheap
+    * pre-aggregate estimates the pair cardinality, and the query
+    * raise_errors when the estimate exceeds `graft.pairs.budget`
+    * (default 10⁹). Deliberately an explicit escape hatch: an operator
+    * who has sized the run raises the budget in one conf. Within budget
+    * the guarded DataFrame passes through untouched, so shipped-SF
+    * oracles are unchanged.
+    *
+    * SCOPE: this bounds the OUTPUT cardinality only — it cannot see the
+    * memory/work of the joins that PRODUCE the pairs (the round-9 30x
+    * OOM was an intermediate, hit before any output row existed).
+    * Intermediate volume is guarded separately at its source:
+    * [[StageBudget]] on the capped staging build. */
+  private val PairBudget = Budget("graft.pairs.budget", 1000000000L,
+    "estimated pair output",
+    "use the O(docs) twin (dedup_simhash_clusters / dedup_containment_topk) or raise the budget")
+
+  /** Refuse `out` when the 1-row `est` (column `pair_est`) exceeds the
+    * budget `b`; otherwise return `out` untouched. */
+  private def withBudget(b: Budget, out: DataFrame, est: DataFrame, what: String): DataFrame = {
+    val budget = out.sparkSession.conf.get(b.key, b.default.toString).toLong
     // The guard is evaluated EAGERLY on the 1-row estimate (a bounded
     // driver-side head(), the allowed pattern) BEFORE the guarded plan
     // is ever scheduled. The earlier in-plan form — raise_error wired
-    // into the output projection — only fired once the self-join
+    // into the output projection — only fired once the guarded plan
     // produced its first output row, i.e. AFTER the map stage had
     // already performed the work the budget exists to refuse (it looked
     // preemptive in the 100x soak only because the collapsed rep-level
@@ -1187,9 +1209,8 @@ object Dedup {
     est.select(
       when(col("pair_est") <= budget, col("pair_est"))
         .otherwise(raise_error(concat(
-          lit(s"$what: staging self-join work volume "), col("pair_est").cast("string"),
-          lit(s" exceeds graft.stage.budget=$budget - use the lossless prefix " +
-            "path (dedup_ngram_jaccard_prefix) or raise the budget")))
+          lit(s"$what: ${b.volume} "), col("pair_est").cast("string"),
+          lit(s" exceeds ${b.key}=$budget - ${b.advice}")))
           .cast("long"))).head(): Unit
     out
   }
@@ -1200,7 +1221,7 @@ object Dedup {
     * self-join + distinct. At cluster scale this is the "write the
     * candidate list before verification" step every LSH pipeline has. */
   def stagedLshCandidates(s: SparkSession, dir: String, b: Int, r: Int): DataFrame =
-    staged(s, s"$dir|lshcand|${b}x$r") {
+    Staged(s, s"$dir|lshcand|${b}x$r") {
       val bands = lshBandsCfg(stagedMinhashSigs(s, dir), b, r)
       bands.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
         .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("sig")),
@@ -1217,8 +1238,8 @@ object Dedup {
     * exact verify. Rep-level minhash sigs are staged beneath it, shared
     * across the three configs. */
   def stagedLshCandidatesReps(s: SparkSession, dir: String, b: Int, r: Int): DataFrame =
-    staged(s, s"$dir|lshcandR|${b}x$r") {
-      val sigsR = staged(s, s"$dir|minhashR")(
+    Staged(s, s"$dir|lshcandR|${b}x$r") {
+      val sigsR = Staged(s, s"$dir|minhashR")(
         minhashSignature(stagedShinglesReps(s, dir)))
       val bands = lshBandsCfg(sigsR, b, r)
       bands.select(col("doc_id").as("ra"), col("band"), col("sig"))
@@ -1231,7 +1252,7 @@ object Dedup {
     * window minima (the doc_winnow_fingerprints derivation). Staged:
     * the per-doc profile reads it once, the cross-doc pair join twice. */
   def stagedWinnowFps(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|winnowfps")(winnowFpsRowLocal(docsParallel(s, dir)))
+    Staged(s, s"$dir|winnowfps")(winnowFpsRowLocal(docsParallel(s, dir)))
 
   /** ROW-LOCAL winnowing (codegen kernel): the window rendition below
     * shuffled up to 8,192 rows per doc through a (doc_id, pos) window
@@ -1264,7 +1285,7 @@ object Dedup {
   }
 
   def stagedGrams(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"$dir|grams|$SubstrLen") {
+    Staged(s, s"$dir|grams|$SubstrLen") {
       val L = SubstrLen
       // 8192-position fan-out cap — NOT silent: corpus_cap_report counts
       // the docs and positions it truncates, and every consumer's oracle
@@ -1281,43 +1302,6 @@ object Dedup {
         .select(col("doc_id"),
           explode(graft.functions.GramHashes(col("text"), L, 8192)).as("hg"))
     }
-
-  /** In-plan output-cardinality guard for the PAIR-EMITTING diagnostics
-    * (`dedup_simhash_pairs`, `dedup_containment`). Their output is
-    * Θ(dup²) on k-way duplicate cliques — fine as small-corpus
-    * diagnostics, an output bottleneck on a re-crawl-shaped 100 TB
-    * corpus — and each has an O(docs) supersession
-    * (`dedup_simhash_clusters`, `dedup_containment_topk`). The guard
-    * makes the pair forms impossible to run BLIND at scale: a cheap
-    * pre-aggregate estimates the pair cardinality, and the output
-    * raise_errors when the estimate exceeds `graft.pairs.budget`
-    * (default 10⁹) — the same in-plan-guard pattern as ann_ivf_upsert's
-    * seed-coverage check. Deliberately an explicit escape hatch: an
-    * operator who has sized the run raises the budget in one conf.
-    * When the estimate is within budget the wrapped column passes
-    * through untouched, so shipped-SF oracles are unchanged.
-    *
-    * SCOPE: this bounds the OUTPUT cardinality only — it cannot see the
-    * memory/work of the joins that PRODUCE the pairs (the round-9 30x
-    * OOM was an intermediate, hit before any output row existed).
-    * Intermediate volume is guarded separately at its source:
-    * [[withStageBudget]] on the capped staging build. */
-  private def withPairBudget(out: DataFrame, est: DataFrame,
-                             query: String): DataFrame = {
-    val budget = out.sparkSession.conf.get("graft.pairs.budget", "1000000000").toLong
-    // Eager 1-row guard, same rationale as [[withStageBudget]]: the
-    // budget must refuse BEFORE the expansion/join is scheduled, and an
-    // output-projection raise_error cannot fire until the guarded plan
-    // has already produced a row.
-    est.select(
-      when(col("pair_est") <= budget, col("pair_est"))
-        .otherwise(raise_error(concat(
-          lit(s"$query: estimated pair output "), col("pair_est").cast("string"),
-          lit(s" exceeds graft.pairs.budget=$budget - use the O(docs) twin " +
-            "(dedup_simhash_clusters / dedup_containment_topk) or raise the budget")))
-          .cast("long"))).head(): Unit
-    out
-  }
 
   /** Upper bound on the banded simhash pair count WITHOUT running the
     * pair join: Σ over (band, value) buckets of n·(n-1)/2 — the
@@ -1471,8 +1455,8 @@ object Dedup {
       val batch = docs.filter(col("source").isin(batchSrcs: _*))
         .select(col("doc_id"), col("source"),
           TextAnalysis.fingerprint(col("text")).as("fingerprint"))
-      val bloom = graft.functions.Bloom.stagedBytes(
-        s, s"$dir|bloom|corpusfp", corpus, col("fingerprint"), 1L << 17)
+      val bloom = graft.functions.Bloom.memoBytes(
+        s, s"$dir|corpusfp", corpus, col("fingerprint"), 1L << 17)
       val definitelyNew = batch.filter(!graft.functions.Bloom.mightContain(bloom, col("fingerprint")))
       val confirmedNew = batch.filter(graft.functions.Bloom.mightContain(bloom, col("fingerprint")))
         .join(corpus, Seq("fingerprint"), "left_anti")
@@ -1559,7 +1543,7 @@ object Dedup {
     "dedup_ngram_jaccard_prefix" -> ((s, dir) => {
       val t = 0.5
       val shR = stagedShinglesReps(s, dir)
-      val candR = staged(s, s"$dir|prefixcandR|$t|${pathTag(s, dir)}")(
+      val candR = Staged(s, s"$dir|prefixcandR|$t|${pathTag(s, dir)}")(
         pairsSharing(prefixes(shR, t), t).distinct())
       val repPairs = jaccardBySetsTiered(candR, shR, t)
         .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
@@ -1717,7 +1701,7 @@ object Dedup {
         val pairs = qual.select(col("sra").as("src_doc"),
             col("srb").as("dst_doc"), col("containment"))
           .orderBy("src_doc", "dst_doc")
-        withPairBudget(pairs,
+        withBudget(PairBudget, pairs,
           qual.agg(count(lit(1)).as("pair_est")), "dedup_containment")
       } else {
         val mem = exactRepMap(s, dir)
@@ -1745,7 +1729,7 @@ object Dedup {
           .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("ce"))
         val withinEst = stats.filter(col("has_rare"))
           .agg(coalesce(sum(col("n_mem") * (col("n_mem") - 1)), lit(0L)).as("we"))
-        withPairBudget(pairs,
+        withBudget(PairBudget, pairs,
           crossEst.crossJoin(withinEst).select((col("ce") + col("we")).as("pair_est")),
           "dedup_containment")
       }
@@ -1897,7 +1881,7 @@ object Dedup {
     // dedup_simhash_clusters below is the O(docs) form for
     // re-crawl-shaped corpora.
     "dedup_simhash_pairs" -> ((s, dir) =>
-      withPairBudget(simhashPairs(s, dir).orderBy("doc_a", "doc_b"),
+      withBudget(PairBudget, simhashPairs(s, dir).orderBy("doc_a", "doc_b"),
         simhashPairBound(s, dir), "dedup_simhash_pairs")),
 
     // The O(docs) resolution of the simhash graph — the shape that

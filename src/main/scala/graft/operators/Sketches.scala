@@ -106,8 +106,8 @@ object Sketches {
       val dim = Tables.customer(s, dir)
         .filter(col("c_acctbal") < 0)
         .select(col("c_custkey"))
-      val bloom = graft.functions.Bloom.stagedBytes(
-        s, s"$dir|bloom|negcust", dim, col("c_custkey"), 1L << 17)
+      val bloom = graft.functions.Bloom.memoBytes(
+        s, s"$dir|negcust", dim, col("c_custkey"), 1L << 17)
       Tables.orders(s, dir)
         .filter(graft.functions.Bloom.mightContain(bloom, col("o_custkey")))
         .join(dim, col("o_custkey") === col("c_custkey"), "left_semi")

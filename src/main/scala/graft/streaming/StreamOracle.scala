@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Artifacts, Staged, Tables}
+import graft.core.{Artifacts, Sessions, Staged, Tables}
 
 /** Oracle-registered streaming twins: each query stages its input as a
   * MULTI-FILE directory, replays it through the real Structured
@@ -46,19 +46,14 @@ object StreamOracle {
     * unreachable by name and freed only at session death. By the time
     * the SAME query is re-invoked, its previous result has been
     * materialized by the caller, so the previous view is safe to drop.
-    * The previous name lives in the SESSION-scoped runtime conf rather
-    * than a global map: identityHashCode keys can collide across
-    * sessions (a collision would silently skip the drop) and a global
-    * map retains entries for dead sessions forever — conf state is
-    * per-session by construction and dies with it. */
-  private def freshSink(s: SparkSession, prefix: String): String = {
-    val name = uniq(prefix)
-    val key = s"graft.stream.lastsink.$prefix"
-    s.conf.getOption(key)
-      .foreach(prev => try { s.catalog.dropTempView(prev); () } catch { case _: Throwable => () })
-    s.conf.set(key, name)
-    name
-  }
+    * The previous name lives in [[Sessions.memo]], per session; its
+    * validity check drops that view and rejects it, so every call mints
+    * a fresh name. */
+  private def freshSink(s: SparkSession, prefix: String): String =
+    Sessions.memo(s, s"lastsink|$prefix") { (prev: String) =>
+      try { s.catalog.dropTempView(prev); () } catch { case _: Throwable => () }
+      false
+    }(uniq(prefix))
 
   /** Micro-batch count for a replay: SCALE-ADAPTIVE instead of the
     * former constant 4. One micro-batch per ~4 MB of source bytes

@@ -98,6 +98,24 @@ class AnnIndexSpec extends SparkSpec {
     orig.unpersist()
   }
 
+  test("an in-place corpus rewrite resolves ensureFull to a new store in the same session") {
+    // the memoized fingerprint must notice the rewrite: serving the old
+    // corpus's trained index for the new vectors is the stale-store bug
+    val d3 = Files.createTempDirectory("graft-annidx-corpus3").toString
+    val orig = spark.read.parquet(s"$tds/embeddings.parquet").cache()
+    orig.count() // pin rows before the dir is overwritten below
+    orig.write.mode("overwrite").parquet(s"$d3/embeddings.parquet")
+    val base1 = AnnIndex.ensureFull(spark, d3)
+    orig.withColumn("embedding",
+        expr("transform(embedding, x -> CAST(-x AS FLOAT))"))
+      .write.mode("overwrite").parquet(s"$d3/embeddings.parquet")
+    val base2 = AnnIndex.ensureFull(spark, d3)
+    assert(base1 != base2, "a rewritten corpus must resolve to its own store")
+    assert(VersionedStore.listVersions(s"$base2/assign") == Seq(1L),
+      "the new store is trained on first use")
+    orig.unpersist()
+  }
+
   test("persisted upsert lands v2 idempotently and matches the unpersisted twin") {
     val r1 = run("ann_ivf_persisted_upsert")
     val base = AnnIndex.ensureBase80(spark, tds)

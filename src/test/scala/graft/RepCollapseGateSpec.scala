@@ -25,9 +25,13 @@ class RepCollapseGateSpec extends SparkSpec {
     gatedQueries.map(n =>
       n -> SparkEntry.queries(n)(spark, dir).collect().map(_.toString).sorted.toSeq).toMap
 
-  private def withConf(mode: String)(body: => Map[String, Seq[String]]): Map[String, Seq[String]] = {
-    spark.conf.set("graft.dedup.repcollapse", mode)
-    try body finally spark.conf.unset("graft.dedup.repcollapse")
+  /** Run `body` with the gate pinned to one path on `dir`, then restore
+    * the corpus's own decision. */
+  private def pinned(dir: String, docLevel: Boolean)(
+      body: => Map[String, Seq[String]]): Map[String, Seq[String]] = {
+    val auto = Dedup.docLevelPath(spark, dir)
+    Dedup.pinDocLevel(spark, dir, docLevel)
+    try body finally Dedup.pinDocLevel(spark, dir, auto)
   }
 
   /** 12 distinct 6-token base texts, 5 of them with a 7-token near-dup
@@ -57,7 +61,7 @@ class RepCollapseGateSpec extends SparkSpec {
 
   test("dup-free corpus: auto (doc-level) output equals the forced rep path, all gated queries") {
     val auto = collectAll(sf0001) // gate → doc level
-    val forced = withConf("force")(collectAll(sf0001))
+    val forced = pinned(sf0001, docLevel = false)(collectAll(sf0001))
     for (n <- gatedQueries)
       assert(auto(n) === forced(n), s"$n drifted between doc-level and rep paths on sf0.001")
     // non-vacuous: the capped family must actually report pairs here
@@ -66,7 +70,7 @@ class RepCollapseGateSpec extends SparkSpec {
 
   test("duplicate-heavy corpus: auto (rep) output equals the pinned doc-level path, all gated queries") {
     val auto = collectAll(dupDir) // gate → rep level
-    val doc = withConf("off")(collectAll(dupDir))
+    val doc = pinned(dupDir, docLevel = true)(collectAll(dupDir))
     for (n <- gatedQueries)
       assert(auto(n) === doc(n), s"$n drifted between rep and doc-level paths on the dup fixture")
     // non-vacuous: within-group (J = 1) AND cross-group (J = 0.8) pairs both present
