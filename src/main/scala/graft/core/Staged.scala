@@ -39,9 +39,18 @@ object Staged {
     java.nio.file.Files.exists(java.nio.file.Paths.get(d, Marker))
 
   /** Build-once, read-many: materialize `build` to a temp parquet dir on
-    * first use of (session, key) and return a reader over it. */
-  def apply(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(materialize(s, key)(d => build.write.mode("overwrite").parquet(d)))
+    * first use of (session, key) and return a reader over it. The dir's
+    * schema is inferred once and memoized with it: parquet schema
+    * inference runs a Spark job, which every later reader would
+    * otherwise pay while its query is being built. Each call still
+    * returns a fresh reader, so two reads of one stage self-join cleanly. */
+  def apply(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+    val d = materialize(s, key)(d => build.write.mode("overwrite").parquet(d))
+    val schema = Sessions.memo(s, s"stageschema|$key")(
+      (e: (String, org.apache.spark.sql.types.StructType)) => e._1 == d)(
+      (d, s.read.parquet(d).schema))._2
+    s.read.schema(schema).parquet(d)
+  }
 
   /** Generalized build-once: hand `build` a fresh temp dir on first use of
     * (session, key) and return that dir ever after — for stagings that are

@@ -25,8 +25,8 @@ sealed trait CheckpointStrategy {
     * action on the returned frame. An eager [[cut]] runs one job to
     * persist the round's state and the loop's convergence check runs a
     * second over the persisted blocks; when the caller's very next step
-    * IS an action on the cut frame (the per-round `count` of every CC
-    * loop), the lazy form folds both into one job — one fewer
+    * IS an action on the cut frame (the per-round `count` of the star
+    * CC loop), the lazy form folds both into one job — one fewer
     * job-scheduling round trip per iteration, which on a
     * many-tiny-round loop is the dominant cost. Callers that do NOT
     * immediately act on the frame must keep using [[cut]]: an

@@ -626,256 +626,107 @@ object Dedup {
         coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
   }
 
-  /** Connected components over an undirected edge list (doc_a, doc_b) by
-    * iterative min-label propagation: every node starts labeled with its
-    * own id; each round every node takes the min of its label and its
-    * neighbors' labels; fixpoint = each node labeled with the smallest
-    * id in its component. Rounds needed ≤ graph diameter — duplicate
-    * clusters are shallow, so this converges in a handful of rounds.
-    * Each round cuts its lineage via the [[CheckpointStrategy]] (the
-    * classic iterative-algorithm trap: an uncut plan doubles per
-    * iteration) — Local for single-node runs; Reliable(dir) on a real
-    * cluster, where localCheckpoint's non-replicated blocks would die
-    * with a lost executor mid-loop and kill the job. This is the
-    * cluster-resolution step a dedup pipeline needs between near-dup
-    * PAIR detection and choosing one canonical doc per duplicate group.
-    */
-  def connectedComponents(edges: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local,
-      jump: Boolean = false): DataFrame =
-    connectedComponentsCapped(edges, ckpt, Int.MaxValue, jump).labels
-
-  /** Min-label propagation bounded at `maxRounds`: returns the (possibly
-    * partial) labels plus whether the loop actually converged. A partial
-    * label is still a CONNECTIVITY WITNESS — node u's label is the min id
-    * within distance `rounds` of u, a node u is connected to through the
-    * propagation path — which is what lets [[connectedComponentsAuto]]
-    * contract by partial labels and hand the remainder to the star
-    * rounds without changing the final partition. */
-  /** Result of the capped loop: labels (partial or converged), whether
-    * the loop converged, and the node count (so callers — Auto's
-    * contraction — reuse the already-paid count for their own broadcast
-    * gating instead of re-counting). */
-  private[graft] case class CcRun(labels: DataFrame, converged: Boolean, nNodes: Long)
-
-  /** Edge-frame partition count for the round loops: the symmetrized
-    * edge list is built by a NARROW union (no exchange), so it inherits
-    * 2x the source's split count — at sf0.1 that was 64 partitions of a
-    * few KB each, and every round's map-side stage paid 64 tasks of
-    * scheduling latency for microseconds of work (guide §2.2: fewer,
-    * larger partitions). Derive the count from the optimizer's size
-    * estimate for the edge plan (accurate for parquet-backed staged
-    * inputs; Long.MaxValue for un-stat'd LogicalRDD leaves, which
-    * safely degrades to the parallelism cap): one partition per
-    * ~4 MB, clamped to [1, defaultParallelism]. Scale-honest by
-    * construction — a corpus big enough to need parallelism gets it back
-    * from the bytes term. */
-  private def edgeParts(edges: DataFrame): Int = {
-    val s = edges.sparkSession
-    val est = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    val byBytes = (est * 2 / (4L << 20)).min(BigInt(Int.MaxValue)).toLong + 1
-    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong, byBytes)).toInt
-  }
-
-  private[graft] def connectedComponentsCapped(edges: DataFrame,
-      ckpt: CheckpointStrategy, maxRounds: Int,
-      jump: Boolean = false): CcRun = {
-    // LAZY cuts throughout the loop: every cut frame's very next step is
-    // an action that materializes it (the per-round changed-count; sym
-    // and the seed labels ride round 1's job), so the eager form's
-    // dedicated persist job per round was pure scheduling overhead —
-    // measured ~half the rounds' wall on the sf0.1 CC-bound queries,
-    // whose stages are 1-2 tiny tasks each.
-    //
-    // jump=true adds POINTER JUMPING (label(label(u)) as a third min
-    // term — the classic hash-to-min acceleration): label coverage
-    // roughly doubles per round, so convergence needs O(log d) rounds
-    // instead of O(d). One extra self-join per round buys it, so the
-    // plain form stays the default for graphs known to be shallow
-    // (near-dup cliques converge in 2-3 rounds either way; the r12
-    // simhash rep graph at sf0.1 has d≈13 and went 13 → 5 rounds).
-    // Invariants the adaptive contraction relies on are preserved: a
-    // node's label is always the id of a CONNECTED node (neighbor's
-    // label and label's label are both in the component), labels only
-    // decrease, and the component minimum keeps labeling itself.
-    val sym = ckpt.cutLazy(
-      edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .coalesce(edgeParts(edges)))
-    // Seed labels at min(self, min(neighbors)) instead of self: the same
-    // groupBy exchange the old distinct() paid now also performs what
-    // round 1 of the plain loop would compute, so every graph converges
-    // exactly one round earlier. Invariants unchanged: the seed label is
-    // the id of a node in the closed neighborhood (connected, <= self),
-    // and the fixpoint — component min everywhere — is the same.
-    var cut = ckpt.cut(
-      sym.groupBy("src").agg(min(col("dst")).as("mn"))
-        .select(col("src").as("doc"), least(col("mn"), col("src")).as("label")))
-    // SIZE-GATED BROADCAST ROUNDS (guide §3.1, pick the join strategy
-    // deliberately): the label table is exactly one row per node and the
-    // round joins key on it twice; below the gate, broadcasting it (and
-    // the per-round neighbor-min, ≤ nodes rows) leaves only the
-    // neighbor-min groupBy as a per-round exchange — the checkpointed
-    // frames are LogicalRDD leaves whose stats Catalyst/AQE cannot see,
-    // so without the explicit hint every round pays full shuffle joins
-    // regardless of actual size. The node count rides the seed cut's
-    // (now eager) materialization job. Above the gate nothing changes:
-    // labels at real scale are not broadcastable.
-    val nNodes = cut.count()
-    val bcastGate = nNodes <= broadcastNodes(edges)
-    def maybeB(df: DataFrame): DataFrame = if (bcastGate) broadcast(df) else df
-    var labels = cut
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      val nbrMin = sym
-        .join(maybeB(labels.select(col("doc").as("dst"), col("label").as("dst_label"))), "dst")
-        .groupBy(col("src").as("doc"))
-        .agg(min(col("dst_label")).as("nbr_min"))
-      val stepped =
-        if (!jump) labels.join(maybeB(nbrMin), Seq("doc"), "left")
-          .select(col("doc"), col("label").as("old_label"),
-            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        else labels
-          .join(maybeB(nbrMin), Seq("doc"), "left")
-          // label(label(u)): every label value is a node id present in
-          // `labels` (it starts as self and only ever takes other nodes'
-          // labels), so the jump join is inner-complete; left-join keeps
-          // the plan robust to a release/rebuild race anyway
-          .join(maybeB(labels.select(col("doc").as("jdoc"), col("label").as("jump_label"))),
-            col("label") === col("jdoc"), "left")
-          .select(col("doc"), col("label").as("old_label"),
-            least(
-              least(col("label"), coalesce(col("nbr_min"), col("label"))),
-              coalesce(col("jump_label"), col("label"))).as("label"))
-      // carry old + new label in ONE cut frame: the change count reads
-      // the checkpointed result directly instead of a second join back
-      // against the previous labels (one exchange per round saved)
-      val next = ckpt.cutLazy(stepped)
-      changed = next.filter(col("label") =!= col("old_label")).count()
-      ckpt.release(cut) // round k-1's blocks are dead once round k is cut
-      cut = next
-      labels = next.select(col("doc"), col("label"))
-      rounds += 1
-    }
-    ckpt.release(sym) // the final labels frame is checkpointed on its own
-    ccLog(edges, s"minlabel jump=$jump bcast=$bcastGate rounds=$rounds converged=${changed == 0}")
-    CcRun(labels.select(col("doc").as("doc_id"), col("label").as("cluster_id")),
-      changed == 0, nNodes)
-  }
-
-  /** Stderr round-count trace for CC A/B probes (`graft.cc.log=true`):
-    * the round count is the cost driver of every CC variant and is
-    * invisible in stage listings once AQE folds the tiny stages. */
-  private def ccLog(df: DataFrame, msg: String): Unit =
-    if (df.sparkSession.conf.get("graft.cc.log", "false") == "true")
-      System.err.println(s"CC: $msg")
-
-  /** Broadcast gate for CC round joins: one row per node ≈ 24 bytes of
-    * broadcast relation, so the 1M default stays ~25 MB — comfortably
-    * inside guide §3.1's "a few hundred MB is fine" band with margin for
-    * the per-executor copies. Conf-able for cluster-specific tuning
-    * (`graft.cc.broadcastNodes`); at 100 TB corpus scale the node count
-    * exceeds any sane setting and the loops keep their shuffle joins. */
-  private def broadcastNodes(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.cc.broadcastNodes", "1000000").toLong
-
-  /** ADAPTIVE connected components — min-label rounds up to a small cap,
-    * then (only if not yet converged) large-star/small-star on the
-    * label-CONTRACTED graph. Self-gating by construction instead of a
-    * predictive shape statistic: a shallow graph (the dedup norm —
-    * near-dup clusters are transitively tight) converges inside the cap
-    * and pays exactly the min-label cost (1 shuffle + 1 count per round;
-    * the star loop's ~4 jobs/round scheduling latency never starts),
-    * while a deep graph (web link chains, reference paths) pays `cap`
-    * cheap rounds and hands star a graph whose distance-≤cap
-    * neighborhoods are already merged — asymptotically the same
-    * O(log² n) rounds as pure star.
+  /** Connected components over an undirected edge list (doc_a, doc_b):
+    * every node of an edge is labeled with the smallest id in its
+    * component, as (doc_id, cluster_id). This is the cluster-resolution
+    * step a dedup pipeline needs between near-dup PAIR detection and
+    * choosing one canonical doc per duplicate group.
     *
-    * Correctness of the contraction: nodes sharing a partial min-label
-    * are connected (both reach the label node through the propagation
-    * path), so collapsing label classes to single nodes preserves the
-    * component partition; and because every partial label is the MIN id
-    * of its class, the star fixpoint's min over class labels is the
-    * component's global min doc id — identical output to either pure
-    * variant (CcStarSpec pins all three on random graphs and on a
-    * 512-node path). */
-  def connectedComponentsAuto(edges: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local,
-      minLabelCap: Int = 0): DataFrame = {
-    // cap 0 = the default of 6, measured at sf0.1: the simhash rep graph
-    // converges inside it (see OPTIMIZATION_r12.md), and a deep graph
-    // pays 6 one-action rounds before the star fallback
-    val cap = if (minLabelCap > 0) minLabelCap else 6
-    // jump=true: the capped phase covers distance ~2^cap instead of
-    // ~cap, so real corpora converge inside the cap and the star
-    // fallback is reserved for genuinely path-like graphs
-    val run = connectedComponentsCapped(edges, ckpt, cap, jump = true)
-    if (run.converged) run.labels
-    else {
-      // The capped loop's final labels frame is ALREADY backed by a live
-      // checkpoint (the loop's last cut frame, never released) — re-cutting
-      // it here was a redundant full materialization job (measured ~0.25 s
-      // of 32 tiny tasks at sf0.1) for a frame that is a pure projection
-      // of checkpointed blocks.
-      val partial = run.labels
-      // Same size-gated broadcast as the round joins (guide §3.1): partial
-      // is a LogicalRDD projection whose stats Catalyst cannot see, so
-      // without the hint BOTH contraction joins ran as full shuffle joins
-      // — the single most expensive step of the post-cap path at sf0.1.
-      // The gate reuses the node count the loop already paid for.
-      val bcastGate = run.nNodes <= broadcastNodes(edges)
-      def maybeB(df: DataFrame): DataFrame = if (bcastGate) broadcast(df) else df
-      val contracted = ckpt.cutLazy(edges
-        .join(maybeB(partial.select(col("doc_id").as("doc_a"), col("cluster_id").as("la"))), "doc_a")
-        .join(maybeB(partial.select(col("doc_id").as("doc_b"), col("cluster_id").as("lb"))), "doc_b")
-        .select(col("la").as("doc_a"), col("lb").as("doc_b"))
-        .filter(col("doc_a") =!= col("doc_b")))
-      // The cap very often lands EXACTLY at the partition fixpoint with
-      // only the convergence-confirming round outstanding: every edge is
-      // then label-internal, the contracted graph is EMPTY, and each
-      // label class is an edge-closed connected set = one whole
-      // component labeled by its min (the min always labels itself).
-      // Short-circuiting here skips star's init/fixpoint/final-labels
-      // stages AND the label re-attach join — the isEmpty probe
-      // materializes the cut contraction that star would have paid for
-      // anyway.
-      if (contracted.isEmpty) {
-        ckpt.release(contracted)
-        partial
-      } else {
-        val superLabels = connectedComponentsStar(contracted, ckpt)
-          .select(col("cluster_id").as("super_id"), col("doc_id").as("partial_label"))
-        // star has materialized its own cut of the contracted edges by
-        // the time it returns (its fixpoint loop is eager), so the
-        // contraction's blocks are dead here
-        ckpt.release(contracted)
-        // partial stays checkpointed: the returned (lazy) plan reads it, so
-        // its blocks must outlive this call — same lifetime rule as the
-        // final labels frame of the plain loop
-        partial
-          .join(maybeB(superLabels),
-            partial("cluster_id") === superLabels("partial_label"), "left")
-          .select(col("doc_id"),
-            coalesce(col("super_id"), col("cluster_id")).as("cluster_id"))
+    * The edge list is canonicalized (a < b), its lineage cut through
+    * the [[CheckpointStrategy]] (Local for single-node runs;
+    * Reliable(dir) on a real cluster, where localCheckpoint's
+    * non-replicated blocks die with a lost executor) and its edges
+    * counted — one job, and the only one construction runs below the
+    * gate. The exact count gates the algorithm; the optimizer's estimate
+    * would not do, because these edge frames come out of band
+    * self-joins whose estimate (without CBO) is the product of the
+    * children, which would send every graph to the distributed path.
+    *
+    *  - At most [[GateEdges]] edges: union-find in ONE task over the cut
+    *    (see [[unionFind]]). Any number of rounds of a distributed loop
+    *    costs a few stages of scheduling latency per round; a graph this
+    *    size fits in one task, so the result is a lazy plan with no
+    *    rounds at all.
+    *  - Above it: the large-star/small-star rounds of [[star]], bounded
+    *    at O(log² n) on every graph shape. */
+  def components(edges: DataFrame,
+      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame =
+    components(edges, ckpt, GateEdges)
+
+  /** [[components]] with the gate as a parameter — the test seam that
+    * forces the star path (and its shuffle joins) with `limit = 0`. */
+  private[graft] def components(edges: DataFrame, ckpt: CheckpointStrategy,
+      limit: Long): DataFrame = {
+    val (e, n) = cutCanonical(edges, ckpt)
+    if (n <= limit) unionFind(e) else starRounds(e, n, ckpt, limit)._1
+  }
+
+  /** The size gate, in canonical edges: below it the graph is solved in
+    * one task, and [[star]] broadcasts its per-round min tables (one row
+    * per node or star root, ~24 bytes each, so ~25 MB — inside guide
+    * §3.1's "a few hundred MB is fine" band with margin for the
+    * per-executor copies). At 100 TB corpus scale the edge count exceeds
+    * it and the rounds keep their shuffle joins. */
+  private val GateEdges = 1000000L
+
+  /** Canonical (a < b, no self-loop) edges, cut and counted in ONE job:
+    * the projection is narrow and the cut lazy, so the RDD count both
+    * materializes the cut and counts it. A distinct here, or
+    * `Dataset.count`'s aggregate, would each add an exchange, and under
+    * AQE every exchange runs as a job of its own. Duplicate edges cost
+    * union-find nothing, and star's rounds emit distinct edge sets. */
+  private def cutCanonical(edges: DataFrame, ckpt: CheckpointStrategy): (DataFrame, Long) = {
+    val e = ckpt.cutLazy(edges
+      .select(least(col("doc_a"), col("doc_b")).as("a"), greatest(col("doc_a"), col("doc_b")).as("b"))
+      .filter(col("a") =!= col("b")))
+    (e, e.rdd.count())
+  }
+
+  /** Union-find with the minimum id as root, in one task over the cut
+    * canonical edges: ids are sorted into a primitive array, so an index
+    * order is the id order and linking the larger root under the smaller
+    * keeps every root its component's minimum. The plan is lazy and the
+    * cut stays alive — the returned frame reads it, the same lifetime
+    * rule as [[star]]'s final edge set. */
+  private def unionFind(e: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val labels = e.rdd.coalesce(1)
+      .mapPartitions { rows =>
+        val a = scala.collection.mutable.ArrayBuilder.make[Long]
+        val b = scala.collection.mutable.ArrayBuilder.make[Long]
+        rows.foreach { r => a += r.getLong(0); b += r.getLong(1) }
+        val (as, bs) = (a.result(), b.result())
+        val ids = (as ++ bs).sorted.distinct
+        val parent = Array.tabulate(ids.length)(identity)
+        def find(i0: Int): Int = {
+          var i = i0
+          while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+          i
+        }
+        var k = 0
+        while (k < as.length) {
+          val ra = find(java.util.Arrays.binarySearch(ids, as(k)))
+          val rb = find(java.util.Arrays.binarySearch(ids, bs(k)))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+          k += 1
+        }
+        ids.indices.iterator.map(i => Row(ids(i), ids(find(i))))
       }
-    }
+    e.sparkSession.createDataFrame(labels, StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("cluster_id", LongType, nullable = false))))
   }
 
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR edge
     * rewriting (the MapReduce CC algorithm of Kiveris et al. 2014,
     * "Connected Components in MapReduce and Beyond" — also what
-    * GraphFrames ships): converges in O(log² n) rounds on ANY graph,
-    * vs [[connectedComponents]]'s O(diameter) min-label rounds.
-    *
-    * Duplicate clusters are shallow, so the min-label loop is the right
-    * default for dedup; this is the 100 TB path for DEEP graphs — web
-    * link graphs, long reference chains — where diameter-many
-    * synchronized rounds (each a full shuffle) is the scale killer.
-    * CcStarSpec proves both invariants: identical labels to the
-    * min-label loop on the near-dup graph, and convergence in ≤ 8
-    * rounds on a 512-node path whose diameter would force the
-    * min-label loop through 511.
+    * GraphFrames ships): converges in O(log² n) rounds on ANY graph —
+    * a 512-node path closes in ≤ 12 rounds where label propagation
+    * would need 511. [[components]] runs it above its size gate;
+    * `dedup_clusters_star` runs it at every size, so the oracle pins
+    * the distributed algorithm even where the gate never opens.
+    * Returns the labels and the round count.
     *
     * Each round rewrites the edge set toward a star per component:
     *  - large-star at u links every LARGER neighbor to
@@ -886,26 +737,23 @@ object Dedup {
     * per-round cost linear in |E|, no node-indexed state — and the
     * fixpoint is the star graph rooted at each component's minimum id.
     * Lineage is cut per round via the same [[CheckpointStrategy]]. */
-  def connectedComponentsStar(edges: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame =
-    connectedComponentsStarWithRounds(edges, ckpt)._1
+  private[graft] def star(edges: DataFrame,
+      ckpt: CheckpointStrategy = CheckpointStrategy.Local,
+      limit: Long = GateEdges): (DataFrame, Int) = {
+    val (e, n) = cutCanonical(edges, ckpt)
+    starRounds(e, n, ckpt, limit)
+  }
 
-  private[graft] def connectedComponentsStarWithRounds(edges: DataFrame,
-      ckpt: CheckpointStrategy): (DataFrame, Int) = {
-    def canon(df: DataFrame): DataFrame = df
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    // lazy cuts: the count on the next line materializes the checkpoint
-    // in the same job (see connectedComponentsCapped)
-    var e = ckpt.cutLazy(canon(
-      edges.select(col("doc_a").as("a"), col("doc_b").as("b"))))
-    var eCount = e.count()
-    // same size-gated broadcast as the min-label loop (guide §3.1): the
-    // per-round min tables (mn: one row per node; byHi: one row per
-    // star root) are broadcastable whenever the edge set is small, and
-    // the checkpointed frames' stats are invisible to AQE so the hint
-    // is the only way the rounds get a broadcast join
-    val bcastGate = eCount <= broadcastNodes(edges)
+  private def starRounds(e0: DataFrame, n0: Long, ckpt: CheckpointStrategy,
+      limit: Long): (DataFrame, Int) = {
+    var e = e0
+    var eCount = n0
+    // size-gated broadcast (guide §3.1): the per-round min tables (mn:
+    // one row per node; byHi: one row per star root) are broadcastable
+    // whenever the edge set is small, and the checkpointed frames' stats
+    // are invisible to AQE so the hint is the only way the rounds get a
+    // broadcast join
+    val bcastGate = eCount <= limit
     def maybeB(df: DataFrame): DataFrame = if (bcastGate) broadcast(df) else df
     var rounds = 0
     var done = eCount == 0
@@ -925,6 +773,7 @@ object Dedup {
       // small-star over canonical (a < b): each node b re-hangs its
       // smaller neighbors (and itself) on their minimum
       val byHi = large.groupBy("b").agg(min("a").as("m"))
+      // lazy cut: the count below materializes it in the same job
       val next = ckpt.cutLazy(
         large.join(maybeB(byHi), "b").filter(col("a") =!= col("m"))
           .select(col("m").as("a"), col("a").as("b"))
@@ -938,10 +787,10 @@ object Dedup {
       e = next
       eCount = nextCount
     }
+    // the final edge set stays cut: the returned (lazy) labels read it
     val labels = e.select(col("b").as("doc_id"), col("a").as("cluster_id"))
       .union(e.select(col("a").as("doc_id"), col("a").as("cluster_id")))
       .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
-    ccLog(edges, s"star rounds=$rounds")
     (labels, rounds)
   }
 
@@ -1490,21 +1339,22 @@ object Dedup {
     // DuckDB recursive CTE reachability over the FULL pair graph —
     // unchanged, which is the proof the collapse preserves labels.
     "dedup_clusters" -> ((s, dir) =>
-      clustersCollapsed(s, dir, connectedComponents(_)).orderBy("doc_id")),
+      clustersCollapsed(s, dir, components(_)).orderBy("doc_id")),
 
     // Same clusters via the O(log²n)-round large-star/small-star
-    // rewriting (see connectedComponentsStar) — the deep-graph scale
-    // path, gate-checked against the identical recursive-CTE oracle so
-    // the two CC implementations can never drift.
+    // rewriting at every size (see star) — the deep-graph scale path,
+    // gate-checked against the identical recursive-CTE oracle so the
+    // distributed algorithm cannot drift while the size gate keeps the
+    // other CC queries in one task.
     "dedup_clusters_star" -> ((s, dir) =>
-      clustersCollapsed(s, dir, connectedComponentsStar(_)).orderBy("doc_id")),
+      clustersCollapsed(s, dir, star(_)._1).orderBy("doc_id")),
 
     // The decision a dedup pipeline actually ships: one row per corpus
     // document with its cluster and a keep/drop verdict (keep = the
     // cluster's min doc_id; singletons keep themselves). Candidates →
     // verify → cluster → keep-list, end to end.
     "dedup_keep_canonical" -> ((s, dir) => {
-      val clusters = clustersCollapsed(s, dir, connectedComponents(_))
+      val clusters = clustersCollapsed(s, dir, components(_))
       Tables.documents(s, dir).select("doc_id")
         .join(clusters, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1898,20 +1748,16 @@ object Dedup {
     // doc_id — exactly what a re-crawl collapses N× on) and each doc
     // inherits its representative's label via one equi-join on the
     // fingerprint. Labels are unchanged: a cluster's min doc_id is the
-    // min over its fingerprint groups' own minima. The CC rounds then
-    // shuffle edges between distinct fingerprints, not dup² clique
-    // edges; the ADAPTIVE variant (min-label capped, star fallback)
-    // finishes shallow simhash graphs in their 2-3 natural rounds
-    // instead of paying 16+ star rounds' scheduling latency, while deep
-    // graphs still get the O(log² n) star path after contraction.
-    // Same recursive-reachability oracle as dedup_clusters.
+    // min over its fingerprint groups' own minima. CC then sees edges
+    // between distinct fingerprints, not dup² clique edges. Same
+    // recursive-reachability oracle as dedup_clusters.
     "dedup_simhash_clusters" -> ((s, dir) => {
       val fp = stagedSimhash(s, dir)
       val reps = fp.groupBy("simhash").agg(min("doc_id").as("rep"))
       val fpRep = fp.join(reps, "simhash")
       val repEdges = simhashPairsOf(reps.select(col("rep").as("doc_id"), col("simhash")))
         .select("doc_a", "doc_b")
-      val repClusters = connectedComponentsAuto(repEdges)
+      val repClusters = components(repEdges)
         .select(col("doc_id").as("rep"), col("cluster_id"))
       // docs whose representative joined a cross-fingerprint cluster
       // take that label; docs in a multi-doc hamming-0 clique with no

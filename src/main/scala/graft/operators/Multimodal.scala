@@ -178,35 +178,20 @@ object Multimodal {
     // + canonical keep (cluster = transitive near-dup group, keep = the
     // cluster's min doc_id) — the multimodal arm of
     // dedup_keep_canonical, composed from the shared CC primitives so
-    // the two dedup families cannot diverge in cluster semantics. Uses
-    // the large-star/small-star variant: the aHash near-dup graph
-    // CHAINS (gradually-edited variants link A−B−C−…, deep at sf0.1),
-    // so min-label propagation's O(diameter) rounds lose to star's
-    // O(log² n) — 16 min-label rounds on this corpus, and the swap
-    // measured 5.6 → 3.0 s isolated steady. The r12 adaptive variant
-    // (capped jump rounds + star on the contracted graph) was A/B'd
-    // here and LOST (4.2-5.3 s vs star's 2.6-3.0): the chain graph is
-    // deep enough that 6-10 jump rounds still hand star 2-3 rounds of
-    // work, so the capped phase is pure overhead — see
-    // OPTIMIZATION_r12.md.
+    // the two dedup families cannot diverge in cluster semantics.
     //
     // FINGERPRINT COLLAPSE before CC (same rewrite as
     // dedup_simhash_clusters, same labels): byte-identical re-crawled
     // media share an identical aHash, so CC runs over one
     // representative per distinct fingerprint (min doc_id) and every
     // doc inherits its representative's label through one fingerprint
-    // equi-join — the star rounds shuffle inter-fingerprint edges, not
-    // the dup² clique edges a re-crawl plants (the round-8 10× soak
-    // measured this query at 60.1 s pre-collapse).
+    // equi-join — CC sees inter-fingerprint edges, not the dup² clique
+    // edges a re-crawl plants (the round-8 10× soak measured this query
+    // at 60.1 s pre-collapse).
     "multimodal_phash_clusters" -> ((s, dir) => {
       val fp = ahashFingerprints(s, dir)
       val reps = fp.groupBy("fp").agg(min("doc_id").as("rep"))
-      // r13 A/B, also REJECTED: pure uncapped jump min-label (the one
-      // variant r12 hadn't tried here) needs 12 rounds on this chain —
-      // the rep graph's path length defeats label(label) doubling's
-      // round advantage — and measured 3.77-4.70 s isolated steady vs
-      // star's 3.44-4.11 on the same session shape. Star stays.
-      val repClusters = Dedup.connectedComponentsStar(
+      val repClusters = Dedup.components(
         phashPairsOf(reps.select(col("rep").as("doc_id"), col("fp"))))
         .select(col("doc_id").as("rep"), col("cluster_id"))
       val grpN = fp.join(reps, "fp").groupBy("rep").agg(count(lit(1)).as("grp_n"))

@@ -214,9 +214,9 @@ object Similarity {
     // LSH-family recall — this is approximate DBSCAN exactly the way
     // production density dedup runs it: candidates from buckets, never
     // all-pairs), so the density pass costs three references to one
-    // staged table + one bounded CC loop. The oracle replays candidates,
-    // verify, degree gate, a recursive-CTE reachability, and the border
-    // assignment — hash-checked end to end.
+    // staged table + one connected-components call. The oracle replays
+    // candidates, verify, degree gate, a recursive-CTE reachability, and
+    // the border assignment — hash-checked end to end.
     "emb_dbscan" -> ((s, dir) => {
       val pairs = stagedNeardupPairs(s, dir).select("vec_a", "vec_b")
       val sym = pairs.select(col("vec_a").as("v"), col("vec_b").as("nb"))
@@ -227,14 +227,7 @@ object Similarity {
         .join(core.select(col("v").as("vec_a")), Seq("vec_a"), "left_semi")
         .join(core.select(col("v").as("vec_b")), Seq("vec_b"), "left_semi")
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      // min-label CC with POINTER JUMPING (r12; plain min-label paid one
-      // synchronized round per hop of the eps-graph's density chains).
-      // r13 re-measure: the round trace reads 11 jump rounds converged —
-      // the chains are longer than the r12 note assumed — so star was
-      // re-A/B'd: 5 rounds but 3.95-4.31 s isolated steady vs jump's
-      // 4.05-4.90 on the same session shape, a wash (a star round costs
-      // ~2x a jump round here). Jump stays.
-      val cc = Dedup.connectedComponents(coreEdges, jump = true)
+      val cc = Dedup.components(coreEdges)
         .select(col("doc_id").as("v"), col("cluster_id"))
       // cores outside any core-core edge are their own singleton cluster
       val coreLabels = core.join(cc, Seq("v"), "left")

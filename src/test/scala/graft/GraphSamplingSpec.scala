@@ -208,8 +208,8 @@ class GraphSamplingSpec extends SparkSpec {
 
     import spark.implicits._
     val pairEdges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val ccLocal = Dedup.connectedComponents(pairEdges).orderBy("doc_id").collect()
-    val ccCkpt = Dedup.connectedComponents(pairEdges, reliable).orderBy("doc_id").collect()
+    val ccLocal = Dedup.components(pairEdges).orderBy("doc_id").collect()
+    val ccCkpt = Dedup.components(pairEdges, reliable).orderBy("doc_id").collect()
     assert(ccLocal.toSeq === ccCkpt.toSeq)
     // the reliable run actually materialized round state on disk
     assert(new java.io.File(dir).listFiles != null &&

@@ -71,7 +71,7 @@ class LlmOpsSpec extends SparkSpec {
     // pair 5-6, triangle-free chain 7-8-9
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (7L, 8L), (8L, 9L))
       .toDF("doc_a", "doc_b")
-    val out = Dedup.connectedComponents(edges)
+    val out = Dedup.components(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L, 9L -> 7L))
