@@ -6,6 +6,8 @@ import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Ex
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.apache.spark.util.LongAccumulator
 
 import graft.core.{ScanLayout, Sessions}
@@ -134,6 +136,24 @@ object Bench {
       Option(counts.remove(group)).map(c => c.synchronized((c(0), c(1), c(2)))).getOrElse((0, 0, 0))
   }
 
+  /** The `triggerExecution` ms of each micro-batch of the streaming run
+    * that terminated last on the session, in batch order. Progress events
+    * carry their run id, so the batches of two runs never mix. */
+  private[graft] final class TriggerTimes extends StreamingQueryListener {
+    private val running = new ConcurrentHashMap[java.util.UUID, Vector[(Long, Long)]]()
+    @volatile private var last: Seq[Long] = Seq.empty
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val p = e.progress
+      val ms = Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(-1L)
+      running.merge(p.runId, Vector(p.batchId -> ms), _ ++ _)
+    }
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      last = Option(running.remove(e.runId)).getOrElse(Vector.empty).sortBy(_._1).map(_._2)
+    /** The last run's times, forgetting them. */
+    def take(): Seq[Long] = { val t = last; last = Seq.empty; t }
+  }
+
   private def groups(name: String, pass: Int): (String, String) =
     (s"bench:$name:$pass:build", s"bench:$name:$pass:run")
 
@@ -175,7 +195,12 @@ object Bench {
     var spark = Sessions.start(Sessions.Scale)
     val dir = ScanLayout.ensure(spark, sfDir)
     val counts = new GroupCounts
-    spark.sparkContext.addSparkListener(counts)
+    val triggers = new TriggerTimes
+    def listen(s: SparkSession): Unit = {
+      s.sparkContext.addSparkListener(counts)
+      s.streams.addListener(triggers)
+    }
+    listen(spark)
     // daemon threads: a worker stuck past its cancel must not keep the JVM alive
     def newWorker() = Executors.newSingleThreadExecutor { (r: Runnable) =>
       val t = new Thread(r, "bench-worker"); t.setDaemon(true); t
@@ -193,7 +218,7 @@ object Bench {
       var status = "ok"
       var err = ""
       var pass = 1
-      graft.streaming.Streams.lastTriggerMs.set(Seq.empty)
+      triggers.take()
       while (status == "ok" && pass <= nPasses) {
         val p = pass
         val fut = worker.submit(new Callable[Pass] {
@@ -214,8 +239,7 @@ object Bench {
         }
         pass += 1
       }
-      val row = Row(name, status, acc.value, passes.result(),
-        graft.streaming.Streams.lastTriggerMs.getAndSet(Seq.empty), err)
+      val row = Row(name, status, acc.value, passes.result(), triggers.take(), err)
       rows += row
       log.println(row.json)
       System.err.println(s"BENCH $name: $status first=${row.firstUseS.map(fmt).getOrElse("-")}" +
@@ -224,7 +248,7 @@ object Bench {
         val (live, rebuilt) = Sessions.ensureLive(spark)
         if (rebuilt) {
           spark = live
-          spark.sparkContext.addSparkListener(counts)
+          listen(spark)
           rebuilds += 1
           System.err.println(s"BENCH: session rebuilt after $name (context was stopped)")
         }

@@ -3,6 +3,9 @@ package graft.core
 import java.io.{IOException, UncheckedIOException}
 import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.PlanBridge
+
 /** The one publish protocol for on-disk artifacts (VersionedStore
   * versions, ScanLayout rewrites): build the artifact in a sibling
   * scratch dir and publish it with ONE atomic rename, so a reader sees
@@ -41,8 +44,26 @@ object Artifacts {
         // lost the race between the check and the rename: the winner's
         // complete artifact is the result
         case _: IOException if complete(dst) => false
+        case e: Exception => settle(); throw e
       } finally deleteRecursively(scratch)
     }
+
+  private val SettleNs = 30L * 1000 * 1000 * 1000
+
+  /** A failed Spark write returns while other tasks of its job can still
+    * run: a failed job kills them without interrupting them, and one that
+    * writes after the scratch dir is reclaimed recreates part of it
+    * (`_temporary` dirs), a `.build-*` left behind for good. So before a
+    * failed build's scratch dir is reclaimed, wait, at most [[SettleNs]],
+    * until the session's scheduler runs no task. */
+  private def settle(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext).filterNot(_.isStopped).foreach { sc =>
+        val deadline = System.nanoTime() + SettleNs
+        // an interrupt ends the wait but must not replace the build's error
+        try while (PlanBridge.runningTasks(sc) > 0 && System.nanoTime() < deadline) Thread.sleep(10)
+        catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+      }
 
   /** Remove `p` so a concurrent reader sees the whole artifact or none:
     * rename it to a `.deleting-*` sibling (atomic on a real filesystem),

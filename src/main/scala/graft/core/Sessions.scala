@@ -43,7 +43,8 @@ object Sessions {
 
   /** The production shape: approximate-by-design queries run their sketch
     * alone (see [[ApproxGate]]) and callers of [[ScanLayout.ensure]] read
-    * its split copy. Bench, SoakGen, StreamSoak and IsolationProbe. */
+    * its split copy. Bench and SoakGen, and the session [[ensureLive]]
+    * rebuilds. */
   case object Scale extends Shape(Seq(
     "graft.approx.exactGate" -> "false",
     ScanLayout.EnabledKey -> "true"))

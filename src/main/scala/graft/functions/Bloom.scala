@@ -48,19 +48,6 @@ object Bloom {
     graft.core.Sessions.memo(s, s"bloom|$memoKey")((_: Array[Byte]) => true)(
       buildBytes(keys, key, expectedKeys))
 
-  /** OR-merge two serialized filters built with the SAME expectedKeys
-    * (same bit width + hash count — readFrom/mergeInPlace reject
-    * incompatible shapes). This is the incremental-artifact step: fold a
-    * small DELTA filter (cost ∝ batch) into the standing corpus filter
-    * instead of rebuilding over the whole corpus. */
-  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val fa = org.apache.spark.util.sketch.BloomFilter.readFrom(a)
-    fa.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(b))
-    val out = new java.io.ByteArrayOutputStream()
-    fa.writeTo(out)
-    out.toByteArray
-  }
-
   /** Probe: true if `c` is possibly in the set, false only if definitely
     * not (no false negatives). Codegen'd; safe to push into a scan
     * filter. */

@@ -773,14 +773,15 @@ object Dedup {
       // small-star over canonical (a < b): each node b re-hangs its
       // smaller neighbors (and itself) on their minimum
       val byHi = large.groupBy("b").agg(min("a").as("m"))
-      // lazy cut: the count below materializes it in the same job
+      // lazy cut: the RDD count below materializes and counts it in one
+      // job (Dataset.count's aggregate exchange would be a job of its own)
       val next = ckpt.cutLazy(
         large.join(maybeB(byHi), "b").filter(col("a") =!= col("m"))
           .select(col("m").as("a"), col("a").as("b"))
           .union(byHi.select(col("m").as("a"), col("b")))
           .distinct())
       rounds += 1
-      val nextCount = next.count()
+      val nextCount = next.rdd.count()
       done = nextCount == eCount &&
         next.join(e, Seq("a", "b"), "left_anti").isEmpty
       ckpt.release(e) // released only after the fixpoint check read it

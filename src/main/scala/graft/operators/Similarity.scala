@@ -711,8 +711,6 @@ object Similarity {
       .filter(col("score") >= 0.4)
   }
 
-  private val dotSql = "list_sum(list_transform(list_zip(a.v, b.v), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-
   private def cosineSql(va: String, vb: String): String =
     s"""list_sum(list_transform(list_zip($va, $vb), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
        | / (sqrt(list_sum(list_transform($va, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Pipeline
 import graft.sources.VersionedStore
@@ -49,14 +49,12 @@ object CdcApply {
   }
 
   /** Start the CDC stream: changelog parquet (events schema) under
-    * `inDir` → per-batch snapshot versions under `outBase`. `seedState`
-    * is the base snapshot (user_id, ts, event_type, value; tombstones
-    * already compacted away) and MUST be deterministic across restarts.
-    * Trigger.AvailableNow drains what's there; restarting with the same
-    * checkpoint processes only new files. */
+    * `inDir`, one file per micro-batch, → per-batch snapshot versions under
+    * `outBase` through [[Streams.versionedSink]]. `seedState` is the base
+    * snapshot (user_id, ts, event_type, value; tombstones already
+    * compacted away) and MUST be deterministic across restarts. */
   def start(spark: SparkSession, template: DataFrame, seedState: DataFrame,
-            inDir: String, outBase: String, checkpointDir: String,
-            maxFilesPerTrigger: Int = 1): StreamingQuery = {
+            inDir: String, outBase: String, checkpointDir: String): StreamingQuery = {
     // seed v=0 (pre-state of batch 0) exactly once — on restart a
     // COMPLETE v=0 (committer's _SUCCESS marker present) wins and the
     // supplied seed is ignored. A bare v=0 directory without the marker
@@ -64,20 +62,12 @@ object CdcApply {
     // downstream can have read it, since batch 0 only starts after the
     // seed is published).
     VersionedStore.writeBatch(seedState, outBase, -1L): Unit
-    spark.readStream
-      .schema(template.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val pre = VersionedStore.readVersion(spark, outBase, batchId)
-        val delta = Pipeline.latestPerKey(batch.select(
-          col("user_id"), col("ts"), col("event_id"),
-          col("event_type"), col("value")))
-        VersionedStore.writeBatch(foldState(pre, delta), outBase, batchId): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Streams.versionedSink(Streams.parquetSpout(spark, template.schema, inDir),
+      outBase, checkpointDir) { (batch, batchId) =>
+      val delta = Pipeline.latestPerKey(batch.select(
+        col("user_id"), col("ts"), col("event_id"),
+        col("event_type"), col("value")))
+      foldState(VersionedStore.readVersion(spark, outBase, batchId), delta)
+    }
   }
 }

@@ -166,7 +166,7 @@ object StreamOracle {
 
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
     val (path, schema) = eventsDir(s, dir)
-    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(path)
+    Streams.parquetSpout(s, schema, path)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -230,7 +230,7 @@ object StreamOracle {
     * same checkpoint and prove the restart writes nothing new. */
   private[graft] def dedupSinkRun(s: SparkSession, dir: String, d: String): Unit =
     withStateParts(s, s"$dir/events.parquet") {
-      val q = eventStream(s, dir)
+      eventStream(s, dir)
         .dropDuplicates("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
         .writeStream.outputMode("append")
@@ -239,8 +239,7 @@ object StreamOracle {
         .option("checkpointLocation", s"$d/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      Streams.recordTriggers(q)
+        .awaitTermination()
     }
 
   def oracles: Map[String, String] = Map(

@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Parity
+import graft.sources.VersionedStore
 
 /** Structured Streaming equivalents of the reference's micro-batch
   * pipelines (SURVEY.md §7.1 layer 2).
@@ -22,21 +24,6 @@ import graft.operators.Parity
   * asserted in StreamingSpec.
   */
 object Streams {
-
-  /** Per-trigger execution times (ms, ordered by batchId) of the most
-    * recent completed streaming run in this JVM. Bench drains this right
-    * after timing a stream-replay query and embeds it in the artifact:
-    * the AvailableNow replays' run-to-run spread is micro-batch TRIGGER
-    * SCHEDULING variance, not plan cost, and without the per-trigger
-    * breakdown a +8 s swing on stream_tumbling reads like a regression
-    * (BENCH_r11 run B). */
-  private[graft] val lastTriggerMs =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Long]](Seq.empty)
-
-  private[graft] def recordTriggers(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    lastTriggerMs.set(q.recentProgress.toSeq.sortBy(_.batchId).map(p =>
-      Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(-1L)))
 
   /** Streaming word count over a directory of text files (reference
     * word_count topology, O1–O5). Complete mode: the running totals.
@@ -92,20 +79,29 @@ object Streams {
       .withWatermark("ts", watermark)
       .dropDuplicates(keyCols :+ "ts")
 
-  /** Drain a stream into a [[graft.sources.VersionedStore]] via
-    * foreachBatch: one store version per micro-batch, idempotent on
-    * replay (version = batch id), checkpointed — an exactly-once
-    * versioned sink. */
-  def runVersionedSink(df: DataFrame, base: String, checkpoint: String): Unit = {
-    val q = df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.sources.VersionedStore.writeBatch(batch.toDF(), base, id): Unit
+  /** The one-file-per-trigger parquet spout: each file under `dir` is one
+    * micro-batch (`maxFilesPerTrigger` 1, Crane's batch boundary). A
+    * streaming file read never infers, so the schema is given. */
+  def parquetSpout(spark: SparkSession, schema: StructType, dir: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** The exactly-once versioned sink every spout→bolt→store topology
+    * shares: each micro-batch `id` goes through `bolt(batch, id)` and lands
+    * as one [[VersionedStore]] version via [[VersionedStore.writeBatch]].
+    * The version derives from the batch id and a replayed batch keeps its
+    * first complete write, so foreachBatch's at-least-once becomes
+    * exactly-once under the checkpoint. Started with
+    * Trigger.AvailableNow: `awaitTermination()` drains what is there, and
+    * a restart on the same checkpoint processes only new input. */
+  def versionedSink(stream: DataFrame, base: String, checkpoint: String)(
+      bolt: (DataFrame, Long) => DataFrame): StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        VersionedStore.writeBatch(bolt(batch.toDF(), id), base, id): Unit
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
 
   /** Stream-stream interval join: pair each event with the same user's
     * events in the following hour. Both sides carry watermarks so the
@@ -172,7 +168,6 @@ object Streams {
       .trigger(Trigger.AvailableNow())
     val q = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
     q.awaitTermination()
-    recordTriggers(q)
     spark.table(name)
   }
 }

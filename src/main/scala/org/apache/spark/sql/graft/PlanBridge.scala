@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic
 
 /** Bridge into the private[sql] Dataset constructors so graft's custom
   * logical operators (graft.plans) can surface as user DataFrames, and
-  * into the private[spark] listener bus drain. Lives under
+  * into the private[spark] listener bus and task scheduler. Lives under
   * org.apache.spark.sql.* purely for access; no Spark internals are
   * modified.
   */
@@ -22,4 +22,12 @@ object PlanBridge {
   /** Blocks until every posted listener event is delivered, so counts a
     * listener keeps are complete when read. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Tasks the scheduler still counts as running, over all executors. A
+    * task leaves the count when its executor reports it ended, after its
+    * own cleanup ran. */
+  def runningTasks(sc: SparkContext): Int = sc.taskScheduler match {
+    case t: org.apache.spark.scheduler.TaskSchedulerImpl => t.runningTasksByExecutors.values.sum
+    case _ => 0
+  }
 }

@@ -184,72 +184,6 @@ class TopologySpec extends SparkSpec {
       "replayed batch content identical")
   }
 
-  test("bloom-gated ingest stream: cross-batch dedup, artifact refresh, exactly-once") {
-    import graft.sources.VersionedStore
-    import graft.streaming.IngestDedup
-
-    val docs = Tables.documents(spark, sf0001)
-    val corpus = docs.filter(col("doc_id") < 40)
-    // batch 0: two new docs, one corpus copy, one in-batch duplicate pair
-    // batch 1: one new doc, one copy of a batch-0 doc (must be dropped
-    //          ONLY if the artifacts were refreshed), one corpus copy
-    def doc(id: Long, text: String) = (id, text, "en", "srcX", text.length.toLong)
-    import spark.implicits._
-    val corpusText0 = corpus.orderBy("doc_id").select("text").as[String].head()
-    val b0 = Seq(
-      doc(1000L, "batch zero fresh document one"),
-      doc(1001L, "batch zero fresh document two"),
-      doc(1002L, corpusText0),                       // corpus dup → drop
-      doc(1003L, "batch zero fresh document one"))   // in-batch dup → drop
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val b1 = Seq(
-      doc(2000L, "batch one fresh document"),
-      doc(2001L, "batch zero fresh document two"),   // batch-0 dup → drop
-      doc(2002L, corpusText0))                       // corpus dup → drop
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-
-    val srcDir = Files.createTempDirectory("graft-bloomgate-src")
-    def addFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-bloomgate-tmp")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp)
-        .filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.copy(part, srcDir.resolve(name))
-    }
-    addFile(b0, "batch0.parquet")
-    addFile(b1, "batch1.parquet")
-    val base = Files.createTempDirectory("graft-bloomgate-store").toString
-    val cp = Files.createTempDirectory("graft-bloomgate-cp").toString
-
-    IngestDedup.startBloomGate(spark, corpus, srcDir.toString, base, cp)
-      .awaitTermination()
-    assert(VersionedStore.listVersions(base).size === 2)
-    def ids(v: Long) = VersionedStore.readVersion(spark, base, v)
-      .select("doc_id").as[Long].collect().toSet
-    // file order = alphabetical: batch0 then batch1
-    assert(ids(1L) === Set(1000L, 1001L), s"v1 got ${ids(1L)}")
-    assert(ids(2L) === Set(2000L), s"v2 got ${ids(2L)}")
-
-    // exactly-once: restart from the same checkpoint with no new files —
-    // versions unchanged, replayed state does not blank them
-    IngestDedup.startBloomGate(spark, corpus, srcDir.toString, base, cp)
-      .awaitTermination()
-    assert(VersionedStore.listVersions(base).size === 2)
-    assert(ids(1L) === Set(1000L, 1001L) && ids(2L) === Set(2000L))
-
-    // a third file arriving after restart is gated against EVERYTHING
-    // accepted so far (state rebuilt from the store on start)
-    val b2 = Seq(
-      doc(3000L, "batch two fresh document"),
-      doc(3001L, "batch one fresh document"))        // batch-1 dup → drop
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    addFile(b2, "batch2.parquet")
-    IngestDedup.startBloomGate(spark, corpus, srcDir.toString, base, cp)
-      .awaitTermination()
-    assert(VersionedStore.listVersions(base).size === 3)
-    assert(ids(3L) === Set(3000L), s"v3 got ${ids(3L)}")
-  }
-
   test("streaming dedup drops watermark-horizon duplicates") {
     val ev = Tables.events(spark, sf0001)
     val dir = Files.createTempDirectory("graft-dedup-in").toString

@@ -98,8 +98,10 @@ class VersionedStoreSpec extends SparkSpec {
     val cp = Files.createTempDirectory("graft-vsink-cp").toString
 
     // one file per micro-batch → one store version per batch
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1).text(in.toString)
-    graft.streaming.Streams.runVersionedSink(stream, base, cp)
+    def runOnce(): Unit = graft.streaming.Streams.versionedSink(
+      spark.readStream.option("maxFilesPerTrigger", 1).text(in.toString), base, cp)(
+      (batch, _) => batch).awaitTermination()
+    runOnce()
 
     val versions = VersionedStore.listVersions(base)
     assert(versions.size === 2, s"expected one version per micro-batch, got $versions")
@@ -109,8 +111,7 @@ class VersionedStoreSpec extends SparkSpec {
 
     // rerun with the same checkpoint: the drained source has no new
     // data, so no new versions and no duplicated rows
-    graft.streaming.Streams.runVersionedSink(
-      spark.readStream.option("maxFilesPerTrigger", 1).text(in.toString), base, cp)
+    runOnce()
     assert(VersionedStore.listVersions(base) === versions)
     assert(versions.map(v => VersionedStore.readVersion(spark, base, v).count()).sum === 3)
   }
