@@ -25,22 +25,28 @@ import graft.functions.TextAnalysis
   */
 object Dedup {
 
-  /** (doc_id, shingle) — distinct 3-gram word shingles per document.
-    *
-    * Built as posexplode + window lead over (doc_id, pos) rather than
-    * array-building transform(sequence(...)): the array route re-inlines
-    * the split() into every element_at under projection collapse
-    * (O(tokens²) work per doc) and falls off codegen. One shuffle on
-    * doc_id; scales linearly in corpus size.
-    */
+  /** (doc_id, shingle) — distinct 3-gram word shingles per document:
+    * [[shingleSet]] exploded, a narrow projection at scan parallelism
+    * (see [[shinglesViaWindow]] for why not a window). */
   def shingles(docs: DataFrame): DataFrame =
+    tokenized(docs).select(col("doc_id"), explode(shingleSet).as("shingle"))
+
+  /** (doc_id, shset) — [[shingles]] kept as one distinct array per
+    * document, computed within each row: no shuffle, no explode. */
+  private[graft] def shingleSets(docs: DataFrame): DataFrame =
+    tokenized(docs).select(col("doc_id"), shingleSet.as("shset"))
+
+  /** (doc_id, toks) for documents long enough to have a 3-gram. */
+  private def tokenized(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        "transform(sequence(0, size(toks) - 3)," +
-          " i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))")))
-        .as("shingle"))
+
+  /** The one definition of a document's shingles: the distinct 3-gram
+    * word array over its token array column `toks`. */
+  private def shingleSet: Column = array_distinct(expr(
+    "transform(sequence(0, size(toks) - 3)," +
+      " i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))"))
 
   /** The window rendition of [[shingles]] (posexplode → lead ×2 →
     * distinct) — spec-only equivalence gate. The shipped version above
@@ -74,13 +80,22 @@ object Dedup {
     * why numeric: HashAggregate-friendly primitive agg buffers). */
   private def hash60(s: Column): Column = graft.functions.PortableHash.hash60(s)
 
+  /** Min-hash function `i` of one shingle. */
+  private def minhashKey(i: Int, shingle: Column): Column =
+    hash60(concat(lit(s"$i|"), shingle))
+
   /** Per-doc minhash signature h0..h15 + shingle count c, in ONE
     * hash aggregation pass over the shingle index. */
   def minhashSignature(sh: DataFrame): DataFrame =
     sh.groupBy("doc_id").agg(
       count(lit(1)).as("c"),
-      (0 until NumHashes).map(i =>
-        min(hash60(concat(lit(s"$i|"), col("shingle")))).as(s"h$i")): _*)
+      (0 until NumHashes).map(i => min(minhashKey(i, col("shingle"))).as(s"h$i")): _*)
+
+  /** [[minhashSignature]]'s h0..h15 computed within each row of a
+    * [[shingleSets]] frame: (doc_id, shset, h0..h15), no groupBy. */
+  private[graft] def minhashOfSets(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id") +: col("shset") +: (0 until NumHashes).map(i =>
+      array_min(transform(col("shset"), s => minhashKey(i, s))).as(s"h$i")): _*)
 
   /** (doc_id, band, sig) for an arbitrary (bands × rows) tiling of the
     * 16 min-hashes: band signature = md5 of its `rows` concatenated
@@ -154,14 +169,19 @@ object Dedup {
     val sets = sh.join(candDocs, Seq("doc_id"), "left_semi")
       .groupBy("doc_id")
       .agg(collect_set(col("shingle")).as("shset"))
-    cand
+    jaccardOfSets(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), "doc_b")
+      .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), "doc_b"))
+  }
+
+  /** (doc_a, doc_b, jaccard) of pairs that carry both shingle sets as
+    * `sa` and `sb`. */
+  private[graft] def jaccardOfSets(pairs: DataFrame): DataFrame =
+    pairs
       .withColumn("shared", size(array_intersect(col("sa"), col("sb"))))
       .select(col("doc_a"), col("doc_b"),
         (col("shared").cast("double") /
           (size(col("sa")) + size(col("sb")) - col("shared")).cast("double")).as("jaccard"))
-  }
 
   /** Two-tier exact verify for the MANY-candidate regime (the prefix
     * path ships ~125k candidates at t=0.5 where LSH ships ~250): tier 1

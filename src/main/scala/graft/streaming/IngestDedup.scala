@@ -1,9 +1,13 @@
 package graft.streaming
 
+import java.util.UUID
+import java.util.concurrent.atomic.AtomicBoolean
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 import graft.operators.Dedup
 
@@ -16,35 +20,57 @@ import graft.operators.Dedup
   * one immutable [[graft.sources.VersionedStore]] version.
   *
   * Scale shape: the corpus-side artifacts (shingle index + LSH band
-  * signatures) are built ONCE and cached — per-trigger work is
-  * proportional to the BATCH, not the corpus (the same steady-state
-  * contract as the batch `dedup_incremental_minhash` query): the batch's
-  * band signatures equi-join the corpus bands (bucketed candidates, never
-  * corpus×batch all-pairs), and only candidate docs' shingle sets are
-  * materialized for the exact-Jaccard verify. Exactly-once: the sink
-  * version number derives from the batch id ([[Streams.versionedSink]]
-  * keeps the first complete write on replay), upgrading foreachBatch's at-least-once — the
-  * reference's replay timer can double-count (SURVEY.md §2.2.6); this
-  * cannot.
+  * signatures) are built ONCE per stream start, cached, and released
+  * when the query terminates. Per-trigger work is proportional to the
+  * BATCH, as in Crane, whose bolts each see one 500-tuple batch: the
+  * batch's shingle sets, min-hashes and bands are computed within each
+  * row, the cached corpus tables are only probed against the broadcast
+  * batch side, and what shuffles is candidate-sized, never the corpus.
+  * Exactly-once: the sink version number derives from the batch id
+  * ([[Streams.versionedSink]] keeps the first complete write on replay),
+  * upgrading foreachBatch's at-least-once — the reference's replay timer
+  * can double-count (SURVEY.md §2.2.6); this cannot.
   */
 object IngestDedup {
 
   /** Near-dup pairs of one ingest batch against the prepared corpus
-    * artifacts: LSH band candidates (corpus × batch only), then exact
-    * Jaccard ≥ `threshold` on full shingle sets. */
+    * artifacts (`corpusSh` = [[Dedup.shingles]], `corpusBands` =
+    * [[Dedup.lshBands]] of its [[Dedup.minhashSignature]]): LSH band
+    * candidates (corpus × batch only), then exact Jaccard ≥ `threshold`
+    * on full shingle sets, in one partition sorted by
+    * (corpus_doc, new_doc). A batch doc that reuses a corpus doc_id is
+    * scored on its own shingles, never on the union of both. */
   def pairsVsCorpus(corpusSh: DataFrame, corpusBands: DataFrame,
                     batchDocs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val shB = Dedup.shingles(batchDocs)
-    val bandsB = Dedup.lshBands(Dedup.minhashSignature(shB))
-    val cand = corpusBands.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-      .join(bandsB.select(col("doc_id").as("doc_b"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .select("doc_a", "doc_b").distinct()
-    Dedup.jaccardBySets(cand, corpusSh.unionByName(shB))
+    val setsB = Dedup.minhashOfSets(Dedup.shingleSets(batchDocs))
+    // Broadcast hints sit on micro-batch frames only, so the cached corpus
+    // tables are always the streamed, probed side. Without them the
+    // planner picks sides by size estimate: a small corpus can look
+    // smaller than a batch file, and a join's estimate multiplies its
+    // inputs' sizes, so `cand` looks too large to broadcast and joining
+    // it would shuffle all of `corpusSh`.
+    val bandsB = broadcast(Dedup.lshBands(setsB)
+      .select(col("doc_id").as("doc_b"), col("band"), col("sig")))
+    // one row per shared band: a pair that shares several repeats, and
+    // the collect_sets below absorb the repeats
+    val cand = broadcast(corpusBands
+      .select(col("doc_id").as("doc_a"), col("band"), col("sig"))
+      .join(bandsB, Seq("band", "sig"))
+      .select("doc_a", "doc_b"))
+    // each candidate corpus doc's set and the batch docs it pairs with,
+    // from one probe of `corpusSh` against the one broadcast of `cand`
+    val setsA = corpusSh.join(cand, col("doc_id") === col("doc_a"))
+      .groupBy("doc_a")
+      .agg(collect_set(col("shingle")).as("sa"), collect_set(col("doc_b")).as("docs_b"))
+      .select(col("doc_a"), col("sa"), explode(col("docs_b")).as("doc_b"))
+    Dedup.jaccardOfSets(setsA
+      .join(broadcast(setsB.select(col("doc_id").as("doc_b"), col("shset").as("sb"))), "doc_b"))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a").as("corpus_doc"), col("doc_b").as("new_doc"),
         round(col("jaccard"), 6).as("jaccard"))
-      .orderBy("corpus_doc", "new_doc")
+      // a batch's pairs are few: one sorted partition needs neither the
+      // sampling job nor the exchange of a range-partitioned sort
+      .coalesce(1).sortWithinPartitions("corpus_doc", "new_doc")
   }
 
   /** Start the ingest-dedup stream: parquet documents (corpus schema)
@@ -60,7 +86,36 @@ object IngestDedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val corpusBands = Dedup.lshBands(Dedup.minhashSignature(corpusSh))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Streams.versionedSink(Streams.parquetSpout(spark, corpusDocs.schema, inDir),
-      outBase, checkpointDir)((batch, _) => pairsVsCorpus(corpusSh, corpusBands, batch))
+    releaseOnTermination(spark, Seq(corpusSh, corpusBands)) {
+      Streams.versionedSink(Streams.parquetSpout(spark, corpusDocs.schema, inDir),
+        outBase, checkpointDir)((batch, _) => pairsVsCorpus(corpusSh, corpusBands, batch))
+    }
+  }
+
+  /** Run `start` and unpersist `frames` once the query it returns has
+    * terminated, or at once if it fails to start. A one-shot listener
+    * matches the run id, not the query id, which a restart on the same
+    * checkpoint shares with the earlier run. A query that ends before its
+    * run id is known is caught by the check after `start`; `released`
+    * makes the two paths release once. */
+  private def releaseOnTermination(spark: SparkSession, frames: Seq[DataFrame])(
+      start: => StreamingQuery): StreamingQuery = {
+    val released = new AtomicBoolean(false)
+    @volatile var runId: UUID = null
+    lazy val listener: StreamingQueryListener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId == runId) release()
+    }
+    def release(): Unit = if (released.compareAndSet(false, true)) {
+      spark.streams.removeListener(listener)
+      frames.foreach(_.unpersist())
+    }
+    spark.streams.addListener(listener)
+    val q = try start catch { case t: Throwable => release(); throw t }
+    runId = q.runId
+    if (!q.isActive) release()
+    q
   }
 }
