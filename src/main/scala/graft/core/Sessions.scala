@@ -14,9 +14,8 @@ import org.apache.spark.sql.SparkSession
   *   - SPARK_GRAFT_CPUS: core count (default: the JVM's available
   *     processors). Sets `local[cores]` and the shuffle partition count.
   *   - SPARK_GRAFT_MASTER: master string, overriding `local[cores]`.
-  *   - SPARK_GRAFT_EXEC_CLASSPATH / SPARK_GRAFT_EXEC_MEM: executor
-  *     classpath and memory under a local-cluster master (see
-  *     [[clusterConfs]]).
+  *   - SPARK_GRAFT_EXEC_CLASSPATH: executor classpath under a
+  *     local-cluster master (see [[clusterConfs]]).
   *   - SPARK_GRAFT_CONF: `k=v,k=v` session confs applied last, after the
   *     shape's (no escaping: keys and values never contain ','; each
   *     entry splits on its first '=').
@@ -67,16 +66,15 @@ object Sessions {
   /** Executor settings a local-cluster master needs (none otherwise):
     *   - spark.executor.extraClassPath ← SPARK_GRAFT_EXEC_CLASSPATH
     *     (default: ./target/scala-2.13/classes, sbt's output dir);
-    *   - spark.executor.memory ← SPARK_GRAFT_EXEC_MEM, default the full
-    *     per-worker grant (the master's third field), so one executor
-    *     occupies each worker — more than the grant and SparkContext
-    *     refuses to start. */
+    *   - spark.executor.memory ← the full per-worker grant (the
+    *     master's third field), so one executor occupies each worker —
+    *     more than the grant and SparkContext refuses to start. */
   def clusterConfs(master: String, env: Map[String, String] = sys.env): Seq[(String, String)] =
     master.trim match {
       case LocalCluster(_, _, mb) => Seq(
         "spark.executor.extraClassPath" -> env.getOrElse("SPARK_GRAFT_EXEC_CLASSPATH",
           new java.io.File("target/scala-2.13/classes").getAbsolutePath),
-        "spark.executor.memory" -> env.getOrElse("SPARK_GRAFT_EXEC_MEM", s"${mb}m"))
+        "spark.executor.memory" -> s"${mb}m")
       case _ => Seq.empty
     }
 

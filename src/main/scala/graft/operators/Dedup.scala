@@ -114,40 +114,6 @@ object Dedup {
   /** The shipped 4 × 4 tiling. */
   def lshBands(sigs: DataFrame): DataFrame = lshBandsCfg(sigs, Bands, Rows)
 
-  /** (doc_a, doc_b, shared, ca, cb) restricted to candidate pairs, via
-    * inverted-index counting: one self-join on the shingle, semi-filtered
-    * to the candidates, then a shared-count aggregate. Right when
-    * candidates are MANY (e.g. the df-capped all-pairs path): shared
-    * counts for every co-occurring pair come out of one shuffle, no
-    * per-pair array materialization. Worst case is O(Σ df²) pair
-    * generation — for the few-candidate regime use [[jaccardBySets]]
-    * instead. Duplicate candidate rows are fine (left-semi), so callers
-    * need not dedup. Full sets are counted — the candidate set prunes
-    * which pairs are scored, never the score itself. */
-  def sharedCountsFor(cand: DataFrame, sh: DataFrame): DataFrame = {
-    val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
-    val a = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .join(cand, Seq("doc_a", "doc_b"), "left_semi")
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
-      .join(counts.select(col("doc_id").as("doc_a"), col("c").as("ca")), "doc_a")
-      .join(counts.select(col("doc_id").as("doc_b"), col("c").as("cb")), "doc_b")
-  }
-
-  /** Reduce a (doc_a, doc_b, shared, ca, cb) shared-count table to the
-    * symmetric Jaccard score. */
-  def jaccardOfShared(shared: DataFrame): DataFrame =
-    shared.select(col("doc_a"), col("doc_b"),
-      (col("shared").cast("double") /
-        (col("ca") + col("cb") - col("shared")).cast("double")).as("jaccard"))
-
-  /** Exact Jaccard for candidate pairs — [[sharedCountsFor]] reduced to
-    * the symmetric score. */
-  def jaccardFor(cand: DataFrame, sh: DataFrame): DataFrame =
-    jaccardOfShared(sharedCountsFor(cand, sh))
-
   /** Exact Jaccard for candidate pairs by per-doc shingle-set
     * intersection: O(|candidates| × doc length), independent of shingle
     * document frequency. Right when candidates are FEW (post-LSH): the
@@ -196,9 +162,9 @@ object Dedup {
     * collision-free case tier 1 computes the exact score already.
     * Per-pair cost stays independent of shingle document frequency:
     * this is the tiered screen-then-confirm shape production similarity
-    * joins use, NOT the Σ df² inverted re-join (sharedCountsFor), which
-    * would reintroduce the stop-shingle cliff the prefix filter exists
-    * to avoid. */
+    * joins use, NOT the Σ df² inverted-index self-join of
+    * [[sharedCounts]], which would reintroduce the stop-shingle cliff the
+    * prefix filter exists to avoid. */
   def jaccardBySetsTiered(cand: DataFrame, sh: DataFrame, t: Double): DataFrame = {
     // The screen's cost is CPU (an array_intersect over ~500-element
     // hashed sets per candidate pair), but its shuffled BYTES are tiny —
@@ -230,135 +196,62 @@ object Dedup {
     jaccardBySets(screened, sh)
   }
 
-  /** Near-dup candidate pairs from the inverted index with stop-shingles
-    * (document frequency > maxDf) removed first: each df-f shingle
-    * bucket emits O(f²) pairs in the self-join, so capping df bounds the
-    * candidate blowup on vocabulary-limited corpora. Candidates must be
-    * re-verified on FULL shingle sets (jaccardFor) — the cap prunes
-    * generation, not similarity. */
-  def cappedCandidates(sh: DataFrame, maxDf: Int): DataFrame =
-    cappedCandidatesBy(sh, lit(maxDf.toLong))
-
-  /** CORPUS-PROPORTIONAL df cap — the scale-correct form of the
-    * stop-shingle cut: greatest(64, ⌈n_docs/200⌉), i.e. 0.5% of the
-    * corpus, computed with INTEGER ceiling division ((n+199) div 200)
-    * so every engine agrees bit-for-bit at any corpus size (ceil of
-    * n·0.005 in doubles rounds UP spuriously whenever n is a multiple
-    * of 200 — 0.005 has no binary representation). An ABSOLUTE cap is
-    * the recall cliff the round-7 10× soak exposed on the winnow path
-    * (and, at 7% of true pairs, on this one: duplication multiplies
-    * every shingle's df, pushing previously-rare shingles past a fixed
-    * 64): "too common to be discriminative" is a fraction of the
-    * corpus, not a constant. Equals 64 at every shipped SF, so oracle
-    * results are unchanged; at the soak's 50 k docs it reads 250 and
-    * the capped pair set matches the lossless prefix path again. The
-    * cap is a 1-row aggregate broadcast in-plan — no driver fetch. */
-  def cappedCandidatesProportional(sh: DataFrame): DataFrame = {
-    val cap = propCap(sh)
-    val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(cap))
-      .filter(col("df") <= col("cap"))
-      .select("shingle")
-    val idx = sh.join(rare, Seq("shingle"))
-    idx.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(idx.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-  }
-
-  /** (doc_a, doc_b, shared, ca, cb) for every pair sharing at least one
-    * RARE (df <= cap) shingle, with `shared` counting over FULL shingle
-    * sets — the df-capped staging computed in ONE self-join instead of
-    * two. The round-9 30x soak OOM'd the previous formulation
-    * (sharedCountsFor over cappedCandidatesProportional): it ran the
-    * capped self-join for candidates, then a SECOND, UNCAPPED
-    * inverted-index self-join (full Σ df²/2 pair slots — 1.25e9 at the
-    * 150 k-doc soak corpus) whose output was shuffled WHOLE through a
-    * left-semi join against the equally-large candidate stream; the
-    * semi-join's per-partition hash build is what exhausted the heap.
-    * Here the capped self-join IS the shared counter:
-    *
-    *   shared(a,b) = sharedRare(a,b) + |stop(a) ∩ stop(b)|
-    *
-    *  - sharedRare comes straight off the rare-index self-join via a
-    *    partial-aggregating groupBy — candidacy (sharedRare >= 1) falls
-    *    out for free, no semi-join, and the quadratic slot stream is
-    *    map-side-combined and spillable instead of hash-table-resident;
-    *  - the stop-shingle contribution (df > cap shingles are excluded
-    *    from pair GENERATION but must still be COUNTED — scores use
-    *    full sets) is an array_intersect of per-doc stop-shingle sets
-    *    joined onto the already-aggregated pair table. Stop sets are
-    *    small by construction (at most vocabulary_postings/cap distinct
-    *    stop shingles corpus-wide), and they ride a per-doc side table,
-    *    never the pair stream.
-    *
-    * Output is value-identical to the old formulation (LlmOpsSpec pins
-    * pair-for-pair equality on a corpus WITH stop shingles), so the
-    * five consumer oracles replay unchanged. */
-  def cappedSharedCounts(sh: DataFrame, dfTab: DataFrame): DataFrame = {
-    val cap = propCap(sh)
-    val withCap = dfTab.crossJoin(broadcast(cap))
-    val rareIdx = sh.join(withCap.filter(col("df") <= col("cap"))
-      .select("shingle"), Seq("shingle"))
-    val pairsRare = rareIdx.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(rareIdx.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared_rare"))
-    val stopSets = sh.join(withCap.filter(col("df") > col("cap"))
-        .select("shingle"), Seq("shingle"))
-      .groupBy("doc_id").agg(collect_set(col("shingle")).as("stopset"))
-    // one per-doc side table (set size + stop set) joined twice, not four
-    // separate count/set joins shuffling the pair table each time
-    val docSide = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
-      .join(stopSets, Seq("doc_id"), "left")
-    pairsRare
-      .join(docSide.select(col("doc_id").as("doc_a"),
-        col("c").as("ca"), col("stopset").as("sa")), "doc_a")
-      .join(docSide.select(col("doc_id").as("doc_b"),
-        col("c").as("cb"), col("stopset").as("sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (col("shared_rare") + when(col("sa").isNull || col("sb").isNull, lit(0))
-          .otherwise(size(array_intersect(col("sa"), col("sb")))).cast("bigint"))
-          .as("shared"),
-        col("ca"), col("cb"))
-  }
-
-  /** [[cappedSharedCounts]] with EXACT-DUP COLLAPSE — the staged
-    * artifact's rows are unchanged, but the quadratic work runs on one
-    * representative per distinct text. Validity: `shared`, `ca`, `cb`
-    * and candidacy (≥ 1 shared rare shingle) are pure functions of the
-    * two documents' shingle SETS, and exact-text duplicates have
-    * identical sets by construction — so every pair (a, b) inherits its
-    * value from the rep pair (rep(a), rep(b)), and a group's internal
-    * pairs share ALL c shingles (candidates iff the text has ≥ 1 rare
-    * shingle). df and the proportional cap stay FULL-CORPUS (rarity is
-    * a property of the corpus, not of the distinct-text set), so the
-    * rare/stop split is bit-identical to the uncollapsed form. On a
-    * re-crawl-shaped corpus (the 30× soak: ~30-way replication) the
-    * rare self-join's slot volume drops ~dup² (1.25e9 → ~1.4e6 slots);
-    * only the Θ(dup²) OUTPUT expansion — two joins through the member
-    * map — scales with duplication, and that is the artifact's
-    * inherent row count. LlmOpsSpec pins pair-for-pair equality against
-    * the uncollapsed formulation on a corpus with duplicate groups AND
-    * stop shingles. */
   /** The full-corpus proportional df cap as a 1-row broadcast frame:
-    * max(64, ⌈n_docs/200⌉). THE single definition of the cap policy —
-    * every capped path (candidates, staging, volume bound, winnow)
-    * derives from here, so a policy change is one edit. */
+    * greatest(64, ⌈n_docs/200⌉), i.e. 0.5% of the corpus. THE single
+    * definition of the cap policy — every capped path (staging, volume
+    * bound, rep stats, winnow) derives from here, so a policy change is
+    * one edit.
+    *
+    * The ceiling is INTEGER division, (n_docs + 199) div 200, so every
+    * engine agrees bit-for-bit at any corpus size: ceil of n·0.005 in
+    * doubles rounds UP spuriously whenever n is a multiple of 200 (0.005
+    * has no binary representation). The cap is proportional because an
+    * ABSOLUTE cap is a recall cliff: duplication multiplies every
+    * shingle's df and pushes previously-rare shingles past a fixed 64
+    * (the 10× soak exposed it on the winnow path and, at 7% of true
+    * pairs, on this one). "Too common to be discriminative" is a
+    * fraction of the corpus, not a constant. It equals 64 at every
+    * shipped SF, and 250 at the 10× soak's 50 k docs. */
   private def propCap(fullSh: DataFrame): DataFrame =
     fullSh.agg(countDistinct("doc_id").as("n_docs"))
       .select(greatest(lit(64L),
         expr("(n_docs + 199) div 200")).as("cap"))
 
-  /** The REP-LEVEL shared-count table (ra < rb, shared, ca, cb) over one
-    * representative per distinct text — the entire quadratic work of the
-    * capped near-dup family. Rarity (df <= cap) stays FULL-corpus; only
-    * the self-join runs on the distinct-text index. This is the staged
-    * production artifact: since `shared`/`ca`/`cb` are pure functions of
-    * the two shingle SETS, every derived measure (Jaccard, containment,
-    * rank) is INVARIANT across exact-dup group members, so consumers
-    * filter/rank here and expand through the member map afterwards —
-    * nothing dup²-sized is ever staged. */
+  /** (ra < rb, shared, ca, cb) for every pair of `shR` documents sharing
+    * at least one RARE (df <= [[propCap]]) shingle, with `shared`
+    * counting over FULL shingle sets. `shR` is one representative per
+    * distinct text on the rep path and the full index on the doc-level
+    * path ([[docLevelPath]]); rarity stays FULL-corpus either way, since
+    * it is a property of the corpus, not of the distinct-text set.
+    *
+    * Stop shingles (df > cap) are left out of pair GENERATION — a df-f
+    * bucket emits O(f²) pairs — but still COUNT, because scores use full
+    * sets. One self-join does both:
+    *
+    *   shared(a,b) = sharedRare(a,b) + |stop(a) ∩ stop(b)|
+    *
+    *  - sharedRare comes straight off the rare-index self-join via a
+    *    partial-aggregating groupBy: candidacy (sharedRare >= 1) falls
+    *    out for free, and the quadratic slot stream is map-side-combined
+    *    and spillable instead of hash-table-resident;
+    *  - the stop term is an array_intersect of per-doc stop-shingle sets
+    *    joined onto the already-aggregated pair table. Stop sets are
+    *    small by construction (at most vocabulary_postings/cap distinct
+    *    stop shingles corpus-wide) and ride a per-doc side table, never
+    *    the pair stream.
+    *
+    * Why one join: a two-join form — the capped self-join for candidates,
+    * then a SECOND, UNCAPPED inverted-index self-join (Σ df²/2 pair
+    * slots, 1.25e9 at the 150 k-doc 30× soak corpus) shuffled whole
+    * through a left-semi join against the candidate stream — OOM'd that
+    * soak in the semi-join's per-partition hash build.
+    *
+    * This is the staged production artifact. Since `shared`/`ca`/`cb`
+    * are pure functions of the two shingle SETS, every derived measure
+    * (Jaccard, containment, rank) is INVARIANT across exact-dup group
+    * members, so consumers filter/rank here and expand through the member
+    * map afterwards ([[expandQualified]]) — nothing dup²-sized is ever
+    * staged. */
   def cappedRepPairs(shR: DataFrame, fullSh: DataFrame,
                      dfTab: DataFrame): DataFrame = {
     val withCap = dfTab.crossJoin(broadcast(propCap(fullSh)))
@@ -371,6 +264,8 @@ object Dedup {
     val stopSetsR = shR.join(withCap.filter(col("df") > col("cap"))
         .select("shingle"), Seq("shingle"))
       .groupBy("doc_id").agg(collect_set(col("shingle")).as("stopset"))
+    // one per-doc side table (set size + stop set) joined twice, not four
+    // separate count/set joins shuffling the pair table each time
     val docSideR = shR.groupBy("doc_id").agg(count(lit(1)).as("c"))
       .join(stopSetsR, Seq("doc_id"), "left")
     pairsRareR
@@ -385,67 +280,6 @@ object Dedup {
         col("ca"), col("cb"))
   }
 
-  def cappedSharedCountsCollapsed(shR: DataFrame, fullSh: DataFrame,
-                                  dfTab: DataFrame, repMap: DataFrame): DataFrame = {
-    val withCap = dfTab.crossJoin(broadcast(propCap(fullSh)))
-    val rareIdxR = shR.join(withCap.filter(col("df") <= col("cap"))
-      .select("shingle"), Seq("shingle"))
-    val docSideR = shR.groupBy("doc_id").agg(count(lit(1)).as("c"))
-    val repPairs = cappedRepPairs(shR, fullSh, dfTab)
-    val members = repMap.select(col("rep"), col("doc_id").as("m"))
-    // cross-group expansion: group members interleave across groups, so
-    // the output pair is (least, greatest) and ca/cb FOLLOW the
-    // orientation (ca is doc_a's set size, not rep_a's)
-    val cross = repPairs
-      .join(members.select(col("rep").as("ra"), col("m").as("ma")), "ra")
-      .join(members.select(col("rep").as("rb"), col("m").as("mb")), "rb")
-      .select(least(col("ma"), col("mb")).as("doc_a"),
-        greatest(col("ma"), col("mb")).as("doc_b"),
-        col("shared"),
-        when(col("ma") < col("mb"), col("ca")).otherwise(col("cb")).as("ca"),
-        when(col("ma") < col("mb"), col("cb")).otherwise(col("ca")).as("cb"))
-    // within-group pairs: identical texts share all c shingles; they are
-    // candidates iff the text has ≥ 1 RARE shingle (a stop-only text's
-    // copies never meet in the rare self-join — same as uncollapsed)
-    val rareReps = rareIdxR.select("doc_id").distinct()
-    val within = members
-      .join(docSideR.join(rareReps, Seq("doc_id"), "left_semi")
-        .select(col("doc_id").as("rep"), col("c")), "rep")
-      .select(col("rep"), col("m").as("ma"), col("c"))
-      .join(members.select(col("rep"), col("m").as("mb")), "rep")
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
-        col("c").as("shared"), col("c").as("ca"), col("c").as("cb"))
-    cross.unionByName(within)
-  }
-
-  private def cappedCandidatesBy(sh: DataFrame, maxDf: org.apache.spark.sql.Column): DataFrame = {
-    val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("shingle")
-    val idx = sh.join(rare, Seq("shingle"))
-    // no distinct: downstream verification is a left-semi probe, which
-    // tolerates duplicate pairs — a pair-level dedup here would be a
-    // full extra shuffle of the candidate stream
-    idx.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(idx.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-  }
-
-  /** Prefix-filtered near-dup candidates (the PPJoin family's prefix
-    * principle): order all shingles canonically by ascending document
-    * frequency (rarest first, ties by value), keep only each document's
-    * first c - ceil(t*c) + 1 shingles in that order, and self-join just
-    * those. Two docs with Jaccard >= t MUST share a prefix shingle — if
-    * they only shared suffix (frequent) shingles, fewer than t*c of
-    * their shingles could overlap. Candidates shrink from "any shared
-    * shingle" to typically a few per doc, and because prefixes hold the
-    * RAREST shingles, the df² bucket blowup concentrates where df is
-    * smallest. Lossless for threshold t, unlike a df cap. */
-  /** Each document's prefix shingles under the rarest-first canonical
-    * order: the first c - ceil(t*c) + 1 of its shingles by (df, value).
-    */
   /** Global rarest-first rank per distinct shingle, fully distributed:
     * a range-partitioned sort on (df, shingle) followed by RDD
     * zipWithIndex — contiguous global ranks with NO single-partition
@@ -465,6 +299,17 @@ object Dedup {
       sorted.schema.head.copy(nullable = false), StructField("rank", LongType, nullable = false))))
   }
 
+  /** Each document's prefix shingles (the PPJoin family's prefix
+    * principle): order all shingles canonically by ascending document
+    * frequency (rarest first, ties by value) and keep the first
+    * c - ceil(t*c) + 1 of each document's shingles in that order. Two
+    * docs with Jaccard >= t MUST share a prefix shingle — if they only
+    * shared suffix (frequent) shingles, fewer than t*c of their shingles
+    * could overlap. Self-joined by [[pairsSharing]], candidates shrink
+    * from "any shared shingle" to typically a few per doc, and because
+    * prefixes hold the RAREST shingles, the df² bucket blowup
+    * concentrates where df is smallest. Lossless for threshold t, unlike
+    * a df cap. */
   def prefixes(sh: DataFrame, t: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // global rank SIDE TABLE (one long per distinct shingle): the
@@ -516,9 +361,6 @@ object Dedup {
       .select("doc_a", "doc_b")
   }
 
-  def prefixCandidates(sh: DataFrame, t: Double): DataFrame =
-    pairsSharing(prefixes(sh, t), t)
-
   /** (doc_a, doc_b, shared, ca, cb) for every unordered doc pair sharing
     * at least one shingle — the inverted-index self-join + shared-count
     * aggregate that Jaccard, containment, and edge building all start
@@ -542,9 +384,9 @@ object Dedup {
     * over one representative per distinct text, qualifying pairs
     * expanded through the member map).
     *
-    * Both paths are CORRECT on any corpus — LlmOpsSpec pins pair-for-
-    * pair equality on a fixture with 40-way duplicate groups, and
-    * RepCollapseGateSpec A/Bs the shipped queries across the gate — the
+    * Both paths are CORRECT on any corpus — RepCollapseGateSpec pins
+    * row-for-row equality of the shipped queries across the gate, on a
+    * fixture with 10-way duplicate groups and a stop shingle — the
     * choice is purely a cost model: the rep indirection saves ~dup² of
     * self-join work on a re-crawl-shaped corpus (OOM → 41 s at 30×) but
     * COSTS an extra staged artifact plus 2-3 expansion joins per
@@ -934,11 +776,6 @@ object Dedup {
     * per shingle instead of 1x16. */
   def stagedMinhashSigs(s: SparkSession, dir: String): DataFrame =
     Staged(s, s"$dir|minhash")(minhashSignature(stagedShingles(s, dir)))
-  /** Substring-window fingerprints staged: dedup_substring_spans
-    * references the grams table twice (corpus-wide occ groupBy + the
-    * probe side of the join back), and the up-to-8192-windows-per-doc
-    * explode + hash60 pipeline is the query's dominant cost — unstaged
-    * it ran twice. */
   /** df-capped shared counts staged at REP level: FIVE registered
     * queries (jaccard, capped, containment, containment_topk,
     * cross_source) consume the identical (ra, rb, shared, ca, cb)
@@ -1154,6 +991,11 @@ object Dedup {
       .select(col("doc_id"), col("fp")).distinct()
   }
 
+  /** Substring-window fingerprints staged: dedup_substring_spans
+    * references the grams table twice (corpus-wide occ groupBy + the
+    * probe side of the join back), and the up-to-8192-windows-per-doc
+    * explode + hash60 pipeline is the query's dominant cost — unstaged
+    * it ran twice. */
   def stagedGrams(s: SparkSession, dir: String): DataFrame =
     Staged(s, s"$dir|grams|$SubstrLen") {
       val L = SubstrLen
@@ -1337,8 +1179,7 @@ object Dedup {
     // Inverted-index n-gram Jaccard near-dup pairs (threshold 0.5),
     // SHIPPED via the df-capped candidate path: stop-shingles (document
     // frequency > the corpus-proportional cap, greatest(64, ⌈n/200⌉) —
-    // see cappedCandidatesProportional) are dropped before the
-    // self-join — a df-f bucket
+    // see propCap) are dropped before the self-join — a df-f bucket
     // emits O(f²) pairs, so one boilerplate sentence shared by most of
     // a 100 TB corpus would otherwise make a df≈N bucket → N² pairs in
     // one task — then survivors are scored on their FULL shingle sets.
@@ -1983,7 +1824,7 @@ object Dedup {
        |WHERE CAST(shared AS DOUBLE) / (ca.c + cb.c - shared) >= 0.5
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** DuckDB twin of [[cappedCandidatesProportional]]: candidate pairs
+  /** DuckDB twin of [[cappedRepPairs]]' candidacy rule: candidate pairs
     * must share at least one shingle with document frequency <= the
     * corpus-proportional cap greatest(64, ceil(n_docs/200)) — integer
     * ceiling division, so both engines agree at any corpus size; scores

@@ -129,6 +129,27 @@ object Similarity {
   private def withNorm(emb: DataFrame): DataFrame =
     emb.withColumn("nrm", sqrt(DotProductFloat(col("embedding"), col("embedding"))))
 
+  /** The cosine top-k tail every ANN search shares: drop the query
+    * itself, score each (query, candidate) pair with one codegen'd dot
+    * product over precomputed norms, keep each query's k best (ties by
+    * vec_id) and round the score. `joined` carries the corpus side's
+    * vec_id/embedding/nrm and the query side's query_id/qv/qn; the join
+    * that produced it — broadcast, cross or shuffle-hash — stays at the
+    * caller. */
+  private def cosineTopK(joined: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
+    joined
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        (DotProductFloat(col("embedding"), col("qv")) /
+          (col("nrm") * col("qn"))).as("score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("vec_id"),
+        round(col("score"), 6).as("score"))
+      .orderBy("query_id", "rank")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Exact cosine top-10 for each query vector (vec_id < 5), excluding
@@ -140,18 +161,7 @@ object Similarity {
       val q = emb.filter(col("vec_id") < QuerySetSize)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("nrm").as("qn"))
-      val scored = emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-      val w = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(emb.crossJoin(broadcast(q)), TopK)
     }),
 
     // Same queries, candidates restricted to the query's sign-LSH bucket.
@@ -161,18 +171,7 @@ object Similarity {
       val q = emb.filter(col("vec_id") < QuerySetSize)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("nrm").as("qn"), col("bucket"))
-      val scored = emb.join(broadcast(q), Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-      val w = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(emb.join(broadcast(q), Seq("bucket")), TopK)
     }),
 
     // APPROXIMATE embedding near-duplicate pairs above a cosine
@@ -266,17 +265,7 @@ object Similarity {
       val q = assigned.filter(col("vec_id") < QuerySetSize)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("nrm").as("qn"), col("cell"))
-      val wr = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      assigned.join(broadcast(q), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(assigned.join(broadcast(q), Seq("cell")), TopK)
     }),
 
     // Multi-probe bucketed search — ann_lsh_bucketed with the query
@@ -296,18 +285,7 @@ object Similarity {
           explode(concat(array(col("bucket")),
             array((0 until BucketBits).map(j =>
               col("bucket").bitwiseXOR(lit(1L << j))): _*))).as("bucket"))
-      val scored = emb.join(broadcast(q), Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-      val w = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(emb.join(broadcast(q), Seq("bucket")), TopK)
     }),
 
     // RECALL@K EVAL — the measurement an ANN deployment publishes before
@@ -355,17 +333,7 @@ object Similarity {
       val q = assigned.filter(col("vec_id") < QuerySetSize)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("nrm").as("qn"), col("cell"))
-      val wr = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      assigned.join(broadcast(q), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(assigned.join(broadcast(q), Seq("cell")), TopK)
     }),
 
     // PERSISTED-INDEX serve — the lifecycle the trained variants lack:
@@ -388,17 +356,7 @@ object Similarity {
       val q = assigned.filter(col("vec_id") < QuerySetSize)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("nrm").as("qn"), col("cell"))
-      val wr = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      assigned.join(broadcast(q), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(assigned.join(broadcast(q), Seq("cell")), TopK)
     }),
 
     // PERSISTED-INDEX upsert — version N+1 of the stored inverted file:
@@ -450,17 +408,7 @@ object Similarity {
       val q = assigned
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("nrm").as("qn"), col("cell"))
-      val wr = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      assigned.hint("shuffle_hash").join(q, Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= BatchTopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(assigned.hint("shuffle_hash").join(q, Seq("cell")), BatchTopK)
     }),
 
     // HARD-NEGATIVE MINING — the contrastive-training payoff of the
@@ -518,17 +466,7 @@ object Similarity {
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("nrm").as("qn"))
         .join(probes.select(col("vec_id").as("query_id"), col("cell")), "query_id")
-      val wr = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
-      assigned.hint("shuffle_hash").join(q, Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (DotProductFloat(col("embedding"), col("qv")) /
-            (col("nrm") * col("qn"))).as("score"))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= BatchTopK)
-        .select(col("query_id"), col("rank"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
+      cosineTopK(assigned.hint("shuffle_hash").join(q, Seq("cell")), BatchTopK)
     }),
 
     // SQ8 scalar-quantized search: each dimension is linearly quantized

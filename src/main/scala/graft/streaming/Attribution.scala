@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Typed per-key LAST-TOUCH ATTRIBUTION — the third O14 analogue next to
   * [[Sessionize]] and [[Funnel]] (reference generic stateful bolt hook,
@@ -16,8 +16,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale: state is O(1) per user (a single Touch), the smallest possible
   * stateful footprint; in streaming the state store carries it across
-  * micro-batches indefinitely — production would put a TTL on idle users
-  * (GroupStateTimeout / TTLConfig), which changes retention, not credit.
+  * micro-batches indefinitely — production puts a TTL on idle users
+  * ([[attributionTWS]]'s TTLConfig), which changes retention, not credit.
   */
 object Attribution {
 
@@ -62,32 +62,11 @@ object Attribution {
       }
   }
 
-  private def updateFn(uid: Long, events: Iterator[Ev],
-                       state: GroupState[Touch]): Iterator[Credit] = {
-    val (out, touch) = fold(events.toArray.sortBy(sortKey).iterator, state.getOption)
-    touch.foreach(state.update)
-    out.iterator
-  }
-
-  /** Streaming credits: the Touch survives across micro-batches, so a
-    * purchase in batch N credits a click from batch N−k. Append mode;
-    * per-batch arrival order within a user resolves by (ts, event_id)
-    * like the batch path (cross-batch disorder is the usual event-time
-    * caveat: a touch arriving after the purchase it should have credited
-    * is attribution's inherent at-arrival semantics). */
-  def attribution(df: DataFrame): Dataset[Credit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    asEv(df).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(updateFn)
-  }
-
   // -------------------------------------------------------------------
-  // transformWithState variant — the same last-touch credit on Spark
-  // 4.x's supported arbitrary-state API (same pattern as
-  // Sessionize.SessionProcessor / Funnel.FunnelProcessor): a typed
+  // Streaming credits on Spark 4.x's arbitrary-state API (same pattern
+  // as Sessionize.SessionProcessor / Funnel.FunnelProcessor): a typed
   // ValueState[Touch] carrying the one-row-per-user state, the fold
-  // shared with the GroupState path so the two APIs cannot drift. No
+  // shared with the batch path so the two cannot drift. No
   // timers — credits emit the moment the purchase arrives. State
   // retention: with the default TTLConfig.NONE the Touch persists
   // indefinitely — at 100× user cardinality that is a real RocksDB
@@ -121,15 +100,21 @@ object Attribution {
   }
 
   /** Streaming credits on transformWithState; run with the RocksDB state
-    * store provider, append output mode. A non-NONE `ttl` bounds idle-user
-    * state retention (and flips the operator to processing-time mode,
-    * which the engine requires for TTL state — behavior is otherwise
-    * identical: no timers are registered). Caveat for bounded harnesses:
-    * in processing-time mode every no-data micro-batch advances the
-    * clock and schedules another for TTL eviction, so Trigger.AvailableNow
-    * never drains unless spark.sql.streaming.noDataMicroBatches.enabled
-    * is false (expired state is skipped lazily on read either way —
-    * eviction batches only reclaim storage). */
+    * store provider, append output mode. The Touch survives across
+    * micro-batches, so a purchase in batch N credits a click from batch
+    * N−k; per-batch arrival order within a user resolves by (ts,
+    * event_id) like the batch path (cross-batch disorder is the usual
+    * event-time caveat: a touch arriving after the purchase it should
+    * have credited is attribution's inherent at-arrival semantics).
+    * A non-NONE `ttl` bounds idle-user state retention (and flips the
+    * operator to processing-time mode, which the engine requires for TTL
+    * state — behavior is otherwise identical: no timers are registered).
+    * Caveat for bounded harnesses: in processing-time mode every no-data
+    * micro-batch advances the clock and schedules another for TTL
+    * eviction, so Trigger.AvailableNow never drains unless
+    * spark.sql.streaming.noDataMicroBatches.enabled is false (expired
+    * state is skipped lazily on read either way — eviction batches only
+    * reclaim storage). */
   def attributionTWS(df: DataFrame,
       ttl: org.apache.spark.sql.streaming.TTLConfig =
         org.apache.spark.sql.streaming.TTLConfig.NONE): Dataset[Credit] = {

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Typed per-user funnel state machine — the second O14-style stateful
   * operator next to [[Sessionize]]: arbitrary user code folding one
@@ -19,8 +19,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale: per-user history sorts inside the group — fine for bounded
   * per-key cardinality, exactly like the reference's stateful bolt;
   * unbounded keys should use the declarative twin. Streaming: the same
-  * transition function runs under mapGroupsWithState with per-user
-  * FunnelState surviving across micro-batches.
+  * transition function runs under transformWithState with per-user
+  * FunnelState surviving across micro-batches ([[funnelStreamTWS]]).
   */
 object Funnel {
 
@@ -80,35 +80,11 @@ object Funnel {
       .orderBy("stage")
   }
 
-  private def updateFn(uid: Long, events: Iterator[Ev],
-                       state: GroupState[FunnelState]): (Long, Int) = {
-    val next = advance(
-      state.getOption.getOrElse(FunnelState(Unset, Unset, Unset)), ordered(events))
-    state.update(next)
-    (uid, stageOf(next))
-  }
-
-  /** Streaming run: per-user FunnelState survives across micro-batches;
-    * update mode emits each user's current stage per trigger. Caveat the
-    * transition function inherits from event order: within a trigger
-    * events sort by event time, across triggers the source must deliver
-    * in order (true for the file-per-batch ingest shape) — out-of-order
-    * ARRIVAL across triggers needs a watermark-buffered variant. */
-  def funnelStream(events: DataFrame): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.select(col("user_id"), col("event_type"), col("ts"), col("event_id")).as[Ev]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[FunnelState, (Long, Int)](GroupStateTimeout.NoTimeout)(updateFn)
-      .toDF("user_id", "stage")
-  }
-
   // -------------------------------------------------------------------
-  // transformWithState variant — the same funnel transition on Spark
-  // 4.x's supported arbitrary-state API (same pattern as
+  // Streaming funnel on Spark 4.x's arbitrary-state API (same pattern as
   // Sessionize.SessionProcessor): a typed ValueState[FunnelState], the
-  // per-batch fold shared with the GroupState path (advance), so the two
-  // APIs cannot drift. No timers — funnel progress has no gap horizon to
+  // per-batch fold shared with the batch run (advance), so the two
+  // cannot drift. No timers — funnel progress has no gap horizon to
   // flush; each trigger re-emits the user's current stage (update-mode
   // semantics). Streaming-only; requires the RocksDB state store
   // provider (a transformWithState engine restriction).
@@ -134,7 +110,13 @@ object Funnel {
   }
 
   /** Streaming funnel on transformWithState; run with the RocksDB state
-    * store provider, update output mode. A non-NONE `ttl` bounds idle-user
+    * store provider, update output mode. Per-user FunnelState survives
+    * across micro-batches and each trigger emits the user's current
+    * stage. Caveat the transition function inherits from event order:
+    * within a trigger events sort by event time, across triggers the
+    * source must deliver in order (true for the file-per-batch ingest
+    * shape) — out-of-order ARRIVAL across triggers needs a
+    * watermark-buffered variant. A non-NONE `ttl` bounds idle-user
     * state retention — an expired user restarts the funnel from stage 0 on
     * their next event (and the operator flips to processing-time mode,
     * which the engine requires for TTL state; no timers are registered,

@@ -109,20 +109,15 @@ object Sessionize {
     * withWatermark("ts", …) upstream and run with the RocksDB state
     * store provider.
     *
-    * `ttl` exists for API uniformity with [[Funnel.funnelStreamTWS]] /
-    * [[Attribution.attributionTWS]] but must stay NONE here: the engine
-    * only allows TTL state under TimeMode.ProcessingTime, while the
-    * sessionizer's correctness depends on EVENT-TIME timers (the gap
-    * flush at `last + GapMs`). That is not a retention gap — the gap
-    * timer already clears every idle user's state one gap past the
-    * watermark (handleExpiredTimer → st.clear()), which is a TIGHTER
-    * bound than any wall-clock TTL a caller would configure. */
-  def sessionizeTWS(df: DataFrame,
-      ttl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE): Dataset[Session] = {
-    require(ttl == org.apache.spark.sql.streaming.TTLConfig.NONE,
-      "sessionizeTWS: TTL state requires processing-time mode, but the session gap " +
-        "flush needs event-time timers; idle state is already cleared by the gap timer")
+    * Unlike [[Funnel.funnelStreamTWS]] / [[Attribution.attributionTWS]]
+    * it takes no TTL: the engine only allows TTL state under
+    * TimeMode.ProcessingTime, while the sessionizer's correctness
+    * depends on EVENT-TIME timers (the gap flush at `last + GapMs`).
+    * That is not a retention gap — the gap timer already clears every
+    * idle user's state one gap past the watermark (handleExpiredTimer →
+    * st.clear()), which is a TIGHTER bound than any wall-clock TTL a
+    * caller would configure. */
+  def sessionizeTWS(df: DataFrame): Dataset[Session] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("user_id"), col("ts"), col("value")).as[Ev]

@@ -90,34 +90,11 @@ class LlmOpsSpec extends SparkSpec {
     val all = sh.select(col("doc_id").as("doc_a"), col("shingle"))
       .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b")).count()
-    val pref = Dedup.prefixCandidates(sh, 0.5).count()
+    val pref = Dedup.pairsSharing(Dedup.prefixes(sh, 0.5), 0.5).count()
     assert(pref < all, s"prefix filtering did not reduce candidates: $pref vs $all")
   }
 
-  test("df cap prunes stop-shingles from candidate generation but not results") {
-    import spark.implicits._
-    // "x y z" appears in EVERY doc (df=4 > cap=2) — a stop-shingle; docs
-    // 1/2 are near-dups sharing rare shingles too; docs 3/4 share ONLY
-    // the stop-shingle (low jaccard — never reportable).
-    val docs = Seq(
-      (1L, "x y z a b c d e"),
-      (2L, "x y z a b c d f"),
-      (3L, "x y z p q r s t"),
-      (4L, "x y z u v w m n")
-    ).toDF("doc_id", "text")
-    val sh = Dedup.shingles(docs)
-    val cand = Dedup.cappedCandidates(sh, maxDf = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cand.contains((1L, 2L)), "near-dup pair must survive the cap via its rare shingles")
-    assert(!cand.contains((3L, 4L)), "stop-shingle-only pair must be pruned")
-    // and the full capped query equals exact jaccard >= 0.5 on this corpus
-    val pairs = Dedup.jaccardFor(Dedup.cappedCandidates(sh, 2), sh)
-      .filter(col("jaccard") >= 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 2L)))
-  }
-
-  test("one-join cappedSharedCounts equals the two-join staging on a stop-shingle corpus") {
+  test("one-join capped staging counts stop shingles in shared but never pairs on them") {
     import spark.implicits._
     // 100 docs, cap = max(64, ceil(100/200)) = 64. Shingle "STOP" is in
     // every doc (df=100 > 64): excluded from pair GENERATION, but pairs
@@ -130,57 +107,22 @@ class LlmOpsSpec extends SparkSpec {
         (11L to 100L).map(i => (i, s"u_$i"))
     val sh = rows.toDF("doc_id", "shingle")
     val dfTab = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    val old = Dedup.sharedCountsFor(Dedup.cappedCandidatesProportional(sh), sh)
-      .select("doc_a", "doc_b", "shared", "ca", "cb").collect().map(key).toSet
-    val neu = Dedup.cappedSharedCounts(sh, dfTab)
-      .select("doc_a", "doc_b", "shared", "ca", "cb").collect().map(key).toSet
-    assert(neu === old, "restructured staging must be pair-for-pair identical")
+    // reference in plain Scala from the same rows: every pair sharing a
+    // shingle of df <= 64, with |A ∩ B|, |A| and |B| over full sets
+    val sets = rows.groupBy(_._1).map { case (d, rs) => d -> rs.map(_._2).toSet }
+    val rare = rows.groupBy(_._2).collect { case (g, rs) if rs.size <= 64 => g }.toSet
+    val expected = (for {
+      (a, sa) <- sets; (b, sb) <- sets
+      if a < b && (sa & sb & rare).nonEmpty
+    } yield (a, b, (sa & sb).size.toLong, sa.size.toLong, sb.size.toLong)).toSet
+    val got = Dedup.cappedRepPairs(sh, sh, dfTab)
+      .select("ra", "rb", "shared", "ca", "cb").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    assert(got === expected, "capped staging must equal the set-level reference pair-for-pair")
     // the stop shingle IS counted: docs 1-2 share r1, r2 AND STOP
-    assert(neu.contains((1L, 2L, 3L, 3L, 3L)))
+    assert(got.contains((1L, 2L, 3L, 3L, 3L)))
     // stop-only co-occurrence (e.g. 11,12) is not a candidate
-    assert(!neu.exists(t => t._1 == 11L && t._2 == 12L))
-  }
-
-  test("collapsed capped staging equals the uncollapsed form under duplication + stop shingles") {
-    import spark.implicits._
-    // 100 docs, cap = greatest(64, ceil(100/200)) = 64; "STOP" is in every
-    // doc (df=100 > 64). Three exact-dup groups exercise every expansion
-    // arm: group A (docs 1-6, sets {STOP,r1,r2}) and group B (docs 7-10,
-    // sets {STOP,r2,r3}) meet through rare r2 (cross-group inheritance);
-    // each group's internal pairs share all c shingles (within-group
-    // arm); group C (docs 95-100, sets {STOP} only) has NO rare shingle,
-    // so its internal pairs must NOT appear. Docs 11-94 are singleton
-    // groups with a unique rare shingle.
-    val rows =
-      (1L to 100L).map(i => (i, "STOP")) ++
-        (1L to 6L).flatMap(i => Seq((i, "r1"), (i, "r2"))) ++
-        (7L to 10L).flatMap(i => Seq((i, "r2"), (i, "r3"))) ++
-        (11L to 94L).map(i => (i, s"u_$i"))
-    val sh = rows.toDF("doc_id", "shingle")
-    val dfTab = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val repMap = (
-      (1L to 6L).map(i => (i, 1L)) ++
-        (7L to 10L).map(i => (i, 7L)) ++
-        (11L to 94L).map(i => (i, i)) ++
-        (95L to 100L).map(i => (i, 95L))
-      ).toDF("doc_id", "rep")
-    val shR = sh.join(repMap.filter(col("doc_id") === col("rep"))
-      .select("doc_id"), Seq("doc_id"), "left_semi")
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    val flat = Dedup.cappedSharedCounts(sh, dfTab)
-      .select("doc_a", "doc_b", "shared", "ca", "cb").collect().map(key).toSet
-    val coll = Dedup.cappedSharedCountsCollapsed(shR, sh, dfTab, repMap)
-      .select("doc_a", "doc_b", "shared", "ca", "cb").collect().map(key).toSet
-    assert(coll === flat, "collapsed staging must be pair-for-pair identical")
-    // spot-pins: within-group A pair shares all 3 shingles incl. STOP
-    assert(coll.contains((1L, 2L, 3L, 3L, 3L)))
-    // cross-group A x B inherits the rep pair's counts (r2 + STOP)
-    assert(coll.contains((6L, 7L, 2L, 3L, 3L)))
-    // stop-only group C never becomes a candidate
-    assert(!coll.exists(t => t._1 >= 95L))
+    assert(!got.exists(t => t._1 == 11L && t._2 == 12L))
   }
 
   test("staging work budget is rep-level: heavy exact-duplication cannot trip it") {
@@ -238,12 +180,10 @@ class LlmOpsSpec extends SparkSpec {
         (83L to 228L).map(i => (i, "s_stop")) ++
         (229L to 20000L).map(i => (i, s"u_$i"))
     val sh = rows.toDF("doc_id", "shingle")
-    val prop = Dedup.cappedCandidatesProportional(sh).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val abs = Dedup.cappedCandidates(sh, 64).collect()
+    val dfTab = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+    val prop = Dedup.cappedRepPairs(sh, sh, dfTab).select("ra", "rb").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(prop.contains((1L, 2L)), "df-80 pair must survive the proportional cap")
-    assert(!abs.contains((1L, 2L)), "absolute 64 was expected to drop the df-80 pair")
     assert(!prop.contains((3L, 4L)), "df-148 boilerplate must stay pruned")
     // candidate volume stays bounded: only the df<=100 bucket fans out
     assert(prop.size === 80 * 79 / 2)

@@ -34,16 +34,22 @@ class RepCollapseGateSpec extends SparkSpec {
     try body finally Dedup.pinDocLevel(spark, dir, auto)
   }
 
-  /** 12 distinct 6-token base texts, 5 of them with a 7-token near-dup
-    * variant (J = 4/5 ≥ 0.5 cross-group pairs), every text duplicated
-    * 10-fold across two sources → within-group pair mass 17 · C(10,2) =
-    * 765 > max(64, 170/100) ⇒ the gate must pick the REP path. */
+  /** 12 distinct base texts, 5 of them with a one-token-longer near-dup
+    * variant, plus a stop-only text; every text duplicated 10-fold across
+    * two sources → within-group pair mass 18 · C(10,2) = 810 >
+    * max(64, 180/100) ⇒ the gate must pick the REP path.
+    *
+    * Every text opens with the 3-gram `x y z`, so that shingle has
+    * df = 180 > the cap of 64: a stop shingle, left out of capped pair
+    * generation but counted in every score (base/variant J = 7/8). The
+    * stop-only text is that 3-gram alone, with no rare shingle, so its
+    * copies (doc ids [[StopOnly]]) are never capped candidates. */
   private lazy val dupDir: String = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-gatespec").toString
-    val bases = (0 until 12).map(i => s"a$i b$i c$i d$i e$i f$i")
-    val variants = (0 until 5).map(i => s"a$i b$i c$i d$i e$i f$i g$i")
-    val texts = bases ++ variants
+    val bases = (0 until 12).map(i => s"x y z a$i b$i c$i d$i e$i f$i")
+    val variants = (0 until 5).map(i => s"x y z a$i b$i c$i d$i e$i f$i g$i")
+    val texts = bases ++ variants :+ "x y z"
     val docs = for { t <- texts.indices; k <- 0 until 10 }
       yield ((t * 10 + k).toLong, texts(t), if (k % 2 == 0) "s1" else "s2")
     docs.toDF("doc_id", "text", "source")
@@ -73,10 +79,41 @@ class RepCollapseGateSpec extends SparkSpec {
     val doc = pinned(dupDir, docLevel = true)(collectAll(dupDir))
     for (n <- gatedQueries)
       assert(auto(n) === doc(n), s"$n drifted between rep and doc-level paths on the dup fixture")
-    // non-vacuous: within-group (J = 1) AND cross-group (J = 0.8) pairs both present
+    // non-vacuous: within-group (J = 1) AND cross-group (J = 7/8) pairs both present
     val jac = auto("dedup_ngram_jaccard")
     assert(jac.length === 17 * (10 * 9 / 2) + 5 * 10 * 10,
       s"expected 765 within + 500 cross pairs, got ${jac.length}")
     assert(auto("dedup_cross_source").nonEmpty)
+  }
+
+  /** Doc ids of the stop-only text's 10 copies in [[dupDir]]. */
+  private val StopOnly = 170L until 180L
+
+  test("stop shingle: capped queries never pair stop-only docs, scores count it") {
+    def pairs(q: String, a: String, b: String): Seq[(Long, Long)] =
+      SparkEntry.queries(q)(spark, dupDir).select(a, b).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    for ((q, a, b) <- Seq(
+        ("dedup_ngram_jaccard", "doc_a", "doc_b"),
+        ("dedup_ngram_jaccard_capped", "doc_a", "doc_b"),
+        ("dedup_containment", "src_doc", "dst_doc"),
+        ("dedup_containment_topk", "src_doc", "dst_doc"))) {
+      val got = pairs(q, a, b)
+      assert(got.nonEmpty, s"$q reported no pairs")
+      assert(!got.exists { case (x, y) => StopOnly.contains(x) || StopOnly.contains(y) },
+        s"$q paired a stop-only document")
+    }
+    // the source rollup counts exactly the J >= 0.5 pairs, none stop-only
+    val rolled = SparkEntry.queries("dedup_cross_source")(spark, dupDir)
+      .collect().map(_.getAs[Long]("dup_pairs")).sum
+    assert(rolled === 17 * (10 * 9 / 2) + 5 * 10 * 10)
+    // the stop shingle is still counted: base/variant J = 7/8, not 6/7
+    val scores = SparkEntry.queries("dedup_ngram_jaccard")(spark, dupDir)
+      .collect().map(_.getAs[Double]("jaccard")).toSet
+    assert(scores === Set(1.0, 0.875))
+    // the lossless prefix path is not df-capped: the stop-only copies are
+    // J = 1 duplicates of each other there
+    assert(pairs("dedup_ngram_jaccard_prefix", "doc_a", "doc_b")
+      .contains((StopOnly.head, StopOnly.head + 1)))
   }
 }

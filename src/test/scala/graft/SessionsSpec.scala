@@ -15,9 +15,9 @@ class SessionsSpec extends AnyFunSuite {
     val confs = Sessions.clusterConfs("local-cluster[2,2,3000]", Map.empty).toMap
     assert(confs("spark.executor.memory") === "3000m")
     assert(confs("spark.executor.extraClassPath").endsWith("target/scala-2.13/classes"))
-    val env = Map("SPARK_GRAFT_EXEC_MEM" -> "1g", "SPARK_GRAFT_EXEC_CLASSPATH" -> "/cp")
+    val env = Map("SPARK_GRAFT_EXEC_CLASSPATH" -> "/cp")
     assert(Sessions.clusterConfs("local-cluster[2,2,3000]", env).toMap ===
-      Map("spark.executor.memory" -> "1g", "spark.executor.extraClassPath" -> "/cp"))
+      Map("spark.executor.memory" -> "3000m", "spark.executor.extraClassPath" -> "/cp"))
     assert(Sessions.clusterConfs("local[4]", env).isEmpty)
   }
 
