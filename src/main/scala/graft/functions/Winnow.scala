@@ -63,13 +63,11 @@ object WinnowFingerprints {
   * `maxGrams` positions — the substring-span fingerprint derivation.
   *
   * The declarative rendition (explode one row per position →
-  * `hash60(substring(text, pos, k))`) pays, per position, a UTF8String
-  * substring allocation, a commons-codec MessageDigest construction, a
-  * 32-char hex string and a 15-hex-digit conv() parse; this kernel
-  * reuses one digest and one output buffer per thread over one byte
-  * array per document (see [[GramHash]]). Values and row multiset are
-  * identical: same md5 byte ranges, position order preserved by
-  * explode, duplicates kept. */
+  * `hash60(substring(text, pos, k))`) pays, per position, a generated
+  * row and a UTF8String substring allocation; this kernel hashes byte
+  * ranges of one byte array per document (see [[GramHash]]). Values and
+  * row multiset are identical: same md5 byte ranges, position order
+  * preserved by explode, duplicates kept. */
 case class GramHashes(child: Expression, k: Int, maxGrams: Int)
     extends UnaryExpression {
 
@@ -100,39 +98,17 @@ object GramHashes {
 
 /** Per-position k-gram hash60 kernel shared by the winnow fold and the
   * substring-span gram index ([[GramHashes]]): every sliding k-char
-  * window of one document hashed as `PortableHash.hash60` (first 15 hex
-  * nibbles of md5), allocation-lean.
+  * window of one document hashed as `PortableHash.hash60`, allocation-lean.
   *
-  * The per-position work used to be: allocate a UTF8String substring,
-  * copy its bytes, allocate a fresh 16-byte digest array (and, on the
-  * expression path, a MessageDigest + 32-char hex string + a conv()
-  * parse of 15 hex chars). This kernel keeps ONE byte array for the
+  * Per position, an expression chain would allocate a UTF8String
+  * substring and then hash it. This kernel keeps ONE byte array for the
   * whole document (plus a char→byte offset table when the text is not
-  * pure ASCII), feeds `md.update(bytes, off, len)` directly from it, and
-  * reuses a thread-local MessageDigest and one 16-byte output buffer —
-  * zero per-gram allocation. Hash values are bit-identical: md5 over the
-  * identical UTF-8 byte range (char positions = SQL substring semantics,
-  * code-point counted). */
+  * pure ASCII) and feeds each window's byte range straight to
+  * [[PortableHash.digest60]] (a reused thread-local digest and output
+  * buffer) — zero per-gram allocation. Hash values are bit-identical:
+  * md5 over the identical UTF-8 byte range (char positions = SQL
+  * substring semantics, code-point counted). */
 object GramHash {
-
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** First 15 hex nibbles of a 16-byte md5 digest as a non-negative
-    * long — bit-identical to `conv(substring(md5(s), 1, 15), 16, 10)`. */
-  private def h60(dig: Array[Byte]): Long = {
-    var v = 0L
-    var j = 0
-    while (j < 15) {
-      val b = dig(j >> 1) & 0xff
-      val nibble = if ((j & 1) == 0) (b >> 4) & 0xf else b & 0xf
-      v = (v << 4) | nibble
-      j += 1
-    }
-    v
-  }
 
   private def utf8Len(b: Byte): Int =
     if ((b & 0x80) == 0) 1
@@ -147,16 +123,12 @@ object GramHash {
     val ngrams = math.min(nChars - (k - 1), maxGrams)
     if (ngrams <= 0) return Array.emptyLongArray
     val bytes = text.getBytes
-    val d = md.get()
-    val dig = new Array[Byte](16)
     val hs = new Array[Long](ngrams)
     if (bytes.length == nChars) {
       // ASCII fast path: byte offset == char offset, gram is k bytes
       var p = 0
       while (p < ngrams) {
-        d.update(bytes, p, k)
-        d.digest(dig, 0, 16) // writes + resets
-        hs(p) = h60(dig)
+        hs(p) = PortableHash.digest60(bytes, p, k)
         p += 1
       }
     } else {
@@ -169,9 +141,7 @@ object GramHash {
       off(nChars) = bytes.length
       var p = 0
       while (p < ngrams) {
-        d.update(bytes, off(p), off(p + k) - off(p))
-        d.digest(dig, 0, 16)
-        hs(p) = h60(dig)
+        hs(p) = PortableHash.digest60(bytes, off(p), off(p + k) - off(p))
         p += 1
       }
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Staged, Tables}
-import graft.functions.TextAnalysis
+import graft.functions.{ShingleSet, TextAnalysis}
 
 /** Deduplication suite over the documents table — the operators a
   * 100 TB pre-training corpus pipeline actually runs:
@@ -26,38 +26,31 @@ import graft.functions.TextAnalysis
 object Dedup {
 
   /** (doc_id, shingle) — distinct 3-gram word shingles per document:
-    * [[shingleSet]] exploded, a narrow projection at scan parallelism
-    * (see [[shinglesViaWindow]] for why not a window). */
+    * the [[graft.functions.ShingleSet]] kernel exploded, a narrow
+    * projection at scan parallelism (see [[shinglesViaWindow]] for why
+    * not a window). A document of fewer than 3 tokens has no rows. */
   def shingles(docs: DataFrame): DataFrame =
-    tokenized(docs).select(col("doc_id"), explode(shingleSet).as("shingle"))
+    docs.select(col("doc_id"), explode(ShingleSet(col("text"))).as("shingle"))
 
   /** (doc_id, shset) — [[shingles]] kept as one distinct array per
-    * document, computed within each row: no shuffle, no explode. */
+    * document in first-occurrence order, computed within each row: no
+    * shuffle, no explode. A document of fewer than 3 tokens has no row. */
   private[graft] def shingleSets(docs: DataFrame): DataFrame =
-    tokenized(docs).select(col("doc_id"), shingleSet.as("shset"))
-
-  /** (doc_id, toks) for documents long enough to have a 3-gram. */
-  private def tokenized(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-
-  /** The one definition of a document's shingles: the distinct 3-gram
-    * word array over its token array column `toks`. */
-  private def shingleSet: Column = array_distinct(expr(
-    "transform(sequence(0, size(toks) - 3)," +
-      " i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))"))
+    // the one-element explode is a Generate, which the null filter is not
+    // pushed below: over a projection it would be, and the kernel would
+    // run twice per row, once in the filter and once in the projection
+    docs.select(col("doc_id"), explode(array(ShingleSet(col("text")))).as("shset"))
+      .filter(col("shset").isNotNull)
 
   /** The window rendition of [[shingles]] (posexplode → lead ×2 →
     * distinct) — spec-only equivalence gate. The shipped version above
     * is ROW-LOCAL: a doc's distinct 3-gram set is a pure function of its
-    * own token array, so building it through a per-token window sort
-    * plus a corpus-wide distinct paid two full shuffles of the token
-    * stream for state that never crossed rows. transform +
-    * array_distinct keeps the index build a narrow projection at scan
-    * parallelism; the size-≥3 filter mirrors the lead-null drop, and
-    * the per-doc array_distinct equals the global distinct because
-    * doc_id is part of the pair. */
+    * own text, so building it through a per-token window sort plus a
+    * corpus-wide distinct paid two full shuffles of the token stream for
+    * state that never crossed rows. The row-local kernel keeps the index
+    * build a narrow projection at scan parallelism; its null below 3
+    * tokens mirrors the lead-null drop, and the per-doc distinct equals
+    * the global distinct because doc_id is part of the pair. */
   private[graft] def shinglesViaWindow(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
@@ -100,15 +93,18 @@ object Dedup {
   /** (doc_id, band, sig) for an arbitrary (bands × rows) tiling of the
     * 16 min-hashes: band signature = md5 of its `rows` concatenated
     * min-hashes. Pairs sharing any (band, sig) are candidates. */
-  def lshBandsCfg(sigs: DataFrame, bands: Int, rows: Int): DataFrame = {
-    require(bands * rows == NumHashes, s"$bands x $rows != $NumHashes")
-    sigs.select(col("doc_id"), explode(array(
-      (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          md5(concat_ws("|",
-            (b * rows until (b + 1) * rows).map(i => col(s"h$i").cast("string")): _*)).as("sig"))
-      }: _*)).as("bs"))
+  def lshBandsCfg(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
+    sigs.select(col("doc_id"), explode(bandSigs(bands, rows)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+
+  /** One row's (band, sig) structs over its h0..h15 columns. */
+  private[graft] def bandSigs(bands: Int = Bands, rows: Int = Rows): Column = {
+    require(bands * rows == NumHashes, s"$bands x $rows != $NumHashes")
+    array((0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        md5(concat_ws("|",
+          (b * rows until (b + 1) * rows).map(i => col(s"h$i").cast("string")): _*)).as("sig"))
+    }: _*)
   }
 
   /** The shipped 4 × 4 tiling. */
@@ -1001,14 +997,13 @@ object Dedup {
       val L = SubstrLen
       // 8192-position fan-out cap — NOT silent: corpus_cap_report counts
       // the docs and positions it truncates, and every consumer's oracle
-      // replays the same cap. r13: the per-position hashes come from the
-      // row-local GramHashes kernel (one reused digest over one byte
-      // array per doc) instead of explode(sequence) + a per-row
-      // hash60(substring(..)) expression chain, which paid a substring
-      // allocation + MessageDigest construction + hex string + conv()
-      // parse per position — same values, same row multiset, the explode
-      // now fans out ready-made longs (LlmOpsSpec pins kernel ≡
-      // expression rendition).
+      // replays the same cap. The per-position hashes come from the
+      // row-local GramHashes kernel (byte ranges of one byte array per
+      // doc, each through the one md5-60 routine that hash60 also uses)
+      // instead of explode(sequence) + a per-row hash60(substring(..)),
+      // which paid a generated row and a substring allocation per
+      // position — same values, same row multiset, the explode fans out
+      // ready-made longs (LlmOpsSpec pins kernel ≡ expression rendition).
       docsParallel(s, dir)
         .filter(length(col("text")) >= L)
         .select(col("doc_id"),

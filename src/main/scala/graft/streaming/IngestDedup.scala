@@ -39,32 +39,38 @@ object IngestDedup {
     * candidates (corpus × batch only), then exact Jaccard ≥ `threshold`
     * on full shingle sets, in one partition sorted by
     * (corpus_doc, new_doc). A batch doc that reuses a corpus doc_id is
-    * scored on its own shingles, never on the union of both. */
+    * scored on its own shingles, never on the union of both, and so is
+    * each of two batch docs that share a doc_id. */
   def pairsVsCorpus(corpusSh: DataFrame, corpusBands: DataFrame,
                     batchDocs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val setsB = Dedup.minhashOfSets(Dedup.shingleSets(batchDocs))
+    // The batch flows through one chain of joins, so its file is scanned
+    // and shingled once: each band row carries its document's shingle
+    // set, and the candidates carry it on to the scoring. Two references
+    // to the batch (bands, then sets) would plan two scans, since column
+    // pruning makes their subtrees differ and so defeats exchange reuse.
     // Broadcast hints sit on micro-batch frames only, so the cached corpus
     // tables are always the streamed, probed side. Without them the
     // planner picks sides by size estimate: a small corpus can look
     // smaller than a batch file, and a join's estimate multiplies its
     // inputs' sizes, so `cand` looks too large to broadcast and joining
     // it would shuffle all of `corpusSh`.
-    val bandsB = broadcast(Dedup.lshBands(setsB)
-      .select(col("doc_id").as("doc_b"), col("band"), col("sig")))
+    val bandsB = broadcast(Dedup.minhashOfSets(Dedup.shingleSets(batchDocs))
+      .select(col("doc_id").as("doc_b"), col("shset").as("sb"),
+        explode(Dedup.bandSigs()).as("bs"))
+      .select(col("doc_b"), col("sb"), col("bs.band").as("band"), col("bs.sig").as("sig")))
     // one row per shared band: a pair that shares several repeats, and
-    // the collect_sets below absorb the repeats
+    // grouping by pair below absorbs the repeats
     val cand = broadcast(corpusBands
       .select(col("doc_id").as("doc_a"), col("band"), col("sig"))
       .join(bandsB, Seq("band", "sig"))
-      .select("doc_a", "doc_b"))
-    // each candidate corpus doc's set and the batch docs it pairs with,
-    // from one probe of `corpusSh` against the one broadcast of `cand`
-    val setsA = corpusSh.join(cand, col("doc_id") === col("doc_a"))
-      .groupBy("doc_a")
-      .agg(collect_set(col("shingle")).as("sa"), collect_set(col("doc_b")).as("docs_b"))
-      .select(col("doc_a"), col("sa"), explode(col("docs_b")).as("doc_b"))
-    Dedup.jaccardOfSets(setsA
-      .join(broadcast(setsB.select(col("doc_id").as("doc_b"), col("shset").as("sb"))), "doc_b"))
+      .select("doc_a", "doc_b", "sb"))
+    // each candidate pair's corpus set from one probe of `corpusSh`. The
+    // batch set is part of the key, so two batch docs under one doc_id
+    // are each scored on their own set (the same text twice scores once).
+    val pairs = corpusSh.join(cand, col("doc_id") === col("doc_a"))
+      .groupBy("doc_a", "doc_b", "sb")
+      .agg(collect_set(col("shingle")).as("sa"))
+    Dedup.jaccardOfSets(pairs)
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a").as("corpus_doc"), col("doc_b").as("new_doc"),
         round(col("jaccard"), 6).as("jaccard"))

@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,12 +15,15 @@ import graft.sources.VersionedStore
 import graft.streaming.IngestDedup
 
 /** The ingest bolt ([[IngestDedup.pairsVsCorpus]]): its row-local batch
-  * side hashes exactly as the corpus side does, a batch document that
+  * side hashes exactly as the corpus side does, each batch document that
   * reuses a corpus id is scored on its own text, one batch runs a fixed
-  * handful of jobs with almost no shuffle, and a stream releases the
-  * corpus frames it cached once it terminates.
+  * handful of jobs with almost no shuffle and scans its file once, and a
+  * stream releases the corpus frames it cached once it terminates.
   */
 class IngestDedupSpec extends SparkSpec {
+
+  /** Plan traversal that descends into adaptive query stages. */
+  private object Plans extends AdaptiveSparkPlanHelper
 
   private def docs = Tables.documents(spark, sf0001)
     .select("doc_id", "text", "lang", "source", "n_chars")
@@ -51,22 +56,27 @@ class IngestDedupSpec extends SparkSpec {
   test("a batch doc that reuses a corpus doc_id is scored on its own shingles") {
     def set(text: String): Set[String] =
       text.split(" ", -1).sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
-    // the longest corpus doc, re-ingested under its own id with four
-    // tokens appended
+    // the longest corpus doc, re-ingested under its own id twice, with
+    // four and with two tokens appended: each copy is scored on its own
+    // set, never on the union of the copies or with the corpus doc
     val orig = docs.orderBy(length(col("text")).desc, col("doc_id")).head()
     val id = orig.getAs[Long]("doc_id")
     val text = orig.getAs[String]("text")
-    val edited = text + " zq1 zq2 zq3 zq4"
+    val edits = Seq(text + " zq1 zq2 zq3 zq4", text + " zr1 zr2")
     val (sh, bands) = corpusOf(docs)
     try {
-      val batch = docs.filter(col("doc_id") === id).withColumn("text", lit(edited))
+      val one = docs.filter(col("doc_id") === id)
+      val batch = batchFile(edits.map(e => one.withColumn("text", lit(e))).reduce(_ unionByName _))
       val got = IngestDedup.pairsVsCorpus(sh, bands, batch)
         .filter(col("corpus_doc") === id).collect()
-      val (a, b) = (set(text), set(edited))
-      val want = BigDecimal(a.intersect(b).size.toDouble / a.union(b).size)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(want < 1.0)
-      assert(got.map(r => (r.getLong(1), r.getDouble(2))).toSeq === Seq((id, want)))
+        .map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._2).toSeq
+      val want = edits.map { e =>
+        val (a, b) = (set(text), set(e))
+        (id, BigDecimal(a.intersect(b).size.toDouble / a.union(b).size)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }.sortBy(_._2)
+      assert(want.map(_._2).distinct.size == 2 && want.forall(_._2 < 1.0))
+      assert(got === want)
     } finally { sh.unpersist(); bands.unpersist() }
   }
 
@@ -108,6 +118,21 @@ class IngestDedupSpec extends SparkSpec {
     // this batch; this one runs 5 jobs and shuffles 19 KB
     assert(jobs <= 11, s"one warm ingest batch should run at most 11 jobs, ran $jobs")
     assert(shuffleBytes.get < (256L << 10), s"one ingest batch shuffled ${shuffleBytes.get} bytes")
+  }
+
+  test("one batch's pairs scan the batch file once") {
+    val batch = batchFile(docs.orderBy("doc_id").limit(20)
+      .withColumn("doc_id", col("doc_id") + 1000000L))
+    val dir = new java.io.File(new java.net.URI(batch.inputFiles.head)).getParent
+    val (sh, bands) = corpusOf(docs)
+    try {
+      val pairs = IngestDedup.pairsVsCorpus(sh, bands, batch)
+      assert(pairs.collect().length >= 20)
+      val scans = Plans.collect(pairs.queryExecution.executedPlan) {
+        case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f
+      }
+      assert(scans.size === 1, s"the batch file should be scanned once:\n${pairs.queryExecution.executedPlan}")
+    } finally { sh.unpersist(); bands.unpersist() }
   }
 
   test("a terminated ingest stream releases the corpus frames it cached") {

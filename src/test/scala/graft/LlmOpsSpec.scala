@@ -570,7 +570,9 @@ class LlmOpsSpec extends SparkSpec {
     import spark.implicits._
     val adversarial = Seq(
       (9001L, ""), (9002L, "a b"), (9003L, "a b c"), (9004L, "a b c d"),
-      (9005L, "x x x x x"), (9006L, "p  q r"), (9007L, "a b c a b c a b c")
+      (9005L, "x x x x x"), (9006L, "p  q r"), (9007L, "a b c a b c a b c"),
+      (9008L, " lead a b"), (9009L, "trail a b "), (9010L, "two  spaces  here  too"),
+      (9011L, "tab\tsep a b\nnew line c"), (9012L, "héllo wörld 日本語 😀 𝄞 héllo wörld")
     ).toDF("doc_id", "text")
     val docs = graft.core.Tables.documents(spark, sf0001)
       .select("doc_id", "text").unionByName(adversarial)
@@ -582,6 +584,9 @@ class LlmOpsSpec extends SparkSpec {
     assert(narrow.exists(_._1 == 9003L)) // exactly-3-token doc keeps its shingle
     assert(!narrow.exists(_._1 == 9002L)) // sub-3-token doc emits nothing
     assert(narrow.count(_._1 == 9005L) == 1) // repeats dedup within doc
+    // empty tokens at the ends and between double spaces stay tokens
+    assert(narrow.contains((9008L, " lead a")) && narrow.contains((9009L, "a b ")))
+    assert(narrow.contains((9010L, "two  spaces")))
     // and the index build plans with NO exchange of any kind
     val p = graft.operators.Dedup.shingles(docs).queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"shingles must be a narrow projection:\n$p")
