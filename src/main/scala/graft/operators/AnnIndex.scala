@@ -77,11 +77,8 @@ object AnnIndex {
     val src = Tables.sourceFp(s"$dir/embeddings.parquet")
     val fp = Sessions.memo(s, s"annfp|$dir|$flavor")((e: (String, String)) => e._1 == src)(
       (src, corpusFingerprint(s, dir, flavor)))._2
-    // session conf → JVM property (suites isolating their store across
-    // newSession() boundaries, where session confs don't propagate) →
-    // durable default under the working directory
+    // session conf → durable default under the working directory
     val root = s.conf.getOption("graft.ann.index.base")
-      .orElse(sys.props.get("graft.ann.index.base"))
       .getOrElse(new java.io.File("bench_local/ann_index").getAbsolutePath)
     s"$root/$fp"
   }

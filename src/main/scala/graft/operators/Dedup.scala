@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Staged, Tables}
 import graft.functions.{ShingleSet, TextAnalysis}
+import graft.functions.PortableHash.hash60
 
 /** Deduplication suite over the documents table — the operators a
   * 100 TB pre-training corpus pipeline actually runs:
@@ -68,10 +69,6 @@ object Dedup {
   private val Bands = 4
   private val Rows = 4 // NumHashes / Bands
   private val SubstrLen = 20 // dedup_substring_spans window width (chars)
-
-  /** 60-bit numeric md5 hash (see [[graft.functions.PortableHash]] for
-    * why numeric: HashAggregate-friendly primitive agg buffers). */
-  private def hash60(s: Column): Column = graft.functions.PortableHash.hash60(s)
 
   /** Min-hash function `i` of one shingle. */
   private def minhashKey(i: Int, shingle: Column): Column =
@@ -455,33 +452,142 @@ object Dedup {
         .select("doc_a", "doc_b")
     }
 
-  /** Cluster resolution with EXACT-DUP COLLAPSE (same labels as CC over
-    * the full pair graph, proven by the unchanged recursive-reachability
-    * oracles): run the given CC on the representative graph, then every
-    * doc inherits its representative's label through the (doc_id, rep)
-    * map. Identical-text docs are pairwise J = 1 edges in the full
-    * graph whenever they have >= 1 shingle, so a multi-doc exact group
-    * is internally connected exactly when its representative has
-    * shingles — groups of shingle-less docs have no edges in either
-    * formulation and are excluded. A cluster's label is unchanged: the
-    * component minimum equals the minimum over its exact-groups' own
-    * minima, which is the representative-graph minimum. */
-  private def clustersCollapsed(s: SparkSession, dir: String,
+  // --- The exact-dup collapse kit -------------------------------------
+  // Every near-dup query that collapses runs its expensive step on one
+  // representative (the min id) per identical key — text md5, fingerprint
+  // or embedding — then maps the result back to the members: clusters
+  // through collapsedClusters (+ keepCanonical), pairs through
+  // expandQualified. The helpers take frames and plain parameters and
+  // never branch on their caller (Dedup, Multimodal, Similarity).
+
+  /** Cluster resolution with EXACT-DUP COLLAPSE: run `cc` on the
+    * representative graph `repEdges` (doc_a, doc_b[, ..]), then every doc
+    * of `members` (doc_id, rep) inherits its representative's label. A
+    * doc whose rep has no edge is labeled with the rep when its group has
+    * ≥ 2 members (identical keys are pairwise edges in the full graph)
+    * and is left out otherwise. A caller whose identical docs are NOT
+    * pairwise edges (texts without shingles) leaves those groups out of
+    * `members`.
+    *
+    * Same labels as CC over the full, uncollapsed pair graph: a
+    * cluster's minimum equals the minimum over its groups' own minima,
+    * which is the representative-graph minimum. The unchanged
+    * recursive-reachability oracles replay the full graph. CC then sees
+    * edges between distinct keys, not the dup² clique edges a re-crawl
+    * plants (a 10-way clique is 45 edges and one node). */
+  private[graft] def collapsedClusters(members: DataFrame, repEdges: DataFrame,
       cc: DataFrame => DataFrame): DataFrame = {
-    val repMap = exactRepMap(s, dir)
-    val repClusters = cc(neardupRepEdges(s, dir))
-      .select(col("doc_id").as("rep"), col("cluster_id"))
-    val grpN = repMap.groupBy("rep").agg(count(lit(1)).as("grp_n"))
-    val repSh = stagedShingles(s, dir).groupBy("doc_id")
-      .agg(count(lit(1)).as("nsh"))
-      .select(col("doc_id").as("rep"), col("nsh"))
-    repMap.join(repClusters, Seq("rep"), "left")
-      .join(grpN, "rep")
-      .join(repSh, Seq("rep"), "left")
-      .filter(col("cluster_id").isNotNull ||
-        (col("grp_n") > 1 && coalesce(col("nsh"), lit(0L)) > 0))
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
+    val repClusters = cc(repEdges).select(col("doc_id").as("rep"), col("cluster_id"))
+    // group size as a window over the join's own rep partitioning: the
+    // member map is read once, with no second aggregate and join
+    val byRep = org.apache.spark.sql.expressions.Window.partitionBy("rep")
+    members.join(repClusters, Seq("rep"), "left")
+      .withColumn("grp_n", count(lit(1)).over(byRep))
+      .filter(col("cluster_id").isNotNull || col("grp_n") > 1)
+      .select(col("doc_id"), coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
+  }
+
+  /** One row per doc of `docs` with its cluster and a keep verdict: docs
+    * outside every cluster of `clusters` (doc_id, cluster_id) are their
+    * own cluster, and a doc is kept iff it is its cluster's label. */
+  private[graft] def keepCanonical(docs: DataFrame, clusters: DataFrame): DataFrame = {
+    val label = coalesce(col("cluster_id"), col("doc_id"))
+    docs.select("doc_id").join(clusters, Seq("doc_id"), "left")
+      .select(col("doc_id"), label.as("cluster_id"), (label === col("doc_id")).as("keep"))
+  }
+
+  /** Expand qualifying representative pairs `repPairs` (doc_a, doc_b,
+    * <score>) to doc pairs through `members` (rep, doc_id). Cross-group
+    * pairs inherit the rep pair's score: identical keys have identical
+    * shingle sets or arrays, hence identical measures. The pair is
+    * ordered per OUTPUT pair (least/greatest), because members of two
+    * groups interleave in id order. Within-group pairs exist for the
+    * groups listed in `within` (rep, <score>) and carry that score — the
+    * measure of two identical sets or arrays. Only qualifying pairs are
+    * expanded, so the dup²-sized rows made here are the demanded
+    * output. */
+  private[graft] def expandQualified(repPairs: DataFrame, members: DataFrame,
+      within: DataFrame): DataFrame = {
+    val score = repPairs.columns.last
+    val cross = repPairs
+      .join(members.select(col("rep").as("doc_a"), col("doc_id").as("ma")), "doc_a")
+      .join(members.select(col("rep").as("doc_b"), col("doc_id").as("mb")), "doc_b")
+      .select(least(col("ma"), col("mb")).as("doc_a"),
+        greatest(col("ma"), col("mb")).as("doc_b"), col(score))
+    val inGroup = members.join(within, "rep")
+      .select(col("rep"), col("doc_id").as("ma"), col(score))
+      .join(members.select(col("rep"), col("doc_id").as("mb")), "rep")
+      .filter(col("ma") < col("mb"))
+      .select(col("ma").as("doc_a"), col("mb").as("doc_b"), col(score))
+    cross.unionByName(inGroup)
+  }
+
+  /** Band `b` of a fingerprint cut into `bandBits`-bit bands. */
+  private def band(fp: Column, b: Int, bandBits: Int): Column =
+    shiftright(fp, bandBits * b).bitwiseAND((1 << bandBits) - 1)
+
+  /** (doc_id, fp, b, sig): the four bands of each fingerprint. */
+  private def fpBands(fp: DataFrame, bandBits: Int): DataFrame =
+    fp.select(col("doc_id"), col("fp"),
+        explode(array((0 until 4).map(b =>
+          struct(lit(b).as("b"), band(col("fp"), b, bandBits).as("sig"))): _*)).as("e"))
+      .select(col("doc_id"), col("fp"), col("e.b").as("b"), col("e.sig").as("sig"))
+
+  /** Banded hamming pairs (doc_a < doc_b, hamming) of a (doc_id, fp)
+    * frame: the fingerprints are cut into 4 bands of `bandBits` bits, an
+    * equi-join on (band, band value) finds the candidates without an
+    * all-pairs scan, and `bit_count(xor) <= maxHamming` verifies them.
+    * With 4 × 8 bits and maxHamming 3 the candidates are exhaustive by
+    * pigeonhole: 3 differing bits leave one band whole.
+    *
+    * CANONICAL-BAND emission: the full fingerprint rides along on both
+    * join sides and a pair is kept only at its FIRST agreeing band, so
+    * each pair surfaces exactly once. That deletes the distinct over the
+    * raw candidate stream and both fingerprint join-backs (at the 10×
+    * soak the distinct shuffled ~39 M candidate rows to confirm 8.5 M
+    * pairs); the verify is a row-local filter on the band join's output,
+    * and nothing shuffles but the bands themselves. */
+  private[graft] def bandedHammingPairs(fp: DataFrame, bandBits: Int,
+      maxHamming: Int): DataFrame = {
+    val bands = fpBands(fp, bandBits)
+    val firstAgreeingBand = (0 until 4).map { bb =>
+      (col("b") === bb) && (0 until bb)
+        .map(p => band(col("fa"), p, bandBits) =!= band(col("fb"), p, bandBits))
+        .foldLeft(lit(true))(_ && _)
+    }.reduce(_ || _)
+    bands.select(col("doc_id").as("doc_a"), col("fp").as("fa"), col("b"), col("sig"))
+      .join(bands.select(col("doc_id").as("doc_b"), col("fp").as("fb"),
+        col("b"), col("sig")), Seq("b", "sig"))
+      .filter(col("doc_a") < col("doc_b") && firstAgreeingBand)
+      .withColumn("hamming", expr("bit_count(fa ^ fb)").cast("bigint"))
+      .filter(col("hamming") <= maxHamming)
+      .select("doc_a", "doc_b", "hamming")
+  }
+
+  /** Near-dup clusters (doc_id, cluster_id) of a (doc_id, fp) frame under
+    * [[bandedHammingPairs]], with FINGERPRINT COLLAPSE before CC: docs
+    * sharing a fingerprint are one hamming-0 clique, so the pairs and
+    * the components run over one representative per distinct
+    * fingerprint (min doc_id — what a re-crawl collapses N× on) and
+    * every doc inherits its representative's label
+    * ([[collapsedClusters]]). */
+  private[graft] def hammingClusters(fp: DataFrame, bandBits: Int,
+      maxHamming: Int): DataFrame = {
+    val reps = fp.groupBy("fp").agg(min("doc_id").as("rep"))
+    collapsedClusters(fp.join(reps, "fp").select("doc_id", "rep"),
+      bandedHammingPairs(reps.select(col("rep").as("doc_id"), col("fp")), bandBits, maxHamming),
+      components(_))
+  }
+
+  /** The J >= 0.5 text clusters through [[collapsedClusters]] over the
+    * representative graph. Identical texts are pairwise J = 1 edges only
+    * when they have >= 1 shingle, so the member map keeps just the
+    * groups whose representative has one. */
+  private def textClusters(s: SparkSession, dir: String,
+      cc: DataFrame => DataFrame): DataFrame = {
+    val shingled = stagedShingles(s, dir).select(col("doc_id").as("rep")).distinct()
+    collapsedClusters(exactRepMap(s, dir).join(shingled, Seq("rep"), "left_semi"),
+      neardupRepEdges(s, dir), cc)
   }
 
   /** Connected components over an undirected edge list (doc_a, doc_b):
@@ -727,46 +833,14 @@ object Dedup {
   def stagedSimhash(s: SparkSession, dir: String): DataFrame =
     Staged(s, s"$dir|simhash")(simhash32(docsParallel(s, dir)))
 
-  /** Banded simhash near-dup pairs (hamming ≤ 3): split the 32-bit
-    * fingerprint into 4 byte-blocks; by pigeonhole any pair within
-    * hamming 3 agrees on at least one whole block, so an equi-join on
-    * (block index, block value) finds all such pairs without an
-    * all-pairs scan. CANONICAL-BAND emission: the full fingerprint
-    * rides along on both join sides and a pair is kept only at its
-    * SMALLEST agreeing band — each (a,b) surfaces exactly once, which
-    * deletes the distinct over the raw candidate stream AND both
-    * fingerprint join-backs (at the 10× soak that distinct shuffled
-    * ~39 M candidate rows to confirm 8.5 M pairs; the verify is a
-    * row-local filter on the band join's output, nothing shuffles but
-    * the bands themselves). Shared by the pair query and the O(docs)
-    * cluster resolution. */
+  /** Banded simhash near-dup pairs (hamming ≤ 3, 4 byte bands — exact
+    * by pigeonhole; see [[bandedHammingPairs]]). */
   private def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    simhashPairsOf(stagedSimhash(s, dir))
+    bandedHammingPairs(simhashFp(s, dir), 8, 3)
 
-  /** Same banded pair generation over an arbitrary (doc_id, simhash)
-    * frame — the cluster query runs it on one representative per
-    * distinct fingerprint instead of the full corpus. */
-  private def simhashPairsOf(fp: DataFrame): DataFrame = {
-    val bands = fp.select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("b"),
-          shiftright(col("simhash"), 8 * b).bitwiseAND(255).as("sig"))): _*)).as("e"))
-      .select(col("doc_id"), col("simhash"), col("e.b").as("b"), col("e.sig").as("sig"))
-    def byte(c: Column, b: Int): Column =
-      shiftright(c, 8 * b).bitwiseAND(255)
-    val firstAgreeingBand = (0 until 4).map { bb =>
-      (col("b") === bb) && (0 until bb)
-        .map(p => byte(col("sha"), p) =!= byte(col("shb"), p))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    bands.select(col("doc_id").as("doc_a"), col("simhash").as("sha"),
-        col("b"), col("sig"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("simhash").as("shb"),
-        col("b"), col("sig")), Seq("b", "sig"))
-      .filter(col("doc_a") < col("doc_b") && firstAgreeingBand)
-      .withColumn("hamming", expr("bit_count(sha ^ shb)").cast("bigint"))
-      .filter(col("hamming") <= 3)
-      .select("doc_a", "doc_b", "hamming")
-  }
+  /** The staged simhash as the (doc_id, fp) frame the banded join takes. */
+  private def simhashFp(s: SparkSession, dir: String): DataFrame =
+    stagedSimhash(s, dir).select(col("doc_id"), col("simhash").as("fp"))
   /** Minhash signatures staged: the LSH band self-join references the
     * signature table on both sides — unstaged, that is 2x16 md5 hashes
     * per shingle instead of 1x16. */
@@ -1016,55 +1090,28 @@ object Dedup {
     * the hamming≤3 subset). One narrow aggregate over the staged
     * fingerprints. */
   private def simhashPairBound(s: SparkSession, dir: String): DataFrame =
-    stagedSimhash(s, dir)
-      .select(explode(array((0 until 4).map(b =>
-        struct(lit(b).as("b"),
-          shiftright(col("simhash"), 8 * b).bitwiseAND(255).as("sig"))): _*)).as("e"))
-      .groupBy("e").agg(count(lit(1)).as("n"))
+    fpBands(simhashFp(s, dir), 8)
+      .groupBy("b", "sig").agg(count(lit(1)).as("n"))
       .agg(coalesce(sum(expr("(n * (n - 1)) div 2")), lit(0L)).as("pair_est"))
-
-  /** Expand qualifying rep-level pairs (ra, rb, score) to doc pairs
-    * through the exact-dup member map: cross-group pairs inherit the rep
-    * score (identical shingle sets ⇒ identical measure); within-group
-    * pairs — candidates iff the text has ≥ 1 rare shingle (has_rare,
-    * the uncollapsed candidacy rule) — carry `selfScore` (the measure of
-    * two identical sets). Only QUALIFYING pairs are ever expanded, so
-    * the dup²-sized rows produced here are exactly the demanded output. */
-  private def expandQualified(qual: DataFrame, score: String, selfScore: Double,
-                              mem: DataFrame, stats: DataFrame): DataFrame = {
-    val cross = qual
-      .join(mem.select(col("rep").as("ra"), col("doc_id").as("ma")), "ra")
-      .join(mem.select(col("rep").as("rb"), col("doc_id").as("mb")), "rb")
-      .select(least(col("ma"), col("mb")).as("doc_a"),
-        greatest(col("ma"), col("mb")).as("doc_b"), col(score))
-    val within = mem
-      .join(stats.filter(col("has_rare") && col("n_mem") >= 2).select("rep"),
-        Seq("rep"), "left_semi")
-      .select(col("rep"), col("doc_id").as("ma"))
-      .join(mem.select(col("rep"), col("doc_id").as("mb")), "rep")
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
-        lit(selfScore).as(score))
-    cross.unionByName(within)
-  }
 
   /** J ≥ 0.5 pairs from the rep-level staged artifact: score + threshold
     * at rep level, expansion after — shared by dedup_ngram_jaccard and
     * its _capped alias. */
   private def cappedJaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val qual = stagedCappedSharedReps(s, dir)
-      .select(col("ra"), col("rb"),
+      .select(col("ra").as("doc_a"), col("rb").as("doc_b"),
         round(col("shared").cast("double") /
           (col("ca") + col("cb") - col("shared")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
     // doc-level path: the staged artifact is already doc-granular (the
     // self-join ran over the FULL index, so within-dup-group pairs
     // emerged from the join itself) — no expansion, no rep-stats staging
-    if (docLevelPath(s, dir))
-      qual.select(col("ra").as("doc_a"), col("rb").as("doc_b"), col("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    else expandQualified(qual, "jaccard", 1.0,
-      exactRepMap(s, dir), stagedRepStats(s, dir))
+    if (docLevelPath(s, dir)) qual.orderBy("doc_a", "doc_b")
+    else expandQualified(qual, exactRepMap(s, dir),
+        // within-group pairs are candidates iff the text has >= 1 rare
+        // shingle, the uncollapsed candidacy rule
+        stagedRepStats(s, dir).filter(col("has_rare") && col("n_mem") >= 2)
+          .select(col("rep"), lit(1.0).as("jaccard")))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -1189,14 +1236,14 @@ object Dedup {
     // near-dup pair graph (J >= 0.5), labeling every involved doc with
     // the smallest doc_id in its cluster — the canonical representative
     // a dedup pipeline keeps. Runs with EXACT-DUP COLLAPSE (see
-    // clustersCollapsed): CC over one representative per distinct text,
+    // collapsedClusters): CC over one representative per distinct text,
     // labels fanned back through the exact-dup map — the round-8 10×
     // soak measured the uncollapsed edge staging at 47.8 s, dominated
     // by k² self-join work inside planted k-way exact cliques. Oracle:
     // DuckDB recursive CTE reachability over the FULL pair graph —
     // unchanged, which is the proof the collapse preserves labels.
     "dedup_clusters" -> ((s, dir) =>
-      clustersCollapsed(s, dir, components(_)).orderBy("doc_id")),
+      textClusters(s, dir, components(_)).orderBy("doc_id")),
 
     // Same clusters via the O(log²n)-round large-star/small-star
     // rewriting at every size (see star) — the deep-graph scale path,
@@ -1204,21 +1251,15 @@ object Dedup {
     // distributed algorithm cannot drift while the size gate keeps the
     // other CC queries in one task.
     "dedup_clusters_star" -> ((s, dir) =>
-      clustersCollapsed(s, dir, star(_)._1).orderBy("doc_id")),
+      textClusters(s, dir, star(_)._1).orderBy("doc_id")),
 
     // The decision a dedup pipeline actually ships: one row per corpus
     // document with its cluster and a keep/drop verdict (keep = the
     // cluster's min doc_id; singletons keep themselves). Candidates →
     // verify → cluster → keep-list, end to end.
-    "dedup_keep_canonical" -> ((s, dir) => {
-      val clusters = clustersCollapsed(s, dir, components(_))
-      Tables.documents(s, dir).select("doc_id")
-        .join(clusters, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
-          (coalesce(col("cluster_id"), col("doc_id")) === col("doc_id")).as("keep"))
-        .orderBy("doc_id")
-    }),
+    "dedup_keep_canonical" -> ((s, dir) =>
+      keepCanonical(Tables.documents(s, dir), textClusters(s, dir, components(_)))
+        .orderBy("doc_id")),
 
     // Same result as dedup_ngram_jaccard, via the 100 TB candidate path:
     // drop stop-shingles (df > greatest(64, ⌈n/200⌉)) from the inverted
@@ -1259,26 +1300,11 @@ object Dedup {
       // repPairs ARE the doc pairs (dup pairs verified at J = 1 by the
       // tiered verify itself) — no expansion
       if (docLevelPath(s, dir)) repPairs.orderBy("doc_a", "doc_b")
-      else {
-        val members = exactRepMap(s, dir).select(col("rep"), col("doc_id").as("m"))
-        // expansion is ordered per OUTPUT pair: group members interleave
-        // across rep groups, so least/greatest, not (rep_a, rep_b) order
-        val cross = repPairs
-          .join(members.select(col("rep").as("doc_a"), col("m").as("ma")), "doc_a")
-          .join(members.select(col("rep").as("doc_b"), col("m").as("mb")), "doc_b")
-          .select(least(col("ma"), col("mb")).as("doc_a"),
-            greatest(col("ma"), col("mb")).as("doc_b"), col("jaccard"))
-        // reps with >= 1 shingle (shingle-less texts have no pairs in the
-        // uncollapsed formulation either)
-        val shingled = shR.select("doc_id").distinct().select(col("doc_id").as("rep"))
-        val within = members.join(shingled, "rep")
-          .select(col("rep"), col("m").as("ma"))
-          .join(members.select(col("rep"), col("m").as("mb")), "rep")
-          .filter(col("ma") < col("mb"))
-          .select(col("ma").as("doc_a"), col("mb").as("doc_b"),
-            lit(1.0).as("jaccard"))
-        cross.unionByName(within).orderBy("doc_a", "doc_b")
-      }
+      // within-group pairs: reps with >= 1 shingle (shingle-less texts
+      // have no pairs in the uncollapsed formulation either)
+      else expandQualified(repPairs, exactRepMap(s, dir),
+          shR.select("doc_id").distinct().select(col("doc_id").as("rep"), lit(1.0).as("jaccard")))
+        .orderBy("doc_a", "doc_b")
     }),
 
     // MinHash + LSH candidates, verified with exact Jaccard ≥ 0.5.
@@ -1598,35 +1624,10 @@ object Dedup {
     // planted cliques — a real re-crawl at 100 TB makes that the
     // operator's output bottleneck), while doc→cluster emits exactly
     // one row per involved doc no matter how dense the duplication.
-    //
-    // FINGERPRINT COLLAPSE before CC: docs sharing an identical simhash
-    // are by definition one hamming-0 clique, so the component graph is
-    // computed over one REPRESENTATIVE per distinct fingerprint (min
-    // doc_id — exactly what a re-crawl collapses N× on) and each doc
-    // inherits its representative's label via one equi-join on the
-    // fingerprint. Labels are unchanged: a cluster's min doc_id is the
-    // min over its fingerprint groups' own minima. CC then sees edges
-    // between distinct fingerprints, not dup² clique edges. Same
+    // Collapsed on identical fingerprints (see hammingClusters); same
     // recursive-reachability oracle as dedup_clusters.
-    "dedup_simhash_clusters" -> ((s, dir) => {
-      val fp = stagedSimhash(s, dir)
-      val reps = fp.groupBy("simhash").agg(min("doc_id").as("rep"))
-      val fpRep = fp.join(reps, "simhash")
-      val repEdges = simhashPairsOf(reps.select(col("rep").as("doc_id"), col("simhash")))
-        .select("doc_a", "doc_b")
-      val repClusters = components(repEdges)
-        .select(col("doc_id").as("rep"), col("cluster_id"))
-      // docs whose representative joined a cross-fingerprint cluster
-      // take that label; docs in a multi-doc hamming-0 clique with no
-      // external edge cluster at their representative
-      val dupOnly = fpRep.groupBy("rep").agg(count(lit(1)).as("grp_n"))
-      fpRep.join(repClusters, Seq("rep"), "left")
-        .join(dupOnly, "rep")
-        .filter(col("cluster_id").isNotNull || col("grp_n") > 1)
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
-        .orderBy("doc_id")
-    }),
+    "dedup_simhash_clusters" -> ((s, dir) =>
+      hammingClusters(simhashFp(s, dir), 8, 3).orderBy("doc_id")),
 
     // KMV (k-minimum-values) bottom-k sketch per document via the typed
     // BottomK Aggregator (UDAF surface of O14): one-pass set signature

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
+import graft.functions.Decimals.rsum2
 
 /** Event-time windowing over the events table (SURVEY.md §7.2 step 5).
   *
@@ -19,8 +20,6 @@ import graft.core.Tables
   */
 object EventTime {
 
-  /** Decimal-rounded sum — single definition in [[graft.functions.Decimals]]. */
-  private def rsum2(c: Column): Column = graft.functions.Decimals.rsum2(c)
   private def fmt(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -235,11 +235,7 @@ object Graph {
     // every join equi-keyed; frontier ≤ |nodes|. The oracle is a DuckDB
     // recursive CTE with the same depth bound and min(depth) per node.
     "graph_bfs_depth" -> ((s, dir) => {
-      val wnd = org.apache.spark.sql.expressions.Window
-        .partitionBy("src").orderBy(desc("w"), col("dst"))
-      val sparse = stagedTradeEdges(s, dir)
-        .withColumn("rk", row_number().over(wnd)).filter(col("rk") <= 3)
-        .select("src", "dst")
+      val sparse = topOutEdges(s, dir, 3).select("src", "dst")
       val cut = CheckpointStrategy.Local
       var frontier = cut.cut(
         sparse.agg(min(col("src")).as("node")).select(col("node"), lit(0).as("depth")))
@@ -273,11 +269,7 @@ object Graph {
     // rounds). Output is each survivor with the degree that qualified
     // it in the last round.
     "graph_kcore" -> ((s, dir) => {
-      val wnd = org.apache.spark.sql.expressions.Window
-        .partitionBy("src").orderBy(desc("w"), col("dst"))
-      val topk = stagedTradeEdges(s, dir)
-        .withColumn("rk", row_number().over(wnd)).filter(col("rk") <= 5)
-        .select("src", "dst")
+      val topk = topOutEdges(s, dir, 5).select("src", "dst")
       val cut = CheckpointStrategy.Local
       val und = cut.cut(topk
         .unionByName(topk.select(col("dst").as("src"), col("src").as("dst")))
@@ -312,11 +304,7 @@ object Graph {
     // shingle dedup applies to hot inverted-index buckets
     // (Dedup.scala stop-shingle cap).
     "graph_jaccard_neighbors" -> ((s, dir) => {
-      val wnd = org.apache.spark.sql.expressions.Window
-        .partitionBy("src").orderBy(desc("w"), col("dst"))
-      val topk = stagedTradeEdges(s, dir)
-        .withColumn("rk", row_number().over(wnd)).filter(col("rk") <= 3)
-        .select("src", "dst")
+      val topk = topOutEdges(s, dir, 3).select("src", "dst")
       val und = topk
         .unionByName(topk.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
@@ -349,11 +337,7 @@ object Graph {
     // with the same per-round lineage cut as the other loops. The
     // oracle unrolls both rounds over the identical edge CTE.
     "graph_label_prop" -> ((s, dir) => {
-      val wnd = org.apache.spark.sql.expressions.Window
-        .partitionBy("src").orderBy(desc("w"), col("dst"))
-      val topk = stagedTradeEdges(s, dir)
-        .withColumn("rk", row_number().over(wnd)).filter(col("rk") <= 3)
-        .select("src", "dst", "w")
+      val topk = topOutEdges(s, dir, 3)
       val cut = CheckpointStrategy.Local
       val und = cut.cut(topk
         .unionByName(topk.select(col("dst").as("src"), col("src").as("dst"), col("w")))
@@ -379,6 +363,18 @@ object Graph {
   )
 
   private val MaxBfsDepth = 3
+
+  /** (src, dst, w): each node's `k` heaviest trade out-edges, ties to the
+    * smaller dst — the sparse k-NN subgraph the BFS, k-core, neighbor
+    * Jaccard and label-propagation queries run on (the full trade graph
+    * is near-complete at 25 nations). */
+  private def topOutEdges(s: SparkSession, dir: String, k: Int): DataFrame = {
+    val wnd = org.apache.spark.sql.expressions.Window
+      .partitionBy("src").orderBy(desc("w"), col("dst"))
+    stagedTradeEdges(s, dir)
+      .withColumn("rk", row_number().over(wnd)).filter(col("rk") <= k)
+      .select("src", "dst", "w")
+  }
 
   private val edgeCte =
     """e AS (

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Staged, Tables}
@@ -101,40 +101,6 @@ object Multimodal {
       .unionByName(nonEmpty.select(col("doc_id"), col("fp")))
   }
 
-  /** Verified near-dup pairs over the aHash fingerprints: 4×15-bit LSH
-    * band candidates (per-band equality joins, never all-pairs), each
-    * surviving pair emitted exactly once at its FIRST agreeing band (a
-    * row-local predicate over the two fingerprints riding the join — no
-    * pair-level distinct, no join-backs), verified by one bit_count
-    * hamming ≤ 12. Shared by the pair query and the cluster query. */
-  private def phashPairs(s: SparkSession, dir: String): DataFrame =
-    phashPairsOf(ahashFingerprints(s, dir))
-
-  /** Same banded pair generation over an arbitrary (doc_id, fp) frame —
-    * the cluster query runs it on one representative per distinct
-    * fingerprint instead of the full corpus. */
-  private def phashPairsOf(fp: DataFrame): DataFrame = {
-    val bands = fp.select(col("doc_id"), col("fp"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("b"),
-          shiftright(col("fp"), 15 * b).bitwiseAND(32767).as("sig"))): _*)).as("e"))
-      .select(col("doc_id"), col("fp"), col("e.b").as("b"), col("e.sig").as("sig"))
-    def band(c: Column, b: Int): Column =
-      shiftright(c, 15 * b).bitwiseAND(32767)
-    val firstAgreeingBand = (0 until 4).map { bb =>
-      (col("b") === bb) && (0 until bb)
-        .map(p => band(col("fa"), p) =!= band(col("fb"), p))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    bands.select(col("doc_id").as("doc_a"), col("fp").as("fa"),
-        col("b"), col("sig"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("fp").as("fb"),
-        col("b"), col("sig")), Seq("b", "sig"))
-      .filter(col("doc_a") < col("doc_b") && firstAgreeingBand)
-      .withColumn("hamming", expr("bit_count(fa ^ fb)").cast("bigint"))
-      .filter(col("hamming") <= 12)
-      .select("doc_a", "doc_b", "hamming")
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Declarative twin of decodeMeta (same arithmetic in pure columns) so
     // the binary plumbing is oracle-checked end to end. first_byte is the
@@ -163,48 +129,25 @@ object Multimodal {
     // Perceptual-hash near-dup over the binary payload — the image-dedup
     // pipeline with the codec stubbed out: aHash fingerprint (see
     // ahashFingerprints), then 4×15-bit LSH banding for candidates and
-    // an exact hamming ≤ 12 verify. Scale shape is the simhash one:
-    // candidates come from per-band equality joins (never all-pairs),
-    // each surviving pair is emitted exactly once at its FIRST agreeing
-    // band — a row-local predicate over the two fingerprints riding the
-    // join, so no pair-level distinct and no join-backs — and the verify
-    // is one bit_count on the already-joined fingerprints. The staged
-    // fingerprint table is the artifact a production image-dedup job
-    // persists between "hash the corpus" and "mine the pairs".
+    // an exact hamming ≤ 12 verify (Dedup.bandedHammingPairs — the
+    // simhash pair join, with wider bands and a looser verify). The
+    // staged fingerprint table is the artifact a production image-dedup
+    // job persists between "hash the corpus" and "mine the pairs".
     "multimodal_phash_neardup" -> ((s, dir) =>
-      phashPairs(s, dir).orderBy("doc_a", "doc_b")),
+      Dedup.bandedHammingPairs(ahashFingerprints(s, dir), 15, 12).orderBy("doc_a", "doc_b")),
 
     // The shippable decision over the media pairs: connected components
     // + canonical keep (cluster = transitive near-dup group, keep = the
     // cluster's min doc_id) — the multimodal arm of
-    // dedup_keep_canonical, composed from the shared CC primitives so
-    // the two dedup families cannot diverge in cluster semantics.
-    //
-    // FINGERPRINT COLLAPSE before CC (same rewrite as
-    // dedup_simhash_clusters, same labels): byte-identical re-crawled
-    // media share an identical aHash, so CC runs over one
-    // representative per distinct fingerprint (min doc_id) and every
-    // doc inherits its representative's label through one fingerprint
-    // equi-join — CC sees inter-fingerprint edges, not the dup² clique
-    // edges a re-crawl plants (the round-8 10× soak measured this query
-    // at 60.1 s pre-collapse).
+    // dedup_keep_canonical, composed from the same Dedup helpers
+    // (hammingClusters, keepCanonical) as dedup_simhash_clusters and
+    // dedup_keep_canonical, so the dedup families cannot diverge in
+    // cluster semantics. Byte-identical re-crawled media share an aHash,
+    // so CC runs over one representative per distinct fingerprint (the
+    // round-8 10× soak measured this query at 60.1 s pre-collapse).
     "multimodal_phash_clusters" -> ((s, dir) => {
       val fp = ahashFingerprints(s, dir)
-      val reps = fp.groupBy("fp").agg(min("doc_id").as("rep"))
-      val repClusters = Dedup.components(
-        phashPairsOf(reps.select(col("rep").as("doc_id"), col("fp"))))
-        .select(col("doc_id").as("rep"), col("cluster_id"))
-      val grpN = fp.join(reps, "fp").groupBy("rep").agg(count(lit(1)).as("grp_n"))
-      fp.join(reps, "fp")
-        .join(repClusters, Seq("rep"), "left")
-        .join(grpN, "rep")
-        .select(col("doc_id"),
-          when(col("cluster_id").isNotNull, col("cluster_id"))
-            .when(col("grp_n") > 1, col("rep"))
-            .otherwise(col("doc_id")).as("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"),
-          (col("cluster_id") === col("doc_id")).as("keep"))
-        .orderBy("doc_id")
+      Dedup.keepCanonical(fp, Dedup.hammingClusters(fp, 15, 12)).orderBy("doc_id")
     }),
 
     // Frame sampling — the video-pipeline shape: chop each blob into

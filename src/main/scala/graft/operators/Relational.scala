@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Tables
+import graft.functions.Decimals.{dsum, rsum2}
 
 /** Relational operator surface (SURVEY.md §2.1 / §7.2 step 4): scans with
   * pushdown, joins of every flavor, aggregation (plain / distinct /
@@ -25,10 +26,6 @@ import graft.core.Tables
   *  - every aggregate is a map-side-combined hash agg; no collect().
   */
 object Relational {
-
-  /** Cross-engine exact sums — single definitions in [[graft.functions.Decimals]]. */
-  private def dsum(c: Column): Column = graft.functions.Decimals.dsum(c)
-  private def rsum2(c: Column): Column = graft.functions.Decimals.rsum2(c)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.PortableHash
+import graft.functions.Decimals.rsum2
 
 /** Deterministic hash-based sampling and splitting — how a training
   * pipeline carves reproducible train/val/test sets and cheap stratified
@@ -19,9 +20,6 @@ object Sampling {
   /** Percent bucket 0..99 from a stable key. */
   def hashBucket(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(PortableHash.hash60(key.cast("string")), lit(100L))
-
-  private def rsum2(c: org.apache.spark.sql.Column) =
-    graft.functions.Decimals.rsum2(c)
 
   /** Poisson(1) CDF thresholds at 2^16 scale (floor(c_k · 65536), exact
     * integer literals shared verbatim with the oracle): a uniform

@@ -46,8 +46,6 @@ object Similarity {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** Attach the L2 norm once per row (codegen'd dot with itself) so pair
-    * joins never recompute it. */
   /** Verified near-dup pair graph (multi-probe sign-LSH candidates +
     * exact cosine ≥ 0.4), staged once per session: emb_neardup_lsh
     * lists it, and the density clustering references it three times
@@ -57,23 +55,17 @@ object Similarity {
       val emb0 = withNorm(Tables.embeddings(s, dir))
       // EXACT-VECTOR COLLAPSE before the LSH candidate join: identical
       // float arrays — what a re-crawl multiplies — have identical band
-      // values, so running candidates + verify on one REPRESENTATIVE
-      // per distinct embedding changes NOTHING about which cross-group
-      // pairs surface (recall is a pure function of the arrays) while
-      // shrinking every (band, bval) bucket by the duplication factor —
-      // the bucket join's output is quadratic in bucket size, so k-way
-      // duplication cost k² before the collapse (the 10× soak measured
-      // this staging at ~88 s; the oracle replays the uncollapsed
-      // formulation, which is the proof the pair set is unchanged).
-      // Verified rep pairs then expand to member pairs through the
-      // (vec_id, rep) map — output-proportional — and within-group
-      // pairs score as the group's self-cosine (the identical value the
-      // pairwise formula yields on equal arrays, NaN-excluded the same
-      // way for zero vectors).
+      // values, so candidates + verify run on one REPRESENTATIVE per
+      // distinct embedding without changing which cross-group pairs
+      // surface (recall is a pure function of the arrays), while every
+      // (band, bval) bucket shrinks by the duplication factor (the 10×
+      // soak measured the uncollapsed staging at ~88 s; the oracle
+      // replays the uncollapsed formulation). Verified rep pairs expand
+      // through Dedup.expandQualified.
       val grp = emb0.groupBy("embedding")
         .agg(min("vec_id").as("rep"), min("nrm").as("gnrm"))
       val members = emb0.join(grp.select(col("embedding"), col("rep")), "embedding")
-        .select(col("rep"), col("vec_id"))
+        .select(col("rep"), col("vec_id").as("doc_id"))
       val reps = emb0.join(grp.select(col("embedding"), col("rep")), "embedding")
         .filter(col("vec_id") === col("rep"))
         .select(col("vec_id"), col("embedding"), col("nrm"))
@@ -103,29 +95,22 @@ object Similarity {
         .select(col("vec_a"), col("vec_b"),
           (DotProductFloat(col("va"), col("vb")) / (col("na") * col("nb"))).as("score"))
         .filter(col("score") >= 0.4)
-      // cross-group expansion: every member pair of a verified rep pair
-      // carries that pair's score (identical arrays ⇒ identical doubles)
-      val cross = repPairs
-        .join(members.select(col("rep").as("vec_a"), col("vec_id").as("ma")), "vec_a")
-        .join(members.select(col("rep").as("vec_b"), col("vec_id").as("mb")), "vec_b")
-        .select(least(col("ma"), col("mb")).as("vec_a"),
-          greatest(col("ma"), col("mb")).as("vec_b"), col("score"))
-      // within-group pairs: the pairwise formula on equal arrays is the
-      // group's self-cosine — dot/(nrm·nrm), NaN for zero vectors (and
+      // within-group pairs score as the group's self-cosine: the
+      // pairwise formula on equal arrays, NaN for zero vectors (and
       // NaN >= 0.4 is false, exactly as the uncollapsed verify behaves)
       val selfScore = grp.select(col("rep"),
         (DotProductFloat(col("embedding"), col("embedding")) /
           (col("gnrm") * col("gnrm"))).as("score"))
         .filter(col("score") >= 0.4)
-      val within = members
-        .join(members.withColumnRenamed("vec_id", "vec_b"), "rep")
-        .filter(col("vec_id") < col("vec_b"))
-        .join(selfScore, "rep")
-        .select(col("vec_id").as("vec_a"), col("vec_b"), col("score"))
-      cross.unionByName(within)
-        .select(col("vec_a"), col("vec_b"), round(col("score"), 6).as("score"))
+      Dedup.expandQualified(
+          repPairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"), col("score")),
+          members, selfScore)
+        .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"),
+          round(col("score"), 6).as("score"))
     }
 
+  /** Attach the L2 norm once per row (codegen'd dot with itself) so pair
+    * joins never recompute it. */
   private def withNorm(emb: DataFrame): DataFrame =
     emb.withColumn("nrm", sqrt(DotProductFloat(col("embedding"), col("embedding"))))
 

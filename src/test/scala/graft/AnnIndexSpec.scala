@@ -16,11 +16,17 @@ import graft.sources.VersionedStore
 class AnnIndexSpec extends SparkSpec {
 
   // isolated corpus copy → isolated (fingerprinted) index store; the
-  // store root itself is ALSO isolated to a temp dir (JVM property —
-  // survives the newSession() boundaries session confs don't cross) so
-  // suite runs never accumulate stores under the durable default root
-  sys.props("graft.ann.index.base") =
-    Files.createTempDirectory("graft-annidx-store").toString
+  // store root itself is ALSO isolated to a temp dir so suite runs never
+  // accumulate stores under the durable default root. A session conf
+  // does not cross newSession(), so every new session gets it too.
+  private val storeRoot = Files.createTempDirectory("graft-annidx-store").toString
+  spark.conf.set("graft.ann.index.base", storeRoot)
+
+  private def newSession(): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("graft.ann.index.base", storeRoot)
+    s
+  }
 
   private lazy val tds: String = {
     val d = Files.createTempDirectory("graft-annidx-corpus")
@@ -48,7 +54,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(VersionedStore.listVersions(s"$base/assign") == Seq(1L))
     assert(VersionedStore.listVersions(s"$base/cents") == Seq(1L))
     val m1 = mtimes(s"$base/assign")
-    val r2 = run("ann_ivf_persisted_topk", spark.newSession())
+    val r2 = run("ann_ivf_persisted_topk", newSession())
     assert(r2 == r1, "cross-session serve must reproduce the stored result")
     assert(VersionedStore.listVersions(s"$base/assign") == Seq(1L),
       "second session must not write a new version")
@@ -65,7 +71,7 @@ class AnnIndexSpec extends SparkSpec {
       .select(col("vec_id"), lit(0).cast("int").as("cell"))
     VersionedStore.writeBatch(allOneCell, s"$base/assign", 1L)
     try {
-      val served = run("ann_ivf_persisted_topk", spark.newSession())
+      val served = run("ann_ivf_persisted_topk", newSession())
       val brute = run("ann_cosine_topk")
       assert(served == brute,
         "with the tampered all-one-cell v2, serving must equal brute force")
@@ -122,7 +128,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(VersionedStore.listVersions(s"$base/assign") == Seq(1L, 2L))
     assert(r1 == run("ann_ivf_upsert"),
       "stored-centroid assignment must equal the retrain-based upsert")
-    val r2 = run("ann_ivf_persisted_upsert", spark.newSession())
+    val r2 = run("ann_ivf_persisted_upsert", newSession())
     assert(r2 == r1)
     assert(VersionedStore.listVersions(s"$base/assign") == Seq(1L, 2L),
       "a replayed upsert keeps its complete version, never appends v3")

@@ -120,4 +120,65 @@ class NearDupKernelsSpec extends SparkSpec {
       .filter(col("shset").isNotNull)
     assert(sets(lam) === want)
   }
+
+  /** Brute-force (a, b, hamming) over all pairs a < b that `keep`. */
+  private def allPairs(fps: Seq[(Long, Long)])(keep: (Long, Long) => Boolean): Set[(Long, Long, Long)] =
+    (for {
+      (a, fa) <- fps; (b, fb) <- fps if a < b && keep(fa, fb)
+    } yield (a, b, java.lang.Long.bitCount(fa ^ fb).toLong)).toSet
+
+  /** Random `bits`-bit fingerprints with planted neighbors: identical
+    * copies, and copies with `flips` distinct bits flipped where `flips`
+    * runs through every distance in `dists`, each placed by `spread`
+    * (the band layout of the flipped bits). */
+  private def planted(bits: Int, dists: Seq[Int], seed: Long)(
+      spread: (Int, scala.util.Random) => Seq[Int]): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val mask = (1L << bits) - 1
+    val bases = Seq.fill(120)(rnd.nextLong() & mask)
+    val copies = bases.zipWithIndex.flatMap { case (fp, i) =>
+      val d = dists(i % dists.length)
+      Seq(fp, spread(d, rnd).foldLeft(fp)((v, bit) => v ^ (1L << bit))) ++
+        (if (i % 5 == 0) Seq(fp) else Nil)
+    }
+    copies.zipWithIndex.map { case (fp, i) => (i.toLong, fp) }
+  }
+
+  private def banded(fps: Seq[(Long, Long)], bandBits: Int, maxHamming: Int): Seq[(Long, Long, Long)] =
+    Dedup.bandedHammingPairs(scanned(fps.toDF("doc_id", "fp")), bandBits, maxHamming)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+
+  test("bandedHammingPairs: 4 x 8 bits at hamming <= 3 is every pair within 3 bits, each once") {
+    // distances 0..4 at random bit positions: 3 is the threshold, 4 is one past it
+    val fps = planted(32, 0 to 4, 11L)((d, rnd) => rnd.shuffle((0 until 32).toList).take(d))
+    val got = banded(fps, 8, 3)
+    val want = allPairs(fps)((a, b) => java.lang.Long.bitCount(a ^ b) <= 3)
+    assert(got.distinct.length === got.length, "a pair surfaced at more than one band")
+    assert(got.toSet === want)
+    // non-vacuous: identical pairs and pairs exactly at the threshold are present
+    assert(want.exists(_._3 == 0) && want.exists(_._3 == 3))
+  }
+
+  test("bandedHammingPairs: 4 x 15 bits at hamming <= 12 is every pair sharing a band within 12 bits, each once") {
+    def bandOf(fp: Long, b: Int): Long = (fp >>> (15 * b)) & 32767L
+    // some neighbors break all four bands (one flipped bit per band, or
+    // 12 bits spread 3 per band), the rest keep band 0..3 whole
+    val fps = planted(60, Seq(0, 1, 4, 8, 12, 13), 29L) { (d, rnd) =>
+      val whole = rnd.nextInt(5) // 4 = no band kept whole
+      val pool = (0 until 60).filter(bit => whole == 4 || bit / 15 != whole)
+      if (whole == 4 && d >= 4)
+        (0 until 4).flatMap(b => rnd.shuffle((b * 15 until b * 15 + 15).toList)
+          .take(d / 4 + (if (b < d % 4) 1 else 0)))
+      else rnd.shuffle(pool.toList).take(d)
+    }
+    val got = banded(fps, 15, 12)
+    val want = allPairs(fps)((a, b) =>
+      (0 until 4).exists(i => bandOf(a, i) == bandOf(b, i)) &&
+        java.lang.Long.bitCount(a ^ b) <= 12)
+    assert(got.distinct.length === got.length, "a pair surfaced at more than one band")
+    assert(got.toSet === want)
+    assert(want.exists(_._3 == 0) && want.exists(_._3 == 12))
+    // the band rule is not the hamming rule: some pair within 12 bits shares no band
+    assert(allPairs(fps)((a, b) => java.lang.Long.bitCount(a ^ b) <= 12).size > want.size)
+  }
 }

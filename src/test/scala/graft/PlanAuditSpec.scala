@@ -97,10 +97,9 @@ class PlanAuditSpec extends SparkSpec {
           // corpus vector, bounded here by the same pinning vec_id
           // filter as the embeddings leaf it joins
           // resolve the store base the same way AnnIndex does — another
-          // suite in this JVM may have pointed the prop at its own temp
-          // dir, and the audit must recognize that dir as the index
+          // suite sharing this session may have pointed the conf at its
+          // own temp dir, and the audit must recognize that dir as the index
           val annBase = spark.conf.getOption("graft.ann.index.base")
-            .orElse(sys.props.get("graft.ann.index.base"))
           val embeddingsLike = leafPaths.forall(p =>
             p.endsWith("embeddings.parquet") || p.contains("graft-stage") ||
               p.contains("ann_index") || annBase.exists(p.contains))

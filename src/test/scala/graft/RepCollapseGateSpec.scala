@@ -44,14 +44,20 @@ class RepCollapseGateSpec extends SparkSpec {
     * generation but counted in every score (base/variant J = 7/8). The
     * stop-only text is that 3-gram alone, with no rare shingle, so its
     * copies (doc ids [[StopOnly]]) are never capped candidates. */
-  private lazy val dupDir: String = {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-gatespec").toString
+  private lazy val dupDir: String = writeCorpus(tenfold)
+
+  private def tenfold: Seq[(Long, String, String)] = {
     val bases = (0 until 12).map(i => s"x y z a$i b$i c$i d$i e$i f$i")
     val variants = (0 until 5).map(i => s"x y z a$i b$i c$i d$i e$i f$i g$i")
     val texts = bases ++ variants :+ "x y z"
-    val docs = for { t <- texts.indices; k <- 0 until 10 }
+    for { t <- texts.indices; k <- 0 until 10 }
       yield ((t * 10 + k).toLong, texts(t), if (k % 2 == 0) "s1" else "s2")
+  }
+
+  /** A temp corpus dir holding `docs` (doc_id, text, source). */
+  private def writeCorpus(docs: Seq[(Long, String, String)]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-gatespec").toString
     docs.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en")).withColumn("n_chars", length(col("text")))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -115,5 +121,68 @@ class RepCollapseGateSpec extends SparkSpec {
     // J = 1 duplicates of each other there
     assert(pairs("dedup_ngram_jaccard_prefix", "doc_a", "doc_b")
       .contains((StopOnly.head, StopOnly.head + 1)))
+  }
+
+  /** Min-root union-find labels of every node on an edge of `edges`. */
+  private def minRootLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("collapse kit on a duplicate-heavy corpus: clusters equal union-find over the uncollapsed pairs") {
+    // the 10-way fixture plus a 3-copy group of a two-token text, which
+    // has no shingle and so no J pair, but one fingerprint
+    val lone = (180L until 183L).map(id => (id, "lone pair", "s1"))
+    val docs = tenfold ++ lone
+    val dir = writeCorpus(docs)
+    val ids = docs.map(_._1)
+    def pairs(keep: (Long, Long) => Boolean): Seq[(Long, Long)] =
+      for { a <- ids; b <- ids if a < b && keep(a, b) } yield (a, b)
+    def clusters(q: String): Map[Long, Long] =
+      SparkEntry.queries(q)(spark, dir).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
+    def keep(q: String): Map[Long, (Long, Boolean)] =
+      SparkEntry.queries(q)(spark, dir).collect().map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Long]("cluster_id"), r.getAs[Boolean]("keep"))).toMap
+    def keepOf(all: Seq[Long], labels: Map[Long, Long]): Map[Long, (Long, Boolean)] =
+      all.map { d => val c = labels.getOrElse(d, d); d -> (c, c == d) }.toMap
+
+    // J >= 0.5 over the split(" ", -1) 3-gram sets
+    val sets: Map[Long, Set[String]] = docs.map { case (id, t, _) =>
+      id -> t.split(" ", -1).sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    }.toMap
+    val jacLabels = minRootLabels(pairs { (a, b) =>
+      val shared = (sets(a) intersect sets(b)).size
+      shared > 0 && shared.toDouble / (sets(a).size + sets(b).size - shared) >= 0.5
+    })
+    assert(clusters("dedup_clusters") === jacLabels)
+    assert(keep("dedup_keep_canonical") === keepOf(ids, jacLabels))
+    assert(lone.forall { case (d, _, _) => !jacLabels.contains(d) })
+    // non-vacuous: base/variant pairs (J = 7/8) join two 10-way groups
+    assert(jacLabels.values.toSeq.distinct.length === 18 - 5)
+
+    import spark.implicits._
+    val corpus = docs.map { case (id, t, _) => (id, t) }.toDF("doc_id", "text")
+    val simhash = Dedup.simhash32(corpus).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
+    assert(clusters("dedup_simhash_clusters") === minRootLabels(pairs((a, b) =>
+      java.lang.Long.bitCount(simhash(a) ^ simhash(b)) <= 3)))
+
+    val ahash = graft.operators.Multimodal.ahashOf(corpus).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("fp")).toMap
+    def bandOf(fp: Long, b: Int): Long = (fp >>> (15 * b)) & 32767L
+    val phashLabels = minRootLabels(pairs { (a, b) =>
+      (0 until 4).exists(i => bandOf(ahash(a), i) == bandOf(ahash(b), i)) &&
+        java.lang.Long.bitCount(ahash(a) ^ ahash(b)) <= 12
+    })
+    assert(keep("multimodal_phash_clusters") === keepOf(ids, phashLabels))
   }
 }
