@@ -89,14 +89,17 @@ object TextAnalysis {
     * the Unicode private-use area (U+E000+i), so any round count works on
     * any lowercase corpus. Per round: one narrow scan, one bounded
     * aggregation, ONE single-row driver fetch (the argmax — same bounded
-    * driver action as an iterative fixpoint's convergence count), and a
-    * [[graft.operators.CheckpointStrategy]] lineage cut so round N's plan
-    * doesn't replay rounds 1..N-1's replaces from scratch.
+    * driver action as an iterative fixpoint's convergence count). The
+    * rounds run on the round loop the graph operators share,
+    * [[graft.operators.CheckpointStrategy.rounds]]: it cuts each round's
+    * merged corpus, so round N's plan doesn't replay rounds 1..N-1's
+    * replaces from scratch, and frees the corpus it replaced. A round
+    * that finds no pair left ends the loop.
     *
     * Checkpoint posture, same contract as the Graph/Dedup loops: `Local`
     * (the default) pins round state in executor-local blocks — fine
-    * single-node, but one executor loss kills a long training run and N
-    * rounds hold N corpus rewrites. A cluster run should pass
+    * single-node, but one executor loss kills a long training run. A
+    * cluster run should pass
     * `Reliable(dir)` so round state lands on fault-tolerant storage.
     * Production posture at 100 TB: train the merge table on a
     * deterministic hash-sample of the corpus (pair statistics converge
@@ -110,47 +113,43 @@ object TextAnalysis {
       ckpt: graft.operators.CheckpointStrategy =
         graft.operators.CheckpointStrategy.Local): Seq[(Int, String, Long)] = {
     require(rounds >= 1 && rounds <= 4096, s"rounds out of range: $rounds")
-    var corpus = ckpt.cut(docs.select(col("text")))
     val merges = Seq.newBuilder[(Int, String, Long)]
-    for (r <- 1 to rounds) {
-      val top = corpus
-        .filter(length(col("text")) >= 2)
-        .select(explode(sequence(lit(1),
-          least(length(col("text")) - 1, lit(8192)))).as("i"), col("text"))
-        .select(expr("substring(text, i, 2)").as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("pair")).limit(1)
-        .collect()
-      if (top.isEmpty) { ckpt.release(corpus); return merges.result() }
-      val pair = top(0).getAs[String]("pair")
-      val cnt = top(0).getAs[Long]("cnt")
-      merges += ((r, pair, cnt))
-      val marker = (0xE000 + (r - 1)).toChar.toString
-      val next = ckpt.cut(corpus
-        .select(regexp_replace(col("text"),
-          java.util.regex.Pattern.quote(pair), marker).as("text")))
-      // the merged corpus supersedes round r-1's — release it, or a
-      // 4-round train leaks ~5 full-corpus rewrites into session
-      // storage (the single biggest localCheckpoint leak in the suite)
-      ckpt.release(corpus)
-      corpus = next
+    val corpus = ckpt.rounds(docs.select(col("text")), rounds) { round =>
+      val top = topPair(pairCounts(round.state, "text")).collect()
+      if (top.isEmpty) round.state // no pair left to merge: a fixpoint
+      else {
+        val pair = top(0).getAs[String]("pair")
+        merges += ((round.index, pair, top(0).getAs[Long]("cnt")))
+        val marker = (0xE000 + (round.index - 1)).toChar.toString
+        round.state.select(regexp_replace(col("text"),
+          java.util.regex.Pattern.quote(pair), marker).as("text"))
+      }
     }
     ckpt.release(corpus)
     merges.result()
   }
 
+  /** Adjacent character pairs of column `c` counted over `df`, as
+    * (pair, cnt): one narrow explode of every 2-char substring plus one
+    * hash aggregate. The fan-out is bounded to the first 8 KiB of each
+    * text, matching the oracles' generate_series cap. */
+  private def pairCounts(df: DataFrame, c: String): DataFrame = df
+    .filter(length(col(c)) >= 2)
+    .select(explode(sequence(lit(1),
+      least(length(col(c)) - 1, lit(8192)))).as("i"), col(c))
+    .select(expr(s"substring($c, i, 2)").as("pair"))
+    .groupBy("pair").agg(count(lit(1)).as("cnt"))
+
+  /** The argmax row of [[pairCounts]]: count desc, ties to the smaller
+    * pair — the merge every BPE round picks. */
+  private def topPair(counts: DataFrame): DataFrame =
+    counts.orderBy(desc("cnt"), col("pair")).limit(1)
+
   /** Corpus-wide adjacent char-pair counts staged once per session: the
     * pair-statistic query and BPE training's first round aggregate the
     * identical table (≤ |alphabet|² rows out of a full corpus scan). */
   def stagedPairCounts(s: SparkSession, dir: String): DataFrame =
-    graft.core.Staged(s, s"$dir|bpePairs") {
-      Tables.documents(s, dir)
-        .filter(length(col("text")) >= 2)
-        .select(explode(sequence(lit(1),
-          least(length(col("text")) - 1, lit(8192)))).as("i"), col("text"))
-        .select(expr("substring(text, i, 2)").as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
-    }
+    graft.core.Staged(s, s"$dir|bpePairs")(pairCounts(Tables.documents(s, dir), "text"))
 
   /** Per-doc stopword hit counts staged once per session: the langid
     * query and its confusion-matrix eval both start from this table (a
@@ -384,22 +383,14 @@ object TextAnalysis {
     // aggregation (pair domain ≤ |alphabet|²) + one broadcast of the
     // single argmax row — the distributed BPE step at any corpus size.
     "text_bpe_train" -> ((s, dir) => {
-      def pairCounts(df: DataFrame): DataFrame = df
-        .filter(length(col("text")) >= 2)
-        .select(explode(sequence(lit(1),
-          least(length(col("text")) - 1, lit(8192)))).as("i"), col("text"))
-        .select(expr("substring(text, i, 2)").as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
       val docs = Tables.documents(s, dir).select(col("text"))
       // round 1's counts come from the staged pair table (shared with
       // text_bpe_pairs); round 2 must rescan — its corpus is merged
-      val top1 = stagedPairCounts(s, dir)
-        .orderBy(desc("cnt"), col("pair")).limit(1)
+      val top1 = topPair(stagedPairCounts(s, dir))
         .select(col("pair").as("p1"), col("cnt").as("c1"))
       val merged = docs.crossJoin(broadcast(top1))
         .select(expr("replace(text, p1, 'A')").as("text"))
-      val top2 = pairCounts(merged)
-        .orderBy(desc("cnt"), col("pair")).limit(1)
+      val top2 = topPair(pairCounts(merged, "text"))
         .select(col("pair").as("p2"), col("cnt").as("c2"))
       top1.select(lit(1L).as("round"), col("p1").as("merged_pair"),
           col("c1").as("pair_count"))
@@ -419,22 +410,15 @@ object TextAnalysis {
     // with the scan. Output shape matches text_bpe_encode so sampled
     // and full-corpus training are directly comparable.
     "text_bpe_train_sampled" -> ((s, dir) => {
-      def pairTop(df: DataFrame, c: String): DataFrame = df
-        .filter(length(col(c)) >= 2)
-        .select(explode(sequence(lit(1),
-          least(length(col(c)) - 1, lit(8192)))).as("i"), col(c))
-        .select(expr(s"substring($c, i, 2)").as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("pair")).limit(1)
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val sample = docs
         .filter(pmod(graft.functions.PortableHash.hash60(col("doc_id").cast("string")),
           lit(100L)) < 50)
         .select(col("text"))
-      val top1 = pairTop(sample, "text").select(col("pair").as("p1"))
+      val top1 = topPair(pairCounts(sample, "text")).select(col("pair").as("p1"))
       val sampleMerged = sample.crossJoin(broadcast(top1))
         .select(expr("replace(text, p1, 'A')").as("t1"))
-      val top2 = pairTop(sampleMerged, "t1").select(col("pair").as("p2"))
+      val top2 = topPair(pairCounts(sampleMerged, "t1")).select(col("pair").as("p2"))
       docs.crossJoin(broadcast(top1)).crossJoin(broadcast(top2))
         .select(col("doc_id"),
           length(col("text")).cast("long").as("len0"),
@@ -452,19 +436,12 @@ object TextAnalysis {
     // preprocessor. 'A'/'B' stand in for the PUA merge symbols (the
     // corpus is lowercase — asserted at train time).
     "text_bpe_encode" -> ((s, dir) => {
-      val top1 = stagedPairCounts(s, dir)
-        .orderBy(desc("cnt"), col("pair")).limit(1)
+      val top1 = topPair(stagedPairCounts(s, dir))
         .select(col("pair").as("p1"))
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val m1 = docs.crossJoin(broadcast(top1))
         .select(col("doc_id"), col("text"), expr("replace(text, p1, 'A')").as("t1"))
-      val top2 = m1
-        .filter(length(col("t1")) >= 2)
-        .select(explode(sequence(lit(1),
-          least(length(col("t1")) - 1, lit(8192)))).as("i"), col("t1"))
-        .select(expr("substring(t1, i, 2)").as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("pair")).limit(1)
+      val top2 = topPair(pairCounts(m1, "t1"))
         .select(col("pair").as("p2"))
       m1.crossJoin(broadcast(top2))
         .select(col("doc_id"),

@@ -6,7 +6,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Iterative plans (connected components, power iteration) double in
   * size every round unless the chain is cut, so each round must
-  * materialize — the question is where the blocks live:
+  * materialize. [[CheckpointStrategy.rounds]] is the one bounded round
+  * loop that owns those cuts and their releases (the graph loops and
+  * BPE training run on it; the star CC loop fuses its lazy cut with its
+  * per-round count and keeps its own fixpoint loop). The question left
+  * to the strategy is where the blocks live:
   *
   *  - [[CheckpointStrategy.Local]]: `localCheckpoint()` — blocks stay in
   *    executor storage, NON-replicated. Fastest, right default for
@@ -44,9 +48,57 @@ sealed trait CheckpointStrategy {
     * frame that might still be read is a correctness bug (checkpointed
     * blocks have no lineage to recompute from). */
   def release(df: DataFrame): Unit
+
+  /** The round loop of every bounded iterative operator: `n` rounds of
+    * `step` from `init`, with one lineage cut per round. The loop cuts
+    * `init`, then each round's new state, and frees the state a round
+    * replaced only once the new one is cut, so at most two rounds' state
+    * is ever held. It also frees every intermediate the round cut
+    * through [[CheckpointStrategy.Round.cutLazy]], after the round's
+    * state is cut. A round that returns its own state unchanged (`eq`)
+    * is a fixpoint and ends the loop early.
+    *
+    * The returned state stays cut: the caller reads it, and releases it
+    * when it no longer needs it. Loop-invariant inputs a caller cuts
+    * before the loop (an edge list) are the caller's to release after
+    * it. */
+  def rounds(init: DataFrame, n: Int)(step: CheckpointStrategy.Round => DataFrame): DataFrame = {
+    @annotation.tailrec
+    def loop(state: DataFrame, i: Int): DataFrame =
+      if (i > n) state
+      else {
+        val round = new CheckpointStrategy.Round(state, i, this)
+        val next = step(round)
+        if (next eq state) { round.cuts.foreach(release); state }
+        else {
+          val cutNext = cut(next)
+          release(state)
+          round.cuts.foreach(release)
+          loop(cutNext, i + 1)
+        }
+      }
+    loop(cut(init), 1)
+  }
 }
 
 object CheckpointStrategy {
+
+  /** One round of [[CheckpointStrategy.rounds]]: the state it reads, its
+    * 1-based index, and lazy cuts of its own intermediates. */
+  final class Round private[CheckpointStrategy] (val state: DataFrame, val index: Int,
+      ckpt: CheckpointStrategy) {
+    private[CheckpointStrategy] val cuts =
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** [[CheckpointStrategy.cutLazy]] of an intermediate the round's new
+      * state reads: the loop's eager cut of that state materializes it
+      * in the same job, and the loop frees it right after. */
+    def cutLazy(df: DataFrame): DataFrame = {
+      val c = ckpt.cutLazy(df)
+      cuts += c
+      c
+    }
+  }
 
   case object Local extends CheckpointStrategy {
     override def cut(df: DataFrame): DataFrame = df.localCheckpoint()

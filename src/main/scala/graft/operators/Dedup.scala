@@ -383,9 +383,12 @@ object Dedup {
     * choice is purely a cost model: the rep indirection saves ~dup² of
     * self-join work on a re-crawl-shaped corpus (OOM → 41 s at 30×) but
     * COSTS an extra staged artifact plus 2-3 expansion joins per
-    * consumer, which on a nearly-dup-free corpus is pure overhead
-    * (round-10 accepted sf0.1 regressions: prefix 2.55 → 3.3-3.8 s,
-    * capped 0.26 → ~1.3 s). The decision statistic is the exact
+    * consumer, which on a nearly-dup-free corpus is pure overhead. At
+    * sf0.1 on 4 cores (`graft.Bench`, 5 passes, 3 alternating runs per
+    * side), forcing the rep path on the 7 gated queries raised their
+    * summed steady medians 6.71 → 9.01 s (+34 %) and their first use
+    * 34.1 → 41.5 s; every query got slower, from containment_topk
+    * 0.38 → 0.98 s to prefix 3.22 → 3.58 s. The decision statistic is the exact
     * within-group pair mass Σ C(k_g, 2) over exact-dup text groups —
     * the quadratic slot inflation the doc-level self-join would pay per
     * shared rare shingle — from ONE narrow aggregate over md5(text)
@@ -998,14 +1001,8 @@ object Dedup {
     * self-join + distinct. At cluster scale this is the "write the
     * candidate list before verification" step every LSH pipeline has. */
   def stagedLshCandidates(s: SparkSession, dir: String, b: Int, r: Int): DataFrame =
-    Staged(s, s"$dir|lshcand|${b}x$r") {
-      val bands = lshBandsCfg(stagedMinhashSigs(s, dir), b, r)
-      bands.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-        .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("sig")),
-          Seq("band", "sig"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-    }
+    Staged(s, s"$dir|lshcand|${b}x$r")(
+      bandPairs(lshBandsCfg(stagedMinhashSigs(s, dir), b, r)))
   /** REP-LEVEL LSH candidate pairs for the tuning sweep: the band
     * self-join runs over one signature per distinct text (identical
     * texts hash to identical signatures, so the doc-level candidate set
@@ -1013,18 +1010,24 @@ object Dedup {
     * query does that expansion analytically on group sizes). Staged:
     * each config's rep pairs feed both the candidate count and the
     * exact verify. Rep-level minhash sigs are staged beneath it, shared
-    * across the three configs. */
+    * across the three configs. Columns (doc_a, doc_b) hold rep ids. */
   def stagedLshCandidatesReps(s: SparkSession, dir: String, b: Int, r: Int): DataFrame =
     Staged(s, s"$dir|lshcandR|${b}x$r") {
       val sigsR = Staged(s, s"$dir|minhashR")(
         minhashSignature(stagedShinglesReps(s, dir)))
-      val bands = lshBandsCfg(sigsR, b, r)
-      bands.select(col("doc_id").as("ra"), col("band"), col("sig"))
-        .join(bands.select(col("doc_id").as("rb"), col("band"), col("sig")),
-          Seq("band", "sig"))
-        .filter(col("ra") < col("rb"))
-        .select("ra", "rb").distinct()
+      bandPairs(lshBandsCfg(sigsR, b, r))
     }
+
+  /** The LSH band self-join: distinct (doc_a, doc_b), doc_a < doc_b, of
+    * the ids in `bands` (doc_id, band, sig) that agree on any whole
+    * band. */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bands.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
+      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("sig")),
+        Seq("band", "sig"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
+
   /** Distinct (doc_id, winnow fingerprint) pairs — K=8 char grams, W=16
     * window minima (the doc_winnow_fingerprints derivation). Staged:
     * the per-doc profile reads it once, the cross-doc pair join twice. */
@@ -1368,14 +1371,14 @@ object Dedup {
         val candR = stagedLshCandidatesReps(s, dir, b, r)
         val na = stats.select(col("rep").as("ra"), col("n_mem").as("na"))
         val nb = stats.select(col("rep").as("rb"), col("n_mem").as("nb"))
-        val candN = candR.join(na, "ra").join(nb, "rb")
-          .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("c"))
-        val verN = jaccardBySets(
-            candR.select(col("ra").as("doc_a"), col("rb").as("doc_b")), shR)
-          .filter(col("jaccard") >= 0.5)
+        // doc pairs behind rep pairs (doc_a, doc_b): Σ na·nb
+        def docPairs(repPairs: DataFrame, alias: String): DataFrame = repPairs
           .select(col("doc_a").as("ra"), col("doc_b").as("rb"))
           .join(na, "ra").join(nb, "rb")
-          .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("v"))
+          .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as(alias))
+        val candN = docPairs(candR, "c")
+        val verN = docPairs(
+          jaccardBySets(candR, shR).filter(col("jaccard") >= 0.5), "v")
         within.crossJoin(candN).crossJoin(verN)
           .select(lit(s"${b}x$r").as("config"),
             (col("w") + col("c")).as("n_candidates"),
@@ -1583,6 +1586,8 @@ object Dedup {
           when(col("sa") === col("sb"),
             (col("na") * (col("na") - 1) / 2).cast("long"))
             .otherwise(col("na") * col("nb")).as("pairs"))
+        // a group's lone copy in a source pairs with no other copy there
+        .filter(col("pairs") > 0)
       cross.unionByName(within)
         .groupBy("src_lo", "src_hi").agg(sum("pairs").as("dup_pairs"))
         .orderBy("src_lo", "src_hi")

@@ -20,7 +20,8 @@ import graft.core.Tables
   * order-independent — the same trick real systems use when they
   * quantize PageRank to fixed-point for determinism).
   *
-  * Each round cuts its lineage via a [[CheckpointStrategy]] — the
+  * Every loop here runs on the one round loop,
+  * [[CheckpointStrategy.rounds]], which cuts each round's lineage — the
   * classic iterative-job trap is a plan that doubles per iteration until
   * the driver chokes on analysis, long before data size matters. Local
   * (localCheckpoint) is the single-node default; Reliable(dir) writes
@@ -76,41 +77,8 @@ object Graph {
     * the budget are 1-row aggregates broadcast in-plan — no driver fetch. */
   def powerIterate(edges: DataFrame, iters: Int,
       ckpt: CheckpointStrategy = CheckpointStrategy.Local,
-      renormalize: Boolean = true): DataFrame = {
-    val e = ckpt.cut(edges)
-    lazy val budget = rankBudget(e, ckpt)
-    var ranks = ckpt.cut(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node")))
-        .distinct()
-        .withColumn("r", lit(1L)))
-    for (_ <- 1 to iters) {
-      val raw = e
-        .join(ranks.select(col("node").as("src"), col("r").as("r_src")), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("w") * col("r_src")).as("r"))
-      val prev = ranks
-      ranks =
-        if (!renormalize) ckpt.cut(raw)
-        else {
-          // lazy: the eager cut of `res` below computes the shift's
-          // broadcast, which reads cutRaw and materializes the
-          // checkpoint inside the same job — release ordering is
-          // unchanged (cutRaw is only freed after res is persisted)
-          val cutRaw = ckpt.cutLazy(raw)
-          val sh = cutRaw.crossJoin(budget)
-            .agg(greatest(lit(0), max(length(bin(col("r")))) - max(col("bud"))).as("sh"))
-          val res = ckpt.cut(cutRaw.crossJoin(broadcast(sh))
-            .select(col("node"), expr("shiftright(r, sh)").as("r")))
-          ckpt.release(cutRaw)
-          res
-        }
-      ckpt.release(prev) // round k-1's ranks are dead once round k is cut
-    }
-    ckpt.release(e)
-    if (renormalize && iters > 0) ckpt.release(budget)
-    ranks
-  }
+      renormalize: Boolean = true): DataFrame =
+    rank(edges, iters, None, ckpt, renormalize)
 
   /** 1-row headroom budget: ranks may hold 62 − bitlen(Σw) bits. The
     * scheme needs at least 1 bit of rank headroom, i.e. bitlen(Σw) ≤ 61
@@ -146,33 +114,46 @@ object Graph {
     * exactly what makes seeded relevance cheaper than global PR on a
     * 100 TB graph. */
   def seededRank(edges: DataFrame, iters: Int, seeds: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame =
+    rank(edges, iters, Some(seeds.select(col("node"))), ckpt, renormalize = true)
+
+  /** The one rank kernel under [[powerIterate]] and [[seededRank]], on
+    * the round loop of [[CheckpointStrategy.rounds]]. Ranks start at 1
+    * on `seeds`, or on every node of an edge without seeds. Each round
+    * is one matvec, then (with `renormalize`) one power-of-two shift
+    * against [[rankBudget]], then (with seeds) one unit re-injected on
+    * every seed by a full-outer join. The edge cut and the budget row
+    * are loop-invariant and released after the loop. */
+  private def rank(edges: DataFrame, iters: Int, seeds: Option[DataFrame],
+      ckpt: CheckpointStrategy, renormalize: Boolean): DataFrame = {
     val e = ckpt.cut(edges)
     lazy val budget = rankBudget(e, ckpt)
-    val s1 = seeds.select(col("node")).withColumn("s", lit(1L))
-    var ranks = ckpt.cut(seeds.select(col("node")).withColumn("r", lit(1L)))
-    for (_ <- 1 to iters) {
+    val start = seeds.getOrElse(
+      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
+    val ranks = ckpt.rounds(start.withColumn("r", lit(1L)), iters) { round =>
       val raw = e
-        .join(ranks.select(col("node").as("src"), col("r").as("r_src")), "src")
+        .join(round.state.select(col("node").as("src"), col("r").as("r_src")), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("w") * col("r_src")).as("r"))
-      // lazy for the same reason as powerIterate's renormalize branch:
-      // the eager ranks cut below materializes it before its release
-      val cutRaw = ckpt.cutLazy(raw)
-      val sh = cutRaw.crossJoin(budget)
-        .agg(greatest(lit(0), max(length(bin(col("r")))) - max(col("bud"))).as("sh"))
-      val shifted = cutRaw.crossJoin(broadcast(sh))
-        .select(col("node"), expr("shiftright(r, sh)").as("r"))
-      val prev = ranks
-      ranks = ckpt.cut(
-        shifted.join(s1, Seq("node"), "full_outer")
+      val scaled =
+        if (!renormalize) raw
+        else {
+          // lazy: the loop's eager cut of this round's ranks computes the
+          // shift's broadcast, which reads cutRaw and materializes it in
+          // the same job; the loop frees it once the ranks are cut
+          val cutRaw = round.cutLazy(raw)
+          val sh = cutRaw.crossJoin(budget)
+            .agg(greatest(lit(0), max(length(bin(col("r")))) - max(col("bud"))).as("sh"))
+          cutRaw.crossJoin(broadcast(sh))
+            .select(col("node"), expr("shiftright(r, sh)").as("r"))
+        }
+      seeds.fold(scaled)(sd =>
+        scaled.join(sd.withColumn("s", lit(1L)), Seq("node"), "full_outer")
           .select(col("node"),
             (coalesce(col("r"), lit(0L)) + coalesce(col("s"), lit(0L))).as("r")))
-      ckpt.release(cutRaw)
-      ckpt.release(prev)
     }
     ckpt.release(e)
-    if (iters > 0) ckpt.release(budget)
+    if (renormalize && iters > 0) ckpt.release(budget)
     ranks
   }
 
@@ -228,32 +209,26 @@ object Graph {
     // subgraph (the full trade graph is near-complete at 25 nations, so
     // everything would be depth 1; the k-NN restriction gives the depth
     // structure a real sparse graph has) from the alphabetically-first
-    // node. Each round: frontier ⋈ edges → not-yet-visited targets —
+    // node. The round state is the visited set (node, depth); round d's
+    // frontier is its depth d-1 rows. Each round: frontier ⋈ edges →
+    // not-yet-visited targets at depth d, appended to the visited set —
     // first discovery IS min depth, the reason BFS never needs a
-    // min-aggregate — with a lineage cut per round (same
-    // CheckpointStrategy discipline as powerIterate). Rounds bounded;
-    // every join equi-keyed; frontier ≤ |nodes|. The oracle is a DuckDB
+    // min-aggregate — with one lineage cut per round (the round loop
+    // powerIterate runs on). Rounds bounded; every join equi-keyed;
+    // frontier ≤ |nodes|. The oracle is a DuckDB
     // recursive CTE with the same depth bound and min(depth) per node.
     "graph_bfs_depth" -> ((s, dir) => {
       val sparse = topOutEdges(s, dir, 3).select("src", "dst")
-      val cut = CheckpointStrategy.Local
-      var frontier = cut.cut(
-        sparse.agg(min(col("src")).as("node")).select(col("node"), lit(0).as("depth")))
-      var visited = frontier
-      for (d <- 1 to MaxBfsDepth) {
-        val next = cut.cut(
-          frontier.join(sparse, col("node") === col("src"))
-            .select(col("dst").as("node")).distinct()
-            .join(visited, Seq("node"), "left_anti")
-            .select(col("node"), lit(d).as("depth")))
-        val prevVisited = visited
-        visited = cut.cut(visited.unionByName(next))
-        if (d > 1) cut.release(frontier) // depth-0 frontier IS visited v0
-        cut.release(prevVisited)
-        frontier = next
-      }
-      cut.release(frontier)
-      visited.orderBy("depth", "node")
+      CheckpointStrategy.Local.rounds(
+          sparse.agg(min(col("src")).as("node")).select(col("node"), lit(0).as("depth")),
+          MaxBfsDepth) { round =>
+        val visited = round.state
+        visited.unionByName(visited.filter(col("depth") === round.index - 1)
+          .join(sparse, col("node") === col("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .select(col("node"), lit(round.index).as("depth")))
+      }.orderBy("depth", "node")
     }),
 
     // K-CORE PEEL — the fifth iterative primitive (centrality, density,
@@ -270,25 +245,20 @@ object Graph {
     // it in the last round.
     "graph_kcore" -> ((s, dir) => {
       val topk = topOutEdges(s, dir, 5).select("src", "dst")
-      val cut = CheckpointStrategy.Local
-      val und = cut.cut(topk
+      val ckpt = CheckpointStrategy.Local
+      val und = ckpt.cut(topk
         .unionByName(topk.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
-      var nodes = cut.cut(und.select(col("src").as("node")).distinct())
-      var surv: DataFrame = null
-      var prev: DataFrame = nodes
-      for (_ <- 1 to 2) {
-        surv = cut.cut(und
+      val core = ckpt.rounds(und.select(col("src").as("node")).distinct(), 2) { round =>
+        val nodes = round.state.select("node")
+        und
           .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
           .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
           .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= 6))
-        cut.release(prev)
-        prev = surv
-        nodes = surv.select("node")
+          .filter(col("deg") >= 6)
       }
-      cut.release(und)
-      surv.orderBy("node")
+      ckpt.release(und)
+      core.orderBy("node")
     }),
 
     // NEIGHBOR JACCARD — link-prediction / node-similarity scoring:
@@ -338,26 +308,23 @@ object Graph {
     // oracle unrolls both rounds over the identical edge CTE.
     "graph_label_prop" -> ((s, dir) => {
       val topk = topOutEdges(s, dir, 3)
-      val cut = CheckpointStrategy.Local
-      val und = cut.cut(topk
+      val ckpt = CheckpointStrategy.Local
+      val und = ckpt.cut(topk
         .unionByName(topk.select(col("dst").as("src"), col("src").as("dst"), col("w")))
         .groupBy("src", "dst").agg(sum("w").as("w")))
-      var labels = cut.cut(und.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node")))
-      for (_ <- 1 to 2) {
-        val argmax = org.apache.spark.sql.expressions.Window
-          .partitionBy("node").orderBy(desc("wsum"), col("lbl"))
-        val prev = labels
-        labels = cut.cut(und
-          .join(labels.select(col("node").as("dst"), col("lbl")), "dst")
+      val argmax = org.apache.spark.sql.expressions.Window
+        .partitionBy("node").orderBy(desc("wsum"), col("lbl"))
+      val labels = ckpt.rounds(
+          und.select(col("src").as("node")).distinct().withColumn("lbl", col("node")), 2) { round =>
+        und
+          .join(round.state.select(col("node").as("dst"), col("lbl")), "dst")
           .groupBy(col("src").as("node"), col("lbl"))
           .agg(sum(col("w")).as("wsum"))
           .withColumn("rk", row_number().over(argmax))
           .filter(col("rk") === 1)
-          .select("node", "lbl"))
-        cut.release(prev)
+          .select("node", "lbl")
       }
-      cut.release(und)
+      ckpt.release(und)
       labels.orderBy("node")
     })
   )

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.CheckpointStrategy
+import graft.functions.TextAnalysis
+import graft.core.Tables
+import graft.operators.{CheckpointStrategy, Graph}
 
 /** Pins that [[CheckpointStrategy.Local.release]] genuinely frees the
   * localCheckpoint's executor storage. Dataset.unpersist alone only
@@ -57,5 +60,30 @@ class CheckpointReleaseSpec extends SparkSpec {
     assert(live.size <= 1, s"only the final round may stay persisted, got $live")
     CheckpointStrategy.Local.release(prev)
     assert((storedIds -- before).isEmpty)
+  }
+
+  test("round loops keep no intermediate round's blocks, only the result's cut") {
+    import spark.implicits._
+    val edges = Seq(("a", "b", 2L), ("b", "c", 3L), ("c", "a", 1L), ("a", "c", 1L))
+      .toDF("src", "dst", "w")
+    val seeds = Seq("a").toDF("node")
+    def resultOnly(what: String)(run: => DataFrame): Unit = {
+      val before = storedIds
+      val out = run
+      assert(out.collect().nonEmpty, s"$what returned no rows")
+      val live = storedIds -- before
+      assert(live.size <= 1, s"$what kept more than its result's cut: $live")
+      CheckpointStrategy.Local.release(out)
+      assert((storedIds -- before).isEmpty,
+        s"$what kept blocks its result does not read: ${storedIds -- before}")
+    }
+    resultOnly("powerIterate")(Graph.powerIterate(edges, 3))
+    resultOnly("powerIterate raw")(Graph.powerIterate(edges, 3, renormalize = false))
+    resultOnly("seededRank")(Graph.seededRank(edges, 3, seeds))
+    for (q <- Seq("graph_bfs_depth", "graph_kcore", "graph_label_prop"))
+      resultOnly(q)(SparkEntry.queries(q)(spark, sf0001))
+    val before = storedIds
+    assert(TextAnalysis.bpeTrain(Tables.documents(spark, sf0001), 3).length === 3)
+    assert((storedIds -- before).isEmpty, "bpeTrain left round state behind")
   }
 }

@@ -159,6 +159,25 @@ class GraphSamplingSpec extends SparkSpec {
     assert(got.nonEmpty && got.size < initial, s"no cascade: ${got.size}/$initial")
   }
 
+  test("graph_bfs_depth matches a plain-Scala BFS on the top-3 subgraph") {
+    val edges = Graph.stagedTradeEdges(spark, sf0001)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val out = edges.groupBy(_._1).map { case (src, es) =>
+      src -> es.sortBy(e => (-e._3, e._2)).take(3).map(_._2).toSet
+    }
+    var depth = Map(out.keys.min -> 0)
+    var frontier = depth.keySet
+    for (d <- 1 to 3) {
+      frontier = frontier.flatMap(out.getOrElse(_, Set.empty[String])) -- depth.keySet
+      depth ++= frontier.map(_ -> d)
+    }
+    val got = SparkEntry.queries("graph_bfs_depth")(spark, sf0001).collect()
+      .map(r => r.getString(0) -> r.getAs[Int]("depth")).toMap
+    assert(got === depth, "BFS depths diverge from a plain-Scala BFS")
+    // non-vacuous: the sparse graph has depth structure past one hop
+    assert(got.values.max >= 2, s"every node within one hop: $got")
+  }
+
   test("graph_label_prop matches a plain-Scala two-round replay on the sparse graph") {
     // rebuild the sparse symmetrized graph from the staged edges and run
     // the same two synchronous majority rounds in local Scala — an

@@ -27,8 +27,7 @@ class RepCollapseGateSpec extends SparkSpec {
 
   /** Run `body` with the gate pinned to one path on `dir`, then restore
     * the corpus's own decision. */
-  private def pinned(dir: String, docLevel: Boolean)(
-      body: => Map[String, Seq[String]]): Map[String, Seq[String]] = {
+  private def pinned[T](dir: String, docLevel: Boolean)(body: => T): T = {
     val auto = Dedup.docLevelPath(spark, dir)
     Dedup.pinDocLevel(spark, dir, docLevel)
     try body finally Dedup.pinDocLevel(spark, dir, auto)
@@ -184,5 +183,22 @@ class RepCollapseGateSpec extends SparkSpec {
         java.lang.Long.bitCount(ahash(a) ^ ahash(b)) <= 12
     })
     assert(keep("multimodal_phash_clusters") === keepOf(ids, phashLabels))
+  }
+
+  test("dedup_cross_source: a two-copy group split across sources adds no zero-pair rows") {
+    // each text has one copy in s1 and one in s2, so no source holds two
+    // copies of a group: the within-source term must emit no (s, s) row
+    val texts = (0 until 12).map(i => s"x y z a$i b$i c$i d$i e$i f$i")
+    val docs = for { t <- texts.indices; k <- 0 until 2 }
+      yield ((t * 2 + k).toLong, texts(t), if (k == 0) "s1" else "s2")
+    val dir = writeCorpus(docs)
+    def rows(docLevel: Boolean): Seq[(String, String, Long)] =
+      pinned(dir, docLevel)(SparkEntry.queries("dedup_cross_source")(spark, dir).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("dup_pairs"))).toSeq)
+    val doc = rows(docLevel = true)
+    val rep = rows(docLevel = false)
+    assert(rep === doc, "rep and doc-level paths disagree on a two-copy split")
+    assert(doc === Seq(("s1", "s2", 12L)))
+    assert(!rep.exists(_._3 == 0L), s"zero-pair rows: $rep")
   }
 }
