@@ -1,6 +1,7 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
 
 import org.apache.spark.sql.SparkSession
 
@@ -34,6 +35,17 @@ import org.apache.spark.sql.SparkSession
   * and re-schedules 32 tiny files) than it gained on heavy scans, while
   * 8-way captures ~all of the scan win at noise-level loss elsewhere —
   * see the full-surface A/B in BASELINE.md (round 10).
+  *
+  * The tables are rewritten concurrently, as OPTIMIZE and
+  * rewrite_data_files do, on one driver thread per table up to the
+  * session's parallelism, the largest source first: each build is
+  * still one single-task job, so a set-up that rewrites several tables
+  * waits for the largest rewrite rather than for the sum of them. The
+  * concurrency is only ACROSS tables. A table's rewrite is the same job
+  * it would be alone (one task reads its source in order and cuts a
+  * new file every maxRecordsPerFile rows into a scratch dir of its
+  * own), so each entry holds the same files with the same rows in the
+  * same order whatever else runs beside it.
   *
   * Cache discipline is the VersionedStore one ([[Artifacts.publish]]):
   * each rewrite carries a fingerprint of its SOURCE (length + mtime +
@@ -124,7 +136,9 @@ object ScanLayout {
 
   /** Returns the directory Bench should read tables from: `sfDir`
     * itself when disabled/absent, else a cache dir where every table is
-    * either a split rewrite or a symlink to the source. */
+    * either a split rewrite or a symlink to the source. If a table's
+    * build fails, the call throws its error once every other table's
+    * build has ended. */
   def ensure(spark: SparkSession, sfDir: String): String = {
     if (!enabled(spark)) return sfDir
     val src = Paths.get(sfDir)
@@ -142,12 +156,50 @@ object ScanLayout {
     val key = rawAbs.replaceAll("[^A-Za-z0-9._-]", "_") + s"-$pathHash-s$target"
     val cacheDir = base.resolve(key)
     Files.createDirectories(cacheDir)
-    for (t <- tables) {
-      val tableSrc = src.resolve(s"$t.parquet")
-      if (Files.exists(tableSrc)) ensureTable(spark, tableSrc, cacheDir, t, target)
-    }
+    val present = tables.map(t => t -> src.resolve(s"$t.parquet"))
+      .filter { case (_, p) => Files.exists(p) }
+      .sortBy { case (_, p) => -partFilesOf(p).map(Files.size).sum }
+    runAll(present.map { case (t, p) => () => ensureTable(spark, p, cacheDir, t, target) },
+      spark.sparkContext.defaultParallelism)
     cacheDir.toString
   }
+
+  /** Runs `builds` in the order given on min(#builds, `parallelism`)
+    * driver threads and returns once every one has ended. On failure it
+    * throws the first error to occur, with the later ones suppressed,
+    * after the rest have ended too: a build still running would
+    * otherwise outlive the call that is reporting the run as failed. */
+  private def runAll(builds: Seq[() => Unit], parallelism: Int): Unit =
+    if (builds.nonEmpty) {
+      // daemon threads: a build stuck in a job must not keep the JVM alive
+      val pool = Executors.newFixedThreadPool(math.min(builds.size, math.max(1, parallelism)),
+        (r: Runnable) => { val t = new Thread(r, "scan-layout"); t.setDaemon(true); t })
+      try {
+        val done = new ExecutorCompletionService[Unit](pool)
+        builds.foreach(b => done.submit(() => b()))
+        val errors = builds.flatMap { _ =>
+          try { done.take().get(); None }
+          catch { case e: ExecutionException => Some(e.getCause) }
+        }
+        errors.headOption.foreach { first =>
+          errors.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      } finally pool.shutdown()
+    }
+
+  /** The parquet files of a table source: the file itself, or a
+    * directory's `part-` files in name order. */
+  private def partFilesOf(tableSrc: Path): Seq[Path] =
+    if (!Files.isDirectory(tableSrc)) Seq(tableSrc)
+    else {
+      import scala.jdk.CollectionConverters._
+      val ls = Files.list(tableSrc) // must close: holds a directory handle
+      try ls.iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("part-"))
+        .toSeq.sortBy(_.getFileName.toString)
+      finally ls.close()
+    }
 
   private def ensureTable(spark: SparkSession, tableSrc: Path, cacheDir: Path,
       name: String, target: Int): Unit = {
@@ -161,16 +213,7 @@ object ScanLayout {
     // through only when its PART-FILE COUNT already covers the wanted
     // parallelism; otherwise its few files get footer-checked and
     // rewritten exactly like a single under-parallel file.
-    val partFiles: Seq[Path] =
-      if (!Files.isDirectory(tableSrc)) Seq(tableSrc)
-      else {
-        import scala.jdk.CollectionConverters._
-        val ls = Files.list(tableSrc) // must close: holds a directory handle
-        try ls.iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("part-"))
-          .toSeq.sortBy(_.getFileName.toString)
-        finally ls.close()
-      }
+    val partFiles = partFilesOf(tableSrc)
     if (partFiles.isEmpty) { link(tableSrc, dst); return }
     val bytes = partFiles.map(Files.size).sum
     val stats = partFiles.map(footerStats(spark, _))

@@ -20,8 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `conv(substring(md5(s), 1, 15), 16, 10)` (NearDupKernelsSpec keeps
   * that chain as its reference), without the chain's per-call digest
   * lookup, 32-char hex string, substring, base-10 string and parse.
-  * [[digest60]] is the engine's one md5-60 routine: [[Hash60]] and the
-  * k-gram kernel ([[GramHash]]) both call it. DuckDB side: [[sql]].
+  * [[digest60]] is the engine's one md5-60 routine: [[Hash60]], the
+  * k-gram kernel ([[GramHash]]) and the min-hash kernel ([[MinHash16]])
+  * call it. DuckDB side: [[sql]].
   */
 object PortableHash {
 
@@ -49,6 +50,20 @@ object PortableHash {
   def digest60(bytes: Array[Byte], off: Int, len: Int): Long = {
     val m = local.get()
     m.md.update(bytes, off, len)
+    top60(m)
+  }
+
+  /** [[digest60]] of `prefix` followed by `len` bytes of `bytes` from
+    * `off`: `hash60(concat(prefix, s))` without building the
+    * concatenation ([[MinHash16]]). */
+  def digest60(prefix: Array[Byte], bytes: Array[Byte], off: Int, len: Int): Long = {
+    val m = local.get()
+    m.md.update(prefix)
+    m.md.update(bytes, off, len)
+    top60(m)
+  }
+
+  private def top60(m: Md5): Long = {
     m.md.digest(m.out, 0, 16) // writes and resets
     val d = m.out
     var v = 0L

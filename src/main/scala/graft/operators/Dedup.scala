@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Staged, Tables}
-import graft.functions.{ShingleSet, TextAnalysis}
+import graft.functions.{MinHash16, ShingleSet, TextAnalysis}
 import graft.functions.PortableHash.hash60
 
 /** Deduplication suite over the documents table — the operators a
@@ -28,8 +28,15 @@ object Dedup {
 
   /** (doc_id, shingle) — distinct 3-gram word shingles per document:
     * the [[graft.functions.ShingleSet]] kernel exploded, a narrow
-    * projection at scan parallelism (see [[shinglesViaWindow]] for why
-    * not a window). A document of fewer than 3 tokens has no rows. */
+    * projection at scan parallelism. A document of fewer than 3 tokens
+    * has no rows. Not a window (posexplode → lead ×2 → distinct, kept in
+    * LlmOpsSpec as the equivalence reference): a doc's distinct 3-gram
+    * set is a pure function of its own text, so building it through a
+    * per-token window sort plus a corpus-wide distinct paid two full
+    * shuffles of the token stream for state that never crossed rows.
+    * The kernel's null below 3 tokens mirrors the lead-null drop, and
+    * the per-doc distinct equals the global distinct because doc_id is
+    * part of the pair. */
   def shingles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(ShingleSet(col("text"))).as("shingle"))
 
@@ -42,28 +49,6 @@ object Dedup {
     // run twice per row, once in the filter and once in the projection
     docs.select(col("doc_id"), explode(array(ShingleSet(col("text")))).as("shset"))
       .filter(col("shset").isNotNull)
-
-  /** The window rendition of [[shingles]] (posexplode → lead ×2 →
-    * distinct) — spec-only equivalence gate. The shipped version above
-    * is ROW-LOCAL: a doc's distinct 3-gram set is a pure function of its
-    * own text, so building it through a per-token window sort plus a
-    * corpus-wide distinct paid two full shuffles of the token stream for
-    * state that never crossed rows. The row-local kernel keeps the index
-    * build a narrow projection at scan parallelism; its null below 3
-    * tokens mirrors the lead-null drop, and the per-doc distinct equals
-    * the global distinct because doc_id is part of the pair. */
-  private[graft] def shinglesViaWindow(docs: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-    docs
-      .select(col("doc_id"),
-        posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "w")))
-      .withColumn("w2", lead("w", 1).over(w))
-      .withColumn("w3", lead("w", 2).over(w))
-      .filter(col("w3").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("w"), col("w2"), col("w3")).as("shingle"))
-      .distinct()
-  }
 
   private val NumHashes = 16
   private val Bands = 4
@@ -82,10 +67,15 @@ object Dedup {
       (0 until NumHashes).map(i => min(minhashKey(i, col("shingle"))).as(s"h$i")): _*)
 
   /** [[minhashSignature]]'s h0..h15 computed within each row of a
-    * [[shingleSets]] frame: (doc_id, shset, h0..h15), no groupBy. */
+    * [[shingleSets]] frame: (doc_id, shset, h0..h15), no groupBy. The
+    * [[graft.functions.MinHash16]] kernel makes all 16 in one pass over
+    * the set, once per row: the optimizer does not inline a kernel call
+    * into the 16 field reads of the projection above it, since it is
+    * not cheap and is read more than once. */
   private[graft] def minhashOfSets(sets: DataFrame): DataFrame =
-    sets.select(col("doc_id") +: col("shset") +: (0 until NumHashes).map(i =>
-      array_min(transform(col("shset"), s => minhashKey(i, s))).as(s"h$i")): _*)
+    sets.select(col("doc_id"), col("shset"), MinHash16(col("shset")).as("mh"))
+      .select(col("doc_id") +: col("shset") +:
+        (0 until NumHashes).map(i => col(s"mh.h$i").as(s"h$i")): _*)
 
   /** (doc_id, band, sig) for an arbitrary (bands × rows) tiling of the
     * 16 min-hashes: band signature = md5 of its `rows` concatenated
@@ -1034,34 +1024,16 @@ object Dedup {
   def stagedWinnowFps(s: SparkSession, dir: String): DataFrame =
     Staged(s, s"$dir|winnowfps")(winnowFpsRowLocal(docsParallel(s, dir)))
 
-  /** ROW-LOCAL winnowing (codegen kernel): the window rendition below
-    * shuffled up to 8,192 rows per doc through a (doc_id, pos) window
-    * sort for a per-doc pure function. One narrow projection now. */
+  /** ROW-LOCAL winnowing (codegen kernel): the window rendition (kept
+    * in LlmOpsSpec as the equivalence reference) shuffled up to 8,192
+    * rows per doc through a (doc_id, pos) window sort for a per-doc pure
+    * function. One narrow projection now. */
   private[graft] def winnowFpsRowLocal(docs: DataFrame): DataFrame = {
     val K = 8; val W = 16
     docs
       .filter(length(col("text")) >= K + W - 1)
       .select(col("doc_id"),
         explode(graft.functions.WinnowFingerprints(col("text"), K, W)).as("fp"))
-  }
-
-  /** The exploded/window rendition of the winnow fingerprint derivation
-    * — spec-only: LlmOpsSpec gates the codegen kernel against it. */
-  private[graft] def winnowFpsViaWindow(docs: DataFrame): DataFrame = {
-    val K = 8; val W = 16
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow, W - 1)
-    docs
-      .filter(length(col("text")) >= K + W - 1)
-      .select(col("doc_id"), col("text"),
-        (length(col("text")) - (K - 1)).as("ngrams"),
-        explode(sequence(lit(1), length(col("text")) - (K - 1))).as("pos"))
-      .select(col("doc_id"), col("pos"), col("ngrams"),
-        hash60(expr(s"substring(text, pos, $K)")).as("h"))
-      .withColumn("fp", min(col("h")).over(w))
-      .filter(col("pos") <= col("ngrams") - (W - 1))
-      .select(col("doc_id"), col("fp")).distinct()
   }
 
   /** Substring-window fingerprints staged: dedup_substring_spans

@@ -566,6 +566,41 @@ class LlmOpsSpec extends SparkSpec {
     assert(lsh.forall { case (k, v) => exact(k) === v })
   }
 
+  /** The window rendition of [[Dedup.shingles]] (posexplode → lead ×2 →
+    * distinct), the reference the row-local kernel must reproduce. */
+  private def shinglesViaWindow(docs: org.apache.spark.sql.DataFrame) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy("pos")
+    docs
+      .select(col("doc_id"),
+        posexplode(graft.functions.TextAnalysis.tokens(col("text"))).as(Seq("pos", "w")))
+      .withColumn("w2", lead("w", 1).over(w))
+      .withColumn("w3", lead("w", 2).over(w))
+      .filter(col("w3").isNotNull)
+      .select(col("doc_id"), concat_ws(" ", col("w"), col("w2"), col("w3")).as("shingle"))
+      .distinct()
+  }
+
+  /** The exploded/window rendition of the winnow fingerprint derivation
+    * (K=8 char grams, W=16 window minima), the reference the codegen
+    * kernel ([[Dedup.winnowFpsRowLocal]]) must reproduce. */
+  private def winnowFpsViaWindow(docs: org.apache.spark.sql.DataFrame) = {
+    val K = 8; val W = 16
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy("pos")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow, W - 1)
+    docs
+      .filter(length(col("text")) >= K + W - 1)
+      .select(col("doc_id"), col("text"),
+        (length(col("text")) - (K - 1)).as("ngrams"),
+        explode(sequence(lit(1), length(col("text")) - (K - 1))).as("pos"))
+      .select(col("doc_id"), col("pos"), col("ngrams"),
+        graft.functions.PortableHash.hash60(expr(s"substring(text, pos, $K)")).as("h"))
+      .withColumn("fp", min(col("h")).over(w))
+      .filter(col("pos") <= col("ngrams") - (W - 1))
+      .select(col("doc_id"), col("fp")).distinct()
+  }
+
   test("row-local shingles equal the window formulation on corpus + edge docs") {
     import spark.implicits._
     val adversarial = Seq(
@@ -578,7 +613,7 @@ class LlmOpsSpec extends SparkSpec {
       .select("doc_id", "text").unionByName(adversarial)
     val narrow = graft.operators.Dedup.shingles(docs)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val window = graft.operators.Dedup.shinglesViaWindow(docs)
+    val window = shinglesViaWindow(docs)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(narrow === window)
     assert(narrow.exists(_._1 == 9003L)) // exactly-3-token doc keeps its shingle
@@ -607,7 +642,7 @@ class LlmOpsSpec extends SparkSpec {
       .select("doc_id", "text").unionByName(adversarial)
     val kernel = graft.operators.Dedup.winnowFpsRowLocal(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val window = graft.operators.Dedup.winnowFpsViaWindow(docs)
+    val window = winnowFpsViaWindow(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kernel === window)
     assert(kernel.exists(_._1 == 9001L))

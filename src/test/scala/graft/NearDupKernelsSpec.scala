@@ -4,16 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.functions.{PortableHash, ShingleSet}
+import graft.functions.{MinHash16, PortableHash, ShingleSet}
 import graft.operators.Dedup
 
 /** The row-local near-dup kernels against the plain Spark expressions
   * they replace, which stay here as the references: `hash60` against
-  * `conv(substring(md5(s), 1, 15), 16, 10)`, and the shingle kernel
+  * `conv(substring(md5(s), 1, 15), 16, 10)`, the shingle kernel
   * against the split / transform / array_distinct rendition, as ordered
-  * arrays per document. Both on the generated-code path, with codegen
-  * failures raised rather than interpreted, and on the interpreted path
-  * a `transform` lambda takes.
+  * arrays per document, and the min-hash kernel against 16
+  * `array_min(transform(..))` lambdas. Each on the generated-code path,
+  * with codegen failures raised rather than interpreted, and on the
+  * interpreted path a `transform` lambda takes.
   */
 class NearDupKernelsSpec extends SparkSpec {
   import spark.implicits._
@@ -119,6 +120,57 @@ class NearDupKernelsSpec extends SparkSpec {
       transform(array(col("text")), t => ShingleSet(t))(0).as("shset"))
       .filter(col("shset").isNotNull)
     assert(sets(lam) === want)
+  }
+
+  /** The 16-lambda min-hash rendition the kernel replaced: h_i is the
+    * least `hash60(concat('i|', s))` over the set. */
+  private def lambdaMinhash(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id") +: (0 until 16).map(i =>
+      array_min(transform(col("shset"), s => PortableHash.hash60(concat(lit(s"$i|"), s))))
+        .as(s"h$i")): _*)
+
+  private def signatures(df: DataFrame): Map[Long, Seq[Option[Long]]] =
+    df.select(col("doc_id") +: (0 until 16).map(i => col(s"h$i")): _*).collect()
+      .map(r => r.getLong(0) -> (1 to 16).map(i => Option(r.get(i)).map(_.asInstanceOf[Long]))).toMap
+
+  test("the min-hash kernel equals the 16-lambda rendition, generated and interpreted, once per row") {
+    val edges = scanned(Seq(
+      (9001L, Seq.empty[String]), (9002L, null), (9003L, Seq[String](null)),
+      (9004L, Seq(null, "a b c")), (9005L, Seq("héllo wörld naïve", "日本語 の テキスト", "😀 𝄞 𠜎", "")),
+      (9006L, (1 to 5000).map(i => s"w$i x${i % 7} y"))
+    ).toDF("doc_id", "shset"))
+    val sets = Dedup.shingleSets(Tables.documents(spark, sf0001)).unionByName(edges)
+    val want = signatures(lambdaMinhash(sets))
+    val kernel = Dedup.minhashOfSets(sets)
+    val got = strictCodegen {
+      assert(codegenLines(kernel, "minhash16").nonEmpty,
+        s"the min-hash kernel should run in generated code:\n${kernel.queryExecution.executedPlan}")
+      signatures(kernel)
+    }
+    assert(got.size > 400)
+    assert(got === want)
+    for (id <- Seq(9001L, 9002L, 9003L)) assert(got(id).forall(_.isEmpty), s"doc $id")
+    assert(got(9004L).forall(_.nonEmpty) && got(9006L).forall(_.nonEmpty))
+    // interpreted: inside a lambda
+    val lam = sets.select(col("doc_id"),
+      transform(array(col("shset")), s => MinHash16(s))(0).as("mh"))
+      .select(col("doc_id") +: (0 until 16).map(i => col(s"mh.h$i").as(s"h$i")): _*)
+    assert(signatures(lam) === want)
+    // one kernel call per row: the 16 field reads share it, here and
+    // under the band projection the ingest path puts on top; `sets` is a
+    // union of two branches and a row runs through one of them
+    for (df <- Seq(kernel, kernel.select(col("doc_id"), explode(Dedup.bandSigs()).as("bs"))))
+      assert(kernelCalls(df) == 2,
+        s"kernel called more than once per row:\n${df.queryExecution.executedPlan}")
+  }
+
+  /** MinHash16 calls in the physical plan, through the adaptive plan's
+    * query stages: the final plan once run, else the initial one. */
+  private def kernelCalls(df: DataFrame): Int = {
+    object stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    stages.collect(df.queryExecution.executedPlan) { case node =>
+      node.expressions.map(_.collect { case m: MinHash16 => m }.size).sum
+    }.sum
   }
 
   /** Brute-force (a, b, hamming) over all pairs a < b that `keep`. */

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -11,7 +13,9 @@ import graft.core.ScanLayout
   * split, value-identical cached copy. These tests pin the contract:
   * disabled = passthrough, rewrite = many files + identical rows + original
   * order, second call = cache hit (no rebuild), source change = rebuild,
-  * small/multi-file tables = symlink passthrough.
+  * small/multi-file tables = symlink passthrough, concurrent table builds
+  * = the entries each table's build alone makes, a failing table = its
+  * error after the other builds end, two concurrent callers = one entry.
   */
 class ScanLayoutSpec extends SparkSpec {
 
@@ -173,5 +177,116 @@ class ScanLayoutSpec extends SparkSpec {
       assert(spark.read.parquet(o.toString).count() ==
         spark.read.parquet(s"$sf001/lineitem.parquet").count())
     }
+  }
+
+  /** A source dir of sf0.01 tables where three tables are rewritten at
+    * local[4]: lineitem as shipped, and orders and events each written
+    * eight times over into a one-part-file dir, which puts them above
+    * the byte threshold of a split. The other tables pass through. */
+  private def multiTableFixture(): Path = {
+    val src = Files.createTempDirectory("graft-multitable")
+    Files.copy(Paths.get(sf001, "lineitem.parquet"), src.resolve("lineitem.parquet"))
+    for (t <- Seq("orders", "events")) {
+      val df = spark.read.parquet(s"$sf001/$t.parquet")
+      Seq.fill(8)(df).reduce(_ union _).coalesce(1)
+        .write.parquet(src.resolve(s"$t.parquet").toString)
+    }
+    for (t <- Seq("region", "nation", "customer", "part"))
+      Files.copy(Paths.get(sf001, s"$t.parquet"), src.resolve(s"$t.parquet"))
+    src
+  }
+
+  private def tableEntries(dir: Path): Seq[Path] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      .sortBy(_.getFileName.toString)
+    finally ls.close()
+  }
+
+  /** A rewritten entry's part files in name order (= row order), each as
+    * the sequence of its rows' full-row hashes. */
+  private def perFileRows(entry: Path): Seq[Seq[Long]] =
+    entry.toFile.listFiles().map(_.getName).filter(_.startsWith("part-")).sorted.toSeq
+      .map { f =>
+        val df = spark.read.parquet(entry.resolve(f).toString)
+        df.select(xxhash64(df.columns.map(col): _*)).collect().map(_.getLong(0)).toSeq
+      }
+
+  private def leftovers(dir: Path): Seq[String] =
+    dir.toFile.list().filter(n => n.startsWith(".build-") || n.startsWith(".deleting-")).toSeq
+
+  test("concurrent table builds make the entries each table's build alone makes") {
+    val src = multiTableFixture()
+    val dir = withLayout(freshBase())(Paths.get(ScanLayout.ensure(spark, src.toString)))
+    val entries = tableEntries(dir)
+    assert(entries.map(_.getFileName.toString) ===
+      tableEntries(src).map(_.getFileName.toString))
+    val rewritten = entries.filterNot(Files.isSymbolicLink).map(_.getFileName.toString)
+    assert(rewritten === Seq("events.parquet", "lineitem.parquet", "orders.parquet"))
+    for (e <- entries) {
+      val name = e.getFileName.toString
+      // the same table built alone: a source dir holding only a link to it
+      val alone = Files.createTempDirectory("graft-onetable")
+      Files.createSymbolicLink(alone.resolve(name), src.resolve(name))
+      val aloneEntry = withLayout(freshBase())(
+        Paths.get(ScanLayout.ensure(spark, alone.toString), name))
+      assert(Files.isSymbolicLink(e) === Files.isSymbolicLink(aloneEntry), name)
+      if (Files.isSymbolicLink(e)) assert(e.toRealPath() === aloneEntry.toRealPath(), name)
+      else {
+        val (got, want) = (perFileRows(e), perFileRows(aloneEntry))
+        assert(got.size > 1 && got.size === want.size, s"$name: ${got.size} vs ${want.size} files")
+        assert(got === want, s"$name: rows per file differ from its build alone")
+      }
+    }
+    assert(leftovers(dir).isEmpty)
+  }
+
+  test("a failing table's error is thrown after the other builds have ended") {
+    val src = multiTableFixture()
+    // an unreadable table: its footer cannot be read
+    Files.delete(src.resolve("part.parquet"))
+    Files.writeString(src.resolve("part.parquet"), "not a parquet file, " * 8)
+    val base = freshBase()
+    val err = withLayout(base)(intercept[RuntimeException](ScanLayout.ensure(spark, src.toString)))
+    assert(err.getMessage.contains("part.parquet"), err.getMessage)
+    val dir = Paths.get(base).resolve(Paths.get(base).toFile.list().head)
+    // every other table's build had ended: its entry is there, whole
+    for (t <- Seq("events", "lineitem", "orders")) {
+      val e = dir.resolve(s"$t.parquet")
+      assert(Files.isDirectory(e) && Files.exists(e.resolve("_SUCCESS")), s"$t not built")
+    }
+    for (t <- Seq("region", "nation", "customer"))
+      assert(Files.isSymbolicLink(dir.resolve(s"$t.parquet")), s"$t not linked")
+    assert(!Files.exists(dir.resolve("part.parquet")))
+    assert(leftovers(dir).isEmpty, s"left behind: ${leftovers(dir)}")
+    assert(org.apache.spark.sql.graft.PlanBridge.runningTasks(spark.sparkContext) == 0)
+    // and the session still runs a query
+    assert(spark.read.parquet(dir.resolve("orders.parquet").toString).count() ===
+      8 * spark.read.parquet(s"$sf001/orders.parquet").count())
+  }
+
+  test("two concurrent ensure calls on one source return one complete entry") {
+    val base = freshBase()
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val dirs = withLayout(base) {
+      val calls = Seq.fill(2)(new java.util.concurrent.FutureTask[String](() => {
+        start.await()
+        ScanLayout.ensure(spark, sf001)
+      }))
+      calls.foreach(c => new Thread(c).start())
+      calls.map(_.get())
+    }
+    assert(dirs.distinct.size == 1, dirs)
+    val dir = Paths.get(dirs.head)
+    assert(tableEntries(dir).map(_.getFileName.toString) ===
+      tableEntries(Paths.get(sf001)).map(_.getFileName.toString))
+    val li = dir.resolve("lineitem.parquet")
+    assert(Files.isDirectory(li) && Files.exists(li.resolve("_SUCCESS")))
+    assert(li.toFile.list().count(_.endsWith(".parquet")) ==
+      policyFiles("lineitem", s"$sf001/lineitem.parquet"))
+    assert(spark.read.parquet(li.toString).count() ==
+      spark.read.parquet(s"$sf001/lineitem.parquet").count())
+    for (e <- tableEntries(dir) if e != li) assert(Files.isSymbolicLink(e), e)
+    assert(leftovers(dir).isEmpty, s"left behind: ${leftovers(dir)}")
   }
 }
